@@ -8,8 +8,8 @@ import graft.ml.MlPipelines
 /** PHASE-SPLIT instrumentation of the `qm1_rf_confusion` catalog query
   * (r12 VERDICT "what's wrong" #1: 13.0 → 17.6 s committed-to-committed
   * with no code change on its path — now the slowest oracle query;
-  * "measure, don't hypothesize"). Same protocol as [[RfPcaProbe]] /
-  * [[SvmPcaProbe]]: one process, `reps` full repetitions of exactly
+  * "measure, don't hypothesize"). One process, `reps` full
+  * repetitions of exactly
   * [[graft.queries.MlQueryCatalog.qm1RfConfusion]]'s dataflow —
   * lineitem scan + feature projection + cache fill, the randomSplit
   * train materialization, the RandomForest fit (mllib-parity config),

@@ -3,9 +3,11 @@ package graft.ml
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.classification.{LinearSVC, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
-import org.apache.spark.ml.feature.{PCA, PCAModel, StandardScaler, VectorAssembler}
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.feature.{FittedModels, PCA, PCAModel, StandardScaler, StandardScalerModel, VectorAssembler}
+import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, Vector, Vectors}
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.stat.Correlation
+import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -181,16 +183,23 @@ object MlPipelines {
   /** M10/M11 — evaluation suite. NOTE the reference prints AUC labelled
     * "Accuracy" (`G_2_rf_nordd.py:72-74`, SURVEY.md §2.12.4); we name
     * metrics truthfully. */
-  def evaluate(predictions: DataFrame, labelCol: String = "buy_or_sell")
-      : Map[String, Double] = {
-    val auc = new BinaryClassificationEvaluator().setLabelCol(labelCol)
-      .setMetricName("areaUnderROC").evaluate(predictions)
-    val acc = new MulticlassClassificationEvaluator().setLabelCol(labelCol)
-      .setMetricName("accuracy").evaluate(predictions)
-    val f1 = new MulticlassClassificationEvaluator().setLabelCol(labelCol)
-      .setMetricName("f1").evaluate(predictions)
-    Map("areaUnderROC" -> auc, "accuracy" -> acc, "f1" -> f1)
-  }
+  def evaluate(predictions: DataFrame, labelCol: String = "buy_or_sell",
+      metrics: Seq[String] = EvalMetrics): Map[String, Double] =
+    metrics.map { m =>
+      val evaluator = m match {
+        case "areaUnderROC" => new BinaryClassificationEvaluator()
+          .setLabelCol(labelCol).setMetricName(m)
+        case "accuracy" | "f1" => new MulticlassClassificationEvaluator()
+          .setLabelCol(labelCol).setMetricName(m)
+        case _ => throw new IllegalArgumentException(
+          s"evaluate: unknown metric '$m' (one of ${EvalMetrics.mkString(", ")})")
+      }
+      m -> evaluator.evaluate(predictions)
+    }.toMap
+
+  /** Every metric [[evaluate]] computes by default; each is one pass
+    * over the predictions. */
+  val EvalMetrics: Seq[String] = Seq("areaUnderROC", "accuracy", "f1")
 
   /** M12 — the reference's RDD-era `mllib.evaluation` metrics
     * (`MulticlassMetrics` / `BinaryClassificationMetrics`,
@@ -270,17 +279,139 @@ object MlPipelines {
 
   /** M3/M15 — scale→PCA→explainedVariance, the `G_2_rf_pca.py:77-142`
     * shape: returns the PCA model whose `explainedVariance` the reference
-    * prints. */
+    * prints. Both fits come from one [[scalerPca]] pass. */
   def scaledPca(data: DataFrame, cols: Seq[String], k: Int,
       prefix: String,
       fitPartitions: Option[Int] = None): (DataFrame, PCAModel) = {
     val base = fitPartitions.map(data.repartition(_)).getOrElse(data)
     guardFitParallelism(base, "scaledPca")
     val va = assembler(cols, s"${prefix}_features").transform(base)
-    val sc = scaler(s"${prefix}_features", s"scaled_${prefix}_features")
-      .fit(va).transform(va)
-    val model = pca(s"scaled_${prefix}_features", s"pca_${prefix}_features", k)
-      .fit(sc)
-    (model.transform(sc), model)
+    val (sc, pcas) = scalerPca(va, s"${prefix}_features", Seq(k))
+    (pcas.head.transform(sc.transform(va)), pcas.head)
+  }
+
+  /** M2 + M3 in ONE pass: the [[scaler]] fit (std only, as the
+    * reference configures it) and one [[pca]] fit per entry of `ks`,
+    * over the scaled `inputCol` vectors, from a single
+    * `treeAggregate` of the count, mean and co-moment matrix. Returns
+    * Spark's own model types, equal to the separate fits up to summation
+    * order. The scaler reads `inputCol` and writes `scaled_<inputCol>`;
+    * each PCA model reads `scaled_<inputCol>` and writes
+    * `pca_<inputCol>`. Fewer than 2 rows fail, as Spark's PCA does. */
+  def scalerPca(df: DataFrame, inputCol: String, ks: Seq[Int])
+      : (StandardScalerModel, Seq[PCAModel]) = {
+    guardFitParallelism(df, "scalerPca")
+    val m = df.select(col(inputCol)).rdd.map(_.getAs[Vector](0))
+      .treeAggregate(new Moments)((acc, v) => acc.add(v), _ merge _)
+    require(m.n >= 2, s"scalerPca: $inputCol has ${m.n} row(s); the scaler " +
+      "and PCA fits need at least 2")
+    val d = m.dim
+    ks.foreach(k => require(k >= 1 && k <= d,
+      s"scalerPca: k = $k is outside [1, $d] for $inputCol"))
+    val n1 = (m.n - 1).toDouble
+    val std = Array.tabulate(d)(i => math.sqrt(m.m2(m.at(i, i)) / n1))
+    val scaled = s"scaled_$inputCol"
+    val scalerModel = FittedModels.scaler(Identifiable.randomUID("stdScal"),
+      Vectors.dense(std).compressed, Vectors.dense(m.mean).compressed)
+      .setInputCol(inputCol).setOutputCol(scaled)
+    if (ks.isEmpty) return (scalerModel, Nil)
+    // covariance of the scaled vectors; the scaler writes 0 for a
+    // zero-variance column, so its row and column are 0
+    val inv = std.map(s => if (s == 0.0) 0.0 else 1.0 / s)
+    val cov = breeze.linalg.DenseMatrix.zeros[Double](d, d)
+    for (i <- 0 until d; j <- i until d) {
+      val c = m.m2(m.at(i, j)) / n1 * inv(i) * inv(j)
+      cov(i, j) = c
+      cov(j, i) = c
+    }
+    // the decomposition Spark's RowMatrix runs for PCA: every k is a
+    // truncation of the same one
+    val breeze.linalg.svd.SVD(u, s, _) = breeze.linalg.svd(cov)
+    val total = s.data.sum
+    val explained = s.data.map(_ / total)
+    val pcas = ks.map { k =>
+      val p = FittedModels.pca(Identifiable.randomUID("pca"),
+        new DenseMatrix(d, k, java.util.Arrays.copyOfRange(u.data, 0, d * k)),
+        new DenseVector(explained.take(k)))
+      p.copy(ParamMap(p.k -> k)).setInputCol(scaled)
+        .setOutputCol(s"pca_$inputCol")
+    }
+    (scalerModel, pcas)
+  }
+
+  /** Count, mean and co-moment matrix M2_ij = Σ (x_i − mean_i)(x_j −
+    * mean_j) of a vector column, M2 packed as its upper triangle:
+    * Welford updates within a partition, the Chan et al. pairwise merge
+    * across partitions. The dimension comes from the first row. */
+  private final class Moments extends Serializable {
+    var n = 0L
+    var mean: Array[Double] = _
+    var m2: Array[Double] = _
+    @transient private var delta: Array[Double] = _
+
+    def dim: Int = mean.length
+
+    /** Index of (i, j), i ≤ j, in the packed upper triangle. */
+    def at(i: Int, j: Int): Int = i * dim - i * (i - 1) / 2 + (j - i)
+
+    def add(v: Vector): Moments = {
+      if (mean == null) {
+        mean = new Array(v.size)
+        m2 = new Array(v.size * (v.size + 1) / 2)
+      }
+      val d = dim
+      require(v.size == d, s"vector rows differ in size: ${v.size} vs $d")
+      if (delta == null) delta = new Array(d)
+      val x = v match {
+        case dv: DenseVector => dv.values
+        case _ => v.toArray
+      }
+      n += 1
+      var i = 0
+      while (i < d) {
+        delta(i) = x(i) - mean(i)
+        mean(i) += delta(i) / n
+        i += 1
+      }
+      val f = (n - 1).toDouble / n
+      var p = 0
+      i = 0
+      while (i < d) {
+        val di = delta(i) * f
+        var j = i
+        while (j < d) {
+          m2(p) += di * delta(j)
+          p += 1
+          j += 1
+        }
+        i += 1
+      }
+      this
+    }
+
+    def merge(o: Moments): Moments =
+      if (o.n == 0) this
+      else if (n == 0) o
+      else {
+        val d = dim
+        require(o.dim == d, s"vector rows differ in size: ${o.dim} vs $d")
+        val total = n + o.n
+        val w = n.toDouble * o.n / total
+        val dm = Array.tabulate(d)(i => o.mean(i) - mean(i))
+        var p = 0
+        var i = 0
+        while (i < d) {
+          var j = i
+          while (j < d) {
+            m2(p) += o.m2(p) + dm(i) * dm(j) * w
+            p += 1
+            j += 1
+          }
+          mean(i) += dm(i) * o.n / total
+          i += 1
+        }
+        n = total
+        this
+      }
   }
 }

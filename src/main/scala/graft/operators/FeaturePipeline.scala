@@ -100,7 +100,7 @@ object FeaturePipeline {
         GlobalWindow.leadGlobal(withDay, Seq("date"), "high", "_off_high",
           bucketKey = unix_micros(col("date").cast("timestamp")))
           .withColumn("buy_or_sell",
-            when(col("_off_high") > col("high"), lit(1)).otherwise(lit(0)))
+            Labeler.binaryLabel(col("_off_high") > col("high")))
           .drop("_off_high")
       else
         GlobalWindow.lagLabelGlobal(withDay, Seq("date"),

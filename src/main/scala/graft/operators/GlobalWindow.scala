@@ -607,6 +607,6 @@ object GlobalWindow {
       bucketKey: Column, highCol: String = "high"): DataFrame =
     lagGlobal(df, orderCols, highCol, "_prev_high", bucketKey)
       .withColumn("buy_or_sell",
-        when(col("_prev_high") > col(highCol), lit(1)).otherwise(lit(0)))
+        Labeler.binaryLabel(col("_prev_high") > col(highCol)))
       .drop("_prev_high")
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,6 +31,16 @@ import org.apache.spark.sql.functions._
   */
 object Labeler {
 
+  /** The `buy_or_sell` column: 1 where `up` holds, else 0 (a null `up`
+    * gives 0). It carries binary nominal-attribute metadata, so a
+    * classifier reads its class count (2) from the schema instead of
+    * running a max(label) job. Every site that creates the label uses
+    * it. */
+  def binaryLabel(up: Column): Column =
+    when(up, lit(1)).otherwise(lit(0)).as("buy_or_sell",
+      NominalAttribute.defaultAttr.withName("buy_or_sell")
+        .withNumValues(2).toMetadata())
+
   /** lag/lead of `high` ordered by `orderCols` within `partitionCols`. */
   private def offsetHigh(
       lead: Boolean,
@@ -59,8 +70,7 @@ object Labeler {
       partitionCols: Seq[String] = Nil,
       orderCols: Seq[String] = Seq("date")): DataFrame = {
     val off = offsetHigh(useLead, highCol, partitionCols, orderCols)
-    df.withColumn("buy_or_sell",
-      when(off > col(highCol), lit(1)).otherwise(lit(0)))
+    df.withColumn("buy_or_sell", binaryLabel(off > col(highCol)))
   }
 
   /** Literal reference shape: project (keys, high, offset-high), derive the
@@ -77,7 +87,7 @@ object Labeler {
       .select((keyCols :+ highCol).map(col): _*)
       .withColumn("next_high", off)
       .withColumn("buy_or_sell",
-        when(col("next_high") > col(highCol), lit(1)).otherwise(lit(0)))
+        binaryLabel(col("next_high") > col(highCol)))
       .select((keyCols :+ "buy_or_sell").map(col): _*)
     df.join(labeled, keyCols)
   }

@@ -102,6 +102,19 @@ object IncrementalView {
       lines.filter(_.startsWith("dv ")).map(_.substring(3)).toSet)
   }
 
+  /** `left.join(right, keys, how)` with null-safe key equality (`<=>`):
+    * a NULL group key is a group like any other, and the min/max rescan
+    * and the count(DISTINCT) join must match it. Output columns are
+    * the left's, then the right's non-key ones. */
+  private def joinKeys(left: DataFrame, right: DataFrame, keys: Seq[String],
+      how: String, broadcastRight: Boolean = false): DataFrame = {
+    val renamed = right.select(right.columns.toSeq.map(c =>
+      if (keys.contains(c)) col(c).as(s"__r_$c") else col(c)): _*)
+    val on = keys.map(k => col(k) <=> col(s"__r_$k")).reduce(_ && _)
+    left.join(if (broadcastRight) broadcast(renamed) else renamed, on, how)
+      .drop(keys.map(k => s"__r_$k"): _*)
+  }
+
   private def aggOf(rows: DataFrame, groupCols: Seq[String],
       sumCols: Seq[String], minMaxCols: Seq[String]): DataFrame = {
     val aggs = (count(lit(1)).as("n") +:
@@ -151,7 +164,7 @@ object IncrementalView {
   private def joinNd(view: DataFrame, groupCols: Seq[String],
       auxes: Seq[(String, DataFrame)]): DataFrame =
     auxes.foldLeft(view) { case (acc, (c, aux)) =>
-      acc.join(aux.groupBy(groupCols.map(col): _*)
+      joinKeys(acc, aux.groupBy(groupCols.map(col): _*)
           .agg(count(lit(1)).as(ndName(c))), groupCols, "left")
         .withColumn(ndName(c), coalesce(col(ndName(c)), lit(0L)))
     }
@@ -291,8 +304,8 @@ object IncrementalView {
                 col(s"__omin_$c").isNull ||
                   col(s"__dmin_$c") <= col(s"__omin_$c") ||
                   col(s"__dmax_$c") >= col(s"__omax_$c")).reduce(_ || _)
-              val touchedDel = delta.filter(col("_has_del") === 1)
-                .join(oldMm, groupCols.toSeq, "left")
+              val touchedDel = joinKeys(delta.filter(col("_has_del") === 1),
+                  oldMm, groupCols, "left")
                 .filter(hit)
                 .select(groupCols.map(col): _*).localCheckpoint()
               if (touchedDel.isEmpty) merged
@@ -302,17 +315,18 @@ object IncrementalView {
                 // counts/sums stay signed-delta — already exact)
                 val mmAggs = minMaxCols.flatMap(c => Seq(
                   min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-                val rescan = DeletionVectors
-                  .readMorAt(spark, lakeDir, head)
-                  .join(broadcast(touchedDel), groupCols, "left_semi")
+                val rescan = joinKeys(DeletionVectors
+                    .readMorAt(spark, lakeDir, head),
+                    touchedDel, groupCols, "left_semi", broadcastRight = true)
                   .groupBy(groupCols.map(col): _*)
                   .agg(mmAggs.head, mmAggs.tail: _*)
                 val counts = (groupCols.map(col) :+ col("n")) ++
                   sumCols.map(c => col(s"sum_$c"))
-                merged.join(broadcast(touchedDel), groupCols, "left_anti")
-                  .unionByName(merged.select(counts: _*)
-                    .join(broadcast(touchedDel), groupCols, "left_semi")
-                    .join(rescan, groupCols))
+                joinKeys(merged, touchedDel, groupCols, "left_anti",
+                    broadcastRight = true)
+                  .unionByName(joinKeys(joinKeys(merged.select(counts: _*),
+                    touchedDel, groupCols, "left_semi",
+                    broadcastRight = true), rescan, groupCols, "inner"))
               }
             }
           ("incremental", joinNd(out, groupCols, mergedAuxes),
@@ -490,8 +504,9 @@ object IncrementalView {
                   col(s"__omin_$c").isNull ||
                     col(s"__dmin_$c") <= col(s"__omin_$c") ||
                     col(s"__dmax_$c") >= col(s"__omax_$c")).reduce(_ || _)
-                val touchedDrop = delta.filter(col("_has_drop") === 1)
-                  .join(oldMm, groupCols.toSeq, "left")
+                val touchedDrop = joinKeys(
+                    delta.filter(col("_has_drop") === 1), oldMm, groupCols,
+                    "left")
                   .filter(hit)
                   .select(groupCols.map(col): _*).localCheckpoint()
                 if (touchedDrop.isEmpty) merged
@@ -502,18 +517,19 @@ object IncrementalView {
                   val mmAggs = minMaxCols.flatMap(c => Seq(
                     min(col(c)).as(s"min_$c"),
                     max(col(c)).as(s"max_$c")))
-                  val rescan = DeletionVectors.readMor(spark, lakeDir)
-                    .join(broadcast(touchedDrop), groupCols, "left_semi")
+                  val rescan = joinKeys(DeletionVectors.readMor(spark,
+                      lakeDir), touchedDrop, groupCols, "left_semi",
+                      broadcastRight = true)
                     .groupBy(groupCols.map(col): _*)
                     .agg(mmAggs.head, mmAggs.tail: _*)
                   val counts = (groupCols.map(col) :+ col("n")) ++
                     sumCols.map(c => col(s"sum_$c"))
-                  merged.join(broadcast(touchedDrop), groupCols,
-                      "left_anti")
-                    .unionByName(merged.select(counts: _*)
-                      .join(broadcast(touchedDrop), groupCols,
-                        "left_semi")
-                      .join(rescan, groupCols))
+                  joinKeys(merged, touchedDrop, groupCols, "left_anti",
+                      broadcastRight = true)
+                    .unionByName(joinKeys(joinKeys(
+                      merged.select(counts: _*), touchedDrop, groupCols,
+                      "left_semi", broadcastRight = true),
+                      rescan, groupCols, "inner"))
                 }
               }
             ("incremental",

@@ -327,6 +327,64 @@ class IncrementalViewSpec extends SparkSpec {
       "a born-and-dead out-of-bounds row leaked into the fold")
   }
 
+  /** Committed lake of (k, g, v, d): 60 rows, g NULL where k % 3 = 0,
+    * d = k % 4. */
+  private def mkNullKeyLake(): String = {
+    val lake = Files.createTempDirectory("graft_ivnull_").toString + "/lake"
+    val f = fs(lake)
+    (0 until 60).map(k => (k, if (k % 3 == 0) null else s"g${k % 3}",
+        k.toLong, k % 4))
+      .toDF("k", "g", "v", "d").coalesce(1).write.parquet(lake)
+    CommitLog.commit(f, lake, 0, CommitLog.dataFileNames(f, lake).toSeq.sorted)
+    lake
+  }
+
+  test("a NULL-keyed group whose extremum row is deleted is rescanned " +
+    "like any other group, in refresh and refreshFeed alike") {
+    import graft.sources.ChangeDataFeed
+    val lake = mkNullKeyLake()
+    ChangeDataFeed.enable(spark, lake)
+    val dir = Files.createTempDirectory("graft_ivnv_").toString + "/view"
+    val fdir = Files.createTempDirectory("graft_ivnfv_").toString + "/view"
+    def refreshBoth() = Seq(
+      IncrementalView.refresh(spark, lake, dir, Seq("g"), Seq("v"),
+        minMaxCols = Seq("v")),
+      IncrementalView.refreshFeed(spark, lake, fdir, Seq("g"), Seq("v"),
+        minMaxCols = Seq("v")))
+    refreshBoth()
+    assert(viewMM(dir) == recomputeMM(lake))
+    // k = 0 and k = 57 hold the NULL group's minimum and maximum
+    DeletionVectors.deleteMor(spark, lake, "k = 0 OR k = 57")
+    assert(refreshBoth().forall(_.mode == "incremental"))
+    val want = recomputeMM(lake)
+    assert(want.find(_._1 == null).map(r => (r._4, r._5)) == Some((3L, 54L)))
+    assert(viewMM(dir) == want, "refresh kept a stale NULL-group extremum")
+    assert(viewMM(fdir) == want,
+      "refreshFeed kept a stale NULL-group extremum")
+  }
+
+  test("count(DISTINCT) of a NULL-keyed group is its real count, on the " +
+    "full build and after an incremental refresh") {
+    val lake = mkNullKeyLake()
+    val dir = Files.createTempDirectory("graft_ivnd0_").toString + "/view"
+    def refresh() = IncrementalView.refresh(spark, lake, dir, Seq("g"),
+      Seq("v"), distinctCols = Seq("d"))
+    def got() = IncrementalView.readView(spark, dir)
+      .select("g", "n", "nd_d")
+      .orderBy("g").as[(String, Long, Long)].collect().toSeq
+    def want() = DeletionVectors.readMor(spark, lake)
+      .groupBy("g").agg(count(lit(1)), countDistinct("d"))
+      .orderBy("g").as[(String, Long, Long)].collect().toSeq
+    assert(refresh().mode == "full")
+    assert(want().head == ((null, 20L, 4L)))
+    assert(got() == want(), "full build")
+    // k = 3 holds the NULL group's only d = 3 among k < 12
+    DeletionVectors.deleteMor(spark, lake, "k IN (3, 15, 27, 39, 51)")
+    assert(refresh().mode == "incremental")
+    assert(want().head == ((null, 15L, 3L)))
+    assert(got() == want(), "incremental refresh")
+  }
+
   test("UpsertSink ViewSpec(minMaxCols) maintains min/max through the " +
     "stream: replaced extrema rescan their groups per batch") {
     val lake = mkLake()
