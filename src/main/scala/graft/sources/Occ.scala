@@ -104,6 +104,22 @@ object Occ {
       Seq[(String, String, String)]) =
     (Constraints.list(fs, lakeDir), GeneratedColumns.list(fs, lakeDir))
 
+  /** Runs an OCC verb's unlocked preparation over the snapshot
+    * `filesSnap`. A copy-on-write winner vacuums the files it replaced
+    * inside its commit section, so a loser still reading them fails on
+    * a missing file. That is a commit conflict, not an error: when any
+    * snapshot file has left the committed view, a failed preparation
+    * returns None and the verb re-prepares on a fresh snapshot (a
+    * genuine error then recurs there and is thrown). */
+  private def unlessSwept[A](fs: org.apache.hadoop.fs.FileSystem,
+      lakeDir: String, filesSnap: Set[String])(prepare: => A): Option[A] =
+    try Some(prepare)
+    catch {
+      case scala.util.control.NonFatal(_)
+          if !filesSnap.subsetOf(CommitLog.committedView(fs, lakeDir)._1) =>
+        None
+    }
+
   /** OCC APPEND: stage the parquet write with no lock held, then
     * claim the next batch id and publish the manifest in a
     * metadata-scale commit section. Never conflicts: a blind add
@@ -481,102 +497,106 @@ object Occ {
       // feed; unpinned, each execution re-runs the distinct shuffle
       val updKeys = updates0.select(keys.map(col): _*).distinct()
         .localCheckpoint()
-      val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      MergeInto.requireFullRowCompatible(lake, updates0, "merge(occ)",
-        evolveSchema)
-      def touchedIn(base: DataFrame): Set[String] = base
-        .select(col("_metadata.file_path").as("__file") +:
-          keys.map(col): _*)
-        .join(updKeys, keys, "left_semi")
-        .select(col("__file")).distinct()
-        .collect().map(r => new Path(r.getString(0)).getName).toSet
-      val touched = MergeInto.keyCandidateFiles(spark, updates0, keys,
-          indexDir, committed) match {
-        case Some(Seq()) => Set.empty[String] // pure-insert merge
-        case Some(cand) => touchedIn(
-          spark.read.schema(lake.schema).parquet(cand: _*))
-        case None => touchedIn(lake)
-      }
-      val survivors =
-        if (touched.isEmpty) updates0
-        else spark.read.schema(lake.schema)
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
-            touched.toSeq.sorted): _*)
-          .join(updKeys, keys, "left_anti")
-          .unionByName(updates0, allowMissingColumns = true)
       val stage = stageDir(lakeDir)
-      survivors.repartition(filesPerRewrite).write
-        .parquet(s"$stage/data")
-      val fresh = stagedNames(fs, s"$stage/data")
-      Constraints.validatePaths(spark, lakeDir,
-        fresh.map(n => s"$stage/data/$n"))
-      GeneratedColumns.validatePaths(spark, lakeDir,
-        fresh.map(n => s"$stage/data/$n"))
-      // change feed: same images as the locked verb
-      // ([[MergeInto.merge]]), staged unlocked off the pinned snapshot
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      if (cdcWanted) {
-        val ct = ChangeDataFeed.ChangeTypeCol
-        val cdc =
-          if (touched.isEmpty) updates0.withColumn(ct, lit("insert"))
-          else {
-            val base = spark.read.schema(lake.schema)
-              .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
-                touched.toSeq.sorted): _*)
-            // pinned: feeds two joins below — unpinned, one feed
-            // write scans the touched files three times
-            val baseKeys = base.select(keys.map(col): _*).distinct()
-              .localCheckpoint()
-            base.join(updKeys, keys, "left_semi")
-              .withColumn(ct, lit("update_preimage"))
-              .unionByName(updates0.join(baseKeys, keys, "left_semi")
-                .withColumn(ct, lit("update_postimage")),
-                allowMissingColumns = true)
-              .unionByName(updates0.join(baseKeys, keys, "left_anti")
-                .withColumn(ct, lit("insert")),
-                allowMissingColumns = true)
-          }
-        cdc.write.parquet(s"$stage/cdc")
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val committed = filesSnap.toSeq.sorted
+        val lake = spark.read.option("mergeSchema", "true")
+          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        MergeInto.requireFullRowCompatible(lake, updates0, "merge(occ)",
+          evolveSchema)
+        def touchedIn(base: DataFrame): Set[String] = base
+          .select(col("_metadata.file_path").as("__file") +:
+            keys.map(col): _*)
+          .join(updKeys, keys, "left_semi")
+          .select(col("__file")).distinct()
+          .collect().map(r => new Path(r.getString(0)).getName).toSet
+        val touched = MergeInto.keyCandidateFiles(spark, updates0, keys,
+            indexDir, committed) match {
+          case Some(Seq()) => Set.empty[String] // pure-insert merge
+          case Some(cand) => touchedIn(
+            spark.read.schema(lake.schema).parquet(cand: _*))
+          case None => touchedIn(lake)
+        }
+        val survivors =
+          if (touched.isEmpty) updates0
+          else spark.read.schema(lake.schema)
+            .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
+              touched.toSeq.sorted): _*)
+            .join(updKeys, keys, "left_anti")
+            .unionByName(updates0, allowMissingColumns = true)
+        survivors.repartition(filesPerRewrite).write
+          .parquet(s"$stage/data")
+        val fresh = stagedNames(fs, s"$stage/data")
+        Constraints.validatePaths(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"))
+        GeneratedColumns.validatePaths(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"))
+        // change feed: same images as the locked verb
+        // ([[MergeInto.merge]]), staged unlocked off the pinned snapshot
+        if (cdcWanted) {
+          val ct = ChangeDataFeed.ChangeTypeCol
+          val cdc =
+            if (touched.isEmpty) updates0.withColumn(ct, lit("insert"))
+            else {
+              val base = spark.read.schema(lake.schema)
+                .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
+                  touched.toSeq.sorted): _*)
+              // pinned: feeds two joins below — unpinned, one feed
+              // write scans the touched files three times
+              val baseKeys = base.select(keys.map(col): _*).distinct()
+                .localCheckpoint()
+              base.join(updKeys, keys, "left_semi")
+                .withColumn(ct, lit("update_preimage"))
+                .unionByName(updates0.join(baseKeys, keys, "left_semi")
+                  .withColumn(ct, lit("update_postimage")),
+                  allowMissingColumns = true)
+                .unionByName(updates0.join(baseKeys, keys, "left_anti")
+                  .withColumn(ct, lit("insert")),
+                  allowMissingColumns = true)
+            }
+          cdc.write.parquet(s"$stage/cdc")
+        }
+        (touched, fresh)
       }
-      beforeCommit()
       // ---- COMMIT SECTION (locked, metadata-scale) ----
       var carried = -1
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
-        if (curDv != dvSnap ||
-            defsSnapshot(fs, lakeDir) != defsSnap ||
-            !touched.subsetOf(curFiles) ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
-        else {
-          renameInto(fs, s"$stage/data", fresh, lakeDir)
-          val carry = (curFiles -- touched).toSeq.sorted
-          carried = carry.size
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
-            else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
-            }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
-            (carry ++ fresh).sorted,
-            added = fresh, removed = touched.toSeq.sorted, gen = gen)
-          // the replaced files are unreferenced now; sweep under the
-          // lock (nothing can be mid-publish) so the plain directory
-          // read converges immediately, as the locked verb does
-          CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
-          indexDir.foreach(idx =>
-            StatsIndex.refreshSameColumns(spark, lakeDir, idx))
-          true
+      val won = prepared.exists { case (touched, fresh) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
+          if (curDv != dvSnap ||
+              defsSnapshot(fs, lakeDir) != defsSnap ||
+              !touched.subsetOf(curFiles) ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            renameInto(fs, s"$stage/data", fresh, lakeDir)
+            val carry = (curFiles -- touched).toSeq.sorted
+            carried = carry.size
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
+              (carry ++ fresh).sorted,
+              added = fresh, removed = touched.toSeq.sorted, gen = gen)
+            // the replaced files are unreferenced now; sweep under the
+            // lock (nothing can be mid-publish) so the plain directory
+            // read converges immediately, as the locked verb does
+            CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
+            indexDir.foreach(idx =>
+              StatsIndex.refreshSameColumns(spark, lakeDir, idx))
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return (touched.size, carried)
+      if (won) return (prepared.get._1.size, carried)
       attempt += 1
       require(attempt < maxRetries,
         s"merge(occ): $maxRetries consecutive commit conflicts on " +
@@ -622,36 +642,39 @@ object Occ {
       require(filesSnap.nonEmpty,
         s"optimize(occ): no committed files in $lakeDir")
       val committed = filesSnap.toSeq.sorted
-      val base = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      val input = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
-        match {
-        case None => base
-        case Some(dv) => DeletionVectors.applyVectors(base, Some(dv))
-      }
       val stage = stageDir(lakeDir)
-      ZOrder.curveWrite(input, stage, zCols, bits, numFiles,
-        mode = "append", curve = curve)
-      val fresh = stagedNames(fs, stage)
-      beforeCommit()
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val base = spark.read.option("mergeSchema", "true")
+          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        val input = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
+          match {
+          case None => base
+          case Some(dv) => DeletionVectors.applyVectors(base, Some(dv))
+        }
+        ZOrder.curveWrite(input, stage, zCols, bits, numFiles,
+          mode = "append", curve = curve)
+        stagedNames(fs, stage)
+      }
       // ---- COMMIT SECTION (locked, metadata-scale) ----
       var carriedAppends = -1
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
-        if (curDv != dvSnap || !filesSnap.subsetOf(curFiles)) false
-        else {
-          renameInto(fs, stage, fresh, lakeDir)
-          val appends = (curFiles -- filesSnap).toSeq.sorted
-          carriedAppends = appends.size
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          // no dv entries: the snapshot's vectors were applied by the
-          // rewrite and nothing else can be covered (a vector landing
-          // mid-rewrite is the conflict arm above)
-          CommitLog.commitCheckpoint(fs, lakeDir, id,
-            (fresh ++ appends).sorted)
-          CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
-          true
+      val won = prepared.exists { fresh =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
+          if (curDv != dvSnap || !filesSnap.subsetOf(curFiles)) false
+          else {
+            renameInto(fs, stage, fresh, lakeDir)
+            val appends = (curFiles -- filesSnap).toSeq.sorted
+            carriedAppends = appends.size
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            // no dv entries: the snapshot's vectors were applied by the
+            // rewrite and nothing else can be covered (a vector landing
+            // mid-rewrite is the conflict arm above)
+            CommitLog.commitCheckpoint(fs, lakeDir, id,
+              (fresh ++ appends).sorted)
+            CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
@@ -677,8 +700,10 @@ object Occ {
     * retrying is what makes the lost update impossible). Two OCC
     * merges race: one wins, the loser re-applies on top; an append
     * racing a merge: the append always lands, the merge retries over
-    * it. `beforeCommit` is a spec hook, invoked after preparation and
-    * BEFORE the commit section's lock. Returns (matched, appended). */
+    * it. The commit section also refreshes the index at `indexDir`
+    * (see the section's note). `beforeCommit` is a spec hook, invoked
+    * after preparation and BEFORE the commit section's lock. Returns
+    * (matched, appended). */
   def mergeMor(spark: SparkSession, lakeDir: String, updates0In: DataFrame,
       keys0: Seq[String], evolveSchema: Boolean = false,
       indexDir: Option[String] = None,
@@ -786,7 +811,11 @@ object Occ {
           .write.parquet(s"$stage/cdc")
       }
       beforeCommit()
-      // ---- COMMIT SECTION (locked, metadata-scale) ----
+      // ---- COMMIT SECTION (locked) ----
+      // renames, the manifest write and, when `indexDir` is set, the
+      // StatsIndex refresh over the delta files: one footer-read job
+      // and one index write (the kept stats rows come from the
+      // driver-side snapshot), so the lock is held for two Spark jobs
       val won = CommitLog.withWriterLock(fs, lakeDir,
           waitMs = commitWaitMs) {
         if (CommitLog.committedView(fs, lakeDir) != snap ||
@@ -869,61 +898,65 @@ object Occ {
         s"mergeClauses(occ): no committed files in $lakeDir — ingest " +
           "first")
       val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      val (touched, survivors, changes) = plan(lake, committed, cdcWanted)
       val stage = stageDir(lakeDir)
-      val fresh = survivors match {
-        case None => Seq.empty[String]
-        case Some(sv) =>
-          sv.repartition(filesPerRewrite).write.parquet(s"$stage/data")
-          stagedNames(fs, s"$stage/data")
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val lake = spark.read.option("mergeSchema", "true")
+          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        val (touched, survivors, changes) = plan(lake, committed, cdcWanted)
+        val fresh = survivors match {
+          case None => Seq.empty[String]
+          case Some(sv) =>
+            sv.repartition(filesPerRewrite).write.parquet(s"$stage/data")
+            stagedNames(fs, s"$stage/data")
+        }
+        Constraints.validatePaths(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"))
+        GeneratedColumns.validatePaths(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"))
+        if (cdcWanted)
+          changes.getOrElse(throw new IllegalStateException(
+            "mergeClauses(occ): change feed enabled but no change " +
+              "frame built")).write.parquet(s"$stage/cdc")
+        (touched, fresh)
       }
-      Constraints.validatePaths(spark, lakeDir,
-        fresh.map(n => s"$stage/data/$n"))
-      GeneratedColumns.validatePaths(spark, lakeDir,
-        fresh.map(n => s"$stage/data/$n"))
-      if (cdcWanted)
-        changes.getOrElse(throw new IllegalStateException(
-          "mergeClauses(occ): change feed enabled but no change " +
-            "frame built")).write.parquet(s"$stage/cdc")
-      beforeCommit()
       // ---- COMMIT SECTION (locked, metadata-scale) ----
       var carried = -1
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
-        if (curDv != dvSnap ||
-            defsSnapshot(fs, lakeDir) != defsSnap ||
-            !touched.subsetOf(curFiles) ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
-        else {
-          renameInto(fs, s"$stage/data", fresh, lakeDir)
-          val carry = (curFiles -- touched).toSeq.sorted
-          carried = carry.size
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
-            else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
-            }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
-            (carry ++ fresh).sorted,
-            added = fresh, removed = touched.toSeq.sorted, gen = gen)
-          // replaced files are unreferenced; sweep under the lock so
-          // the plain directory read converges immediately
-          CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
-          indexDir.foreach(idx =>
-            StatsIndex.refreshSameColumns(spark, lakeDir, idx))
-          true
+      val won = prepared.exists { case (touched, fresh) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          val (curFiles, curDv) = CommitLog.committedView(fs, lakeDir)
+          if (curDv != dvSnap ||
+              defsSnapshot(fs, lakeDir) != defsSnap ||
+              !touched.subsetOf(curFiles) ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            renameInto(fs, s"$stage/data", fresh, lakeDir)
+            val carry = (curFiles -- touched).toSeq.sorted
+            carried = carry.size
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
+              (carry ++ fresh).sorted,
+              added = fresh, removed = touched.toSeq.sorted, gen = gen)
+            // replaced files are unreferenced; sweep under the lock so
+            // the plain directory read converges immediately
+            CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
+            indexDir.foreach(idx =>
+              StatsIndex.refreshSameColumns(spark, lakeDir, idx))
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return (touched.size, carried)
+      if (won) return (prepared.get._1.size, carried)
       attempt += 1
       require(attempt < maxRetries,
         s"mergeClauses(occ): $maxRetries consecutive commit conflicts " +

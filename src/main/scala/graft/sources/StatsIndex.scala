@@ -9,11 +9,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.{BloomFilter => SketchBloom}
 
 import scala.jdk.CollectionConverters._
@@ -32,11 +34,22 @@ import scala.jdk.CollectionConverters._
   * is maximally selective on every clustered column (each file covers a
   * narrow span of each — measured in SCALE.md).
   *
-  * Build is DISTRIBUTED: file paths are parallelized and footers read
-  * executor-side (`mapPartitions`); nothing driver-side grows with data
-  * volume, only with file COUNT — and the collected prune result is the
-  * matching file list, which is exactly the object Spark's own
-  * planner materializes for any scan.
+  * Footers are read DISTRIBUTED (file paths parallelized, footers read
+  * executor-side) and the resulting stats rows are collected. The
+  * driver keeps ONE snapshot of the live generation's stats rows per
+  * index root ([[snapshot]]), never a function of data volume but of
+  * files × indexed columns: each (file, column) row holds about 250
+  * bytes of heap, each file path once. Measured by
+  * `bench.StatsSnapshotScale` (SCALE.md) at 10⁵ files × 4 columns:
+  * 101 MB, read cold in 2.6 s (one job); a warm range prune then
+  * takes 0.1 s and a 1000-key prune 0.08 s, with no job. The
+  * snapshot is read once per generation (generations are immutable)
+  * or seeded by the publish that wrote it, and [[indexedFiles]],
+  * [[prunedTyped]], [[prunedForKeys]], [[refresh]] and
+  * [[refreshSameColumns]] answer their min/max part from it, in plain
+  * Scala, without a Spark job. Bloom filter bytes never reach the
+  * driver: they stay in the generation's parquet, and a probe that
+  * needs them runs the bloom arm as one Spark job over it.
   *
   * v2 stats are TYPED (one kind column + nullable typed bound pairs):
   *  - `long`: int32/int64 (plus DATE as epoch days, and INT64
@@ -181,16 +194,16 @@ object StatsIndex {
   private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
       root: Path): Option[String] = {
     val ptr = new Path(root, PointerFile)
-    if (!fs.exists(ptr)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(ptr).getLen.toInt)
-      val in = fs.open(ptr)
-      try in.readFully(0, buf) finally in.close()
-      val name = new String(buf, UTF_8).trim
-      require(VersionRe.findFirstIn(name).isDefined,
-        s"index pointer $ptr holds '$name' — not a generation name")
-      Some(name)
-    }
+    // one open, no exists/getFileStatus probes: every index read
+    // resolves the pointer, so its round trips are paid per prune
+    val in =
+      try fs.open(ptr)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val name = try new String(in.readAllBytes(), UTF_8).trim
+      finally in.close()
+    require(VersionRe.findFirstIn(name).isDefined,
+      s"index pointer $ptr holds '$name' — not a generation name")
+    Some(name)
   }
 
   /** The live generation's parquet dir: CURRENT's target when the
@@ -209,18 +222,28 @@ object StatsIndex {
   }
 
   /** Read the LIVE index generation (resolves the CURRENT pointer;
-    * legacy flat indexes read as-is). The returned frame keeps reading
-    * that generation consistently even if a publish lands mid-query —
-    * generations are immutable and the previous live one is retained
-    * until the next publish. */
+    * legacy flat indexes read as-is) as a parquet frame, bloom bytes
+    * included. The returned frame keeps reading that generation
+    * consistently even if a publish lands mid-query — generations are
+    * immutable and the previous live one is retained until the next
+    * publish. The prune paths do NOT go through here: they answer
+    * from the driver-side [[snapshot]] and scan parquet only for the
+    * bloom arm; the metadata-first aggregates ([[countPruned]],
+    * [[countByGroup]], [[minMaxByGroup]], [[minMaxPruned]]) and
+    * [[dfpJoin]]'s planning read this frame. */
   def readIndex(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(resolveIndexDir(
       spark.sparkContext.hadoopConfiguration, indexDir).toString)
 
   /** Write `rows` as a new immutable generation under `indexDir` and
-    * flip CURRENT to it atomically. See the layout note above. */
+    * flip CURRENT to it atomically (see the layout note above). `seed`
+    * is the new generation's stats rows when the caller holds them
+    * all: `rows` is then a local frame of exactly those rows, and the
+    * publish installs them as the root's [[snapshot]], so the next
+    * prune reads nothing. A frame that scans parquet (bloom rows) has
+    * no seed; the next [[snapshot]] call reads the generation once. */
   private def publishGeneration(spark: SparkSession, indexDir: String,
-      rows: DataFrame): Unit = {
+      rows: DataFrame, seed: Option[IndexedSeq[StatRow]]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(indexDir)
     val fs = root.getFileSystem(conf)
@@ -232,11 +255,14 @@ object StatsIndex {
     val next = f"v${taken.maxOption.getOrElse(0) + 1}%05d"
     // the parquet job runs BEFORE the pointer moves: any failure here
     // (e.g. the spelling-translation raise_error) leaves the live
-    // generation untouched and readable
-    // repartition, not coalesce(1): coalesce would collapse the footer
-    // scan itself into one task
-    rows.repartition(1).write.mode("overwrite")
-      .parquet(new Path(root, next).toString)
+    // generation untouched and readable.
+    // A frame that scans parquet repartitions, not coalesce(1):
+    // coalesce would collapse the scan itself (the bloom pass, the
+    // kept-bloom carry) into one task. A local frame has no scan to
+    // collapse, and coalesce keeps its write to one job.
+    val oneFile =
+      if (seed.isDefined) rows.coalesce(1) else rows.repartition(1)
+    oneFile.write.mode("overwrite").parquet(new Path(root, next).toString)
     val tmp = new Path(root, PointerFile + ".tmp")
     val out = fs.create(tmp, /* overwrite = */ true)
     try out.write((next + "\n").getBytes(UTF_8)) finally out.close()
@@ -259,7 +285,178 @@ object StatsIndex {
         fs.delete(st.getPath, false)
       }
     }
+    val key = fs.makeQualified(root).toString
+    seed match {
+      case Some(rs) =>
+        val gen = fs.makeQualified(new Path(root, next))
+        val snap = typedSnapshot(gen, partsOf(fs, gen), rs)
+        snapshots.synchronized { snapshots.put(key, snap) }
+      case None => snapshots.synchronized { snapshots.remove(key) }
+    }
   }
+
+  // ---- the driver-side snapshot of the live generation --------------
+  //
+  // Every prune resolves the live generation, and the rows it needs
+  // are a few per file. Reading them from parquet on each call cost a
+  // distributed plan per prune (several jobs each, most of the index
+  // maintenance in a merge-on-read upsert). The snapshot holds the
+  // live generation's rows WITHOUT the bloom bytes, keyed by the
+  // qualified index root. It is valid while the resolved generation
+  // dir and its part files (name, length, mtime) match: one pointer
+  // read plus one listStatus per use. Spark part names carry a
+  // per-write UUID, so a generation rebuilt under the same vNNNNN
+  // name (index dir deleted and rebuilt) or published by another JVM
+  // never matches a stale entry. A small fixed LRU bounds the roots
+  // held; each entry is files × indexed columns rows of about 250
+  // bytes (see the header for the measured sizes).
+
+  /** One index row without its bloom bytes. */
+  private[graft] final case class StatRow(file: String,
+      rowCount: Option[Long], col: String, kind: String,
+      lmin: Option[Long], lmax: Option[Long],
+      dmin: Option[Double], dmax: Option[Double],
+      smin: Option[String], smax: Option[String],
+      nulls: Option[Long], dtype: Option[String], bspace: Option[String])
+
+  /** The snapshot's columns: every index column except `bloom`. */
+  private val SnapshotSchema = StructType(Seq(
+    StructField("file", StringType), StructField("row_count", LongType),
+    StructField("col", StringType), StructField("kind", StringType),
+    StructField("lmin", LongType), StructField("lmax", LongType),
+    StructField("dmin", DoubleType), StructField("dmax", DoubleType),
+    StructField("smin", StringType), StructField("smax", StringType),
+    StructField("nulls", LongType), StructField("dtype", StringType),
+    StructField("bspace", StringType)))
+
+  /** The live generation's rows as the driver holds them. `typed` is
+    * false for a v1 (pre-`kind`) generation: it then holds no rows,
+    * only its files, so every prune keeps every file and [[refresh]]
+    * rebuilds it. */
+  private[graft] final class Snapshot(val dir: Path,
+      val parts: Seq[(String, Long, Long)], val rows: IndexedSeq[StatRow],
+      val files: Seq[String], val typed: Boolean) {
+    lazy val bloomCols: Set[String] =
+      rows.iterator.filter(_.kind == "bloom").map(_.col).toSet
+    def read(spark: SparkSession): DataFrame = readParts(spark, dir, parts)
+  }
+
+  /** A typed generation's snapshot. Each distinct string (a file's
+    * path, a column name, a kind) is held once, however many rows
+    * carry it: a file indexed on C columns stores its path once, not
+    * C times. */
+  private def typedSnapshot(dir: Path, parts: Seq[(String, Long, Long)],
+      rows: IndexedSeq[StatRow]): Snapshot = {
+    val pool = new java.util.HashMap[String, String]()
+    def one(x: String): String =
+      if (x == null) null else Option(pool.putIfAbsent(x, x)).getOrElse(x)
+    val rs = rows.map(r => r.copy(file = one(r.file), col = one(r.col),
+      kind = one(r.kind), dtype = r.dtype.map(one), bspace = r.bspace.map(one)))
+    new Snapshot(dir, parts, rs, rs.map(_.file).distinct.sorted, typed = true)
+  }
+
+  /** A generation's parquet, bloom bytes included, read from its
+    * listed parts (the bloom arm, the kept-bloom carry of [[refresh]],
+    * and the snapshot read itself). */
+  private def readParts(spark: SparkSession, dir: Path,
+      parts: Seq[(String, Long, Long)]): DataFrame =
+    if (parts.isEmpty) spark.read.parquet(dir.toString)
+    else spark.read.parquet(parts.map(p => new Path(dir, p._1).toString): _*)
+
+  private val SnapshotSlots = 16
+  private val snapshots =
+    new java.util.LinkedHashMap[String, Snapshot](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Snapshot]): Boolean =
+        size() > SnapshotSlots
+    }
+
+  /** (name, length, mtime) of a generation's data parts, sorted. */
+  private def partsOf(fs: org.apache.hadoop.fs.FileSystem,
+      gen: Path): Seq[(String, Long, Long)] = {
+    val sts =
+      try fs.listStatus(gen)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new IllegalStateException(
+            s"index generation $gen does not exist — no index at this " +
+              "root, or a corrupt pointer", e)
+      }
+    sts.toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .sortBy(_._1)
+  }
+
+  /** The live generation's [[Snapshot]]: the cached one when its
+    * generation dir and parts still match, else read once from
+    * parquet (one Spark job, bloom column pruned away). */
+  private[graft] def snapshot(spark: SparkSession,
+      indexDir: String): Snapshot = {
+    val root = new Path(indexDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val key = fs.makeQualified(root).toString
+    val gen = fs.makeQualified(
+      readPointer(fs, root).fold(root)(new Path(root, _)))
+    val parts = partsOf(fs, gen)
+    snapshots.synchronized(Option(snapshots.get(key)))
+      .filter(s => s.dir == gen && s.parts == parts)
+      .getOrElse {
+        val snap = readSnapshot(spark, gen, parts)
+        snapshots.synchronized { snapshots.put(key, snap) }
+        snap
+      }
+  }
+
+  private def readSnapshot(spark: SparkSession, gen: Path,
+      parts: Seq[(String, Long, Long)]): Snapshot = {
+    val raw = readParts(spark, gen, parts)
+    if (!raw.columns.contains("kind")) {
+      val files = raw.select(col("file")).distinct().collect()
+        .map(_.getString(0)).toSeq.sorted
+      new Snapshot(gen, parts, IndexedSeq.empty, files, typed = false)
+    } else {
+      val full = widened(raw)
+      def o[A](r: Row, i: Int): Option[A] =
+        if (r.isNullAt(i)) None else Some(r.getAs[A](i))
+      val rows = full.select(SnapshotSchema.fieldNames.map(col): _*)
+        .collect().iterator.map(r => StatRow(r.getString(0), o(r, 1),
+          r.getString(2), r.getString(3), o(r, 4), o(r, 5), o(r, 6),
+          o(r, 7), o(r, 8), o(r, 9), o(r, 10), o(r, 11), o(r, 12)))
+        .toIndexedSeq
+      typedSnapshot(gen, parts, rows)
+    }
+  }
+
+  /** `rows` as a local frame of the snapshot columns (the write side
+    * of a publish that holds every stats row). */
+  private def localFrame(spark: SparkSession,
+      rows: IndexedSeq[StatRow]): DataFrame = {
+    def o[A](x: Option[A]): Any = x.orNull
+    spark.createDataFrame(rows.map(r => Row(r.file, o(r.rowCount),
+      r.col, r.kind, o(r.lmin), o(r.lmax), o(r.dmin), o(r.dmax),
+      o(r.smin), o(r.smax), o(r.nulls), o(r.dtype), o(r.bspace)))
+      .asJava, SnapshotSchema)
+  }
+
+  /** Publish `stats` plus the bloom-row frames `blooms` as the next
+    * generation. Without bloom rows the write is local and seeds the
+    * snapshot. */
+  private def publishRows(spark: SparkSession, indexDir: String,
+      stats: IndexedSeq[StatRow], blooms: Seq[DataFrame]): Unit = {
+    val local = localFrame(spark, stats)
+    val written = local.select(local.columns.filter(_ != "bspace").map(col) ++
+      Seq(lit(null).cast("binary").as("bloom"), col("bspace")): _*)
+    if (blooms.isEmpty) publishGeneration(spark, indexDir, written, Some(stats))
+    else publishGeneration(spark, indexDir,
+      (written +: blooms).reduce(_ unionByName _), None)
+  }
+
+  /** The bloom rows of `snap`'s generation, read from its parquet. */
+  private def bloomRowsOf(spark: SparkSession, snap: Snapshot): Seq[DataFrame] =
+    if (snap.bloomCols.isEmpty) Nil
+    else Seq(widened(snap.read(spark)).filter(col("kind") === "bloom"))
 
   /** One pass over `dataDir`'s footers → an index parquet at
     * `indexDir` with one row per (file, column): row count + typed
@@ -269,21 +466,9 @@ object StatsIndex {
       indexDir: String, bloomCols: Seq[String] = Nil,
       bloomItems: Long = 1000000L, bloomFpp: Double = 0.03): Unit = {
     val files = listData(spark, dataDir)
-    publishGeneration(spark, indexDir,
-      rowsFor(spark, files, cols, bloomCols, bloomItems, bloomFpp))
-  }
-
-  /** Stats rows (footer metadata) plus bloom rows (one grouped data
-    * pass per bloom column) for `files`, under one uniform schema. */
-  private def rowsFor(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], bloomCols: Seq[String], bloomItems: Long,
-      bloomFpp: Double): DataFrame = {
-    val stats = statsFor(spark, files, cols)
-      .withColumn("bloom", lit(null).cast("binary"))
-      .withColumn("bspace", lit(null).cast("string"))
-    if (bloomCols.isEmpty) stats
-    else stats.unionByName(
-      bloomFor(spark, files, bloomCols, bloomItems, bloomFpp))
+    publishRows(spark, indexDir, statsFor(spark, files, cols),
+      if (bloomCols.isEmpty) Nil
+      else Seq(bloomFor(spark, files, bloomCols, bloomItems, bloomFpp)))
   }
 
   /** One `kind = "bloom"` index row per (file, bloom column): a
@@ -437,82 +622,73 @@ object StatsIndex {
     * live one untouched). Cost ∝ churn, not table size — the
     * operation a daily-ingest 100 TB table actually runs; a full
     * [[build]] per ingest would re-read every footer.
+    *
+    * The kept stats rows come from the driver-side [[snapshot]], so
+    * on an index without bloom rows a refresh runs two Spark jobs:
+    * the churn's footer read and the local generation write, which
+    * seeds the next snapshot. Kept bloom rows are carried by a Spark
+    * scan of the old generation inside the write job.
     * Returns (added, removed). */
   def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
       indexDir: String, bloomCols: Seq[String] = Nil,
       bloomItems: Long = 1000000L, bloomFpp: Double = 0.03): (Int, Int) = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    if (!new Path(indexDir).getFileSystem(conf).exists(new Path(indexDir))) {
-      build(spark, dataDir, cols, indexDir, bloomCols, bloomItems,
-        bloomFpp)
-      return (listData(spark, dataDir).size, 0)
-    }
     val current = listData(spark, dataDir)
-    val rawOld = readIndex(spark, indexDir)
-    if (!rawOld.columns.contains("kind")) {
-      // v1 (untyped) index — incompatible schema; rebuild from scratch
-      build(spark, dataDir, cols, indexDir, bloomCols, bloomItems,
-        bloomFpp)
-      return (current.size, 0)
+    val snap =
+      if (!new Path(indexDir).getFileSystem(conf).exists(new Path(indexDir)))
+        None
+      else Some(snapshot(spark, indexDir))
+    snap.filter(_.typed) match {
+      case None =>
+        // no index yet, or a v1 (untyped) one: build from scratch
+        build(spark, dataDir, cols, indexDir, bloomCols, bloomItems,
+          bloomFpp)
+        (current.size, 0)
+      case Some(old) =>
+        val known = old.files.toSet
+        val added = current.filterNot(known)
+        val removed = known -- current
+        val kept = old.rows.filter(r => r.kind != "bloom" && !removed(r.file))
+        val fresh = if (added.isEmpty) IndexedSeq.empty
+          else statsFor(spark, added, cols)
+        // the write job reads the live generation's bloom rows while
+        // writing the next one — safe, generations are immutable and
+        // the live one survives its successor's publish
+        val keptBlooms = bloomRowsOf(spark, old).map(b =>
+          if (removed.isEmpty) b
+          else b.join(removed.toSeq.toDF("file"), Seq("file"), "left_anti"))
+        val freshBlooms =
+          if (added.isEmpty || bloomCols.isEmpty) Nil
+          else Seq(bloomFor(spark, added, bloomCols, bloomItems, bloomFpp))
+        publishRows(spark, indexDir, kept ++ fresh, keptBlooms ++ freshBlooms)
+        (added.size, removed.size)
     }
-    // older index generations: widen to the current schema (all-null
-    // columns) so the union below lines up; existing files just keep
-    // no bloom row, and pre-bspace bloom rows keep their legacy
-    // native-space interpretation (see [[exclusion]])
-    val old = Seq(
-      ("bloom", "binary"), ("bspace", "string"),
-      ("nulls", "bigint"), ("dtype", "string")).foldLeft(rawOld) {
-      case (df, (c, tp)) =>
-        if (df.columns.contains(c)) df
-        else df.withColumn(c, lit(null).cast(tp))
-    }
-    val known = old.select(col("file")).distinct().as[String].collect().toSet
-    val added = current.filterNot(known)
-    val removed = (known -- current).toSeq.sorted
-    val kept =
-      if (removed.isEmpty) old
-      else old.join(removed.toDF("file"), Seq("file"), "left_anti")
-    val updated =
-      if (added.isEmpty) kept
-      else kept.unionByName(
-        rowsFor(spark, added, cols, bloomCols, bloomItems, bloomFpp))
-    // the publish job reads the live generation (via `kept`) while
-    // writing the next one — safe, generations are immutable and the
-    // live one survives its successor's publish
-    publishGeneration(spark, indexDir, updated)
-    (added.size, removed.size)
   }
 
   /** Recursive listing (nested/partitioned layouts index their leaf
     * files); fails fast when the directory holds NO parquet at all — an
     * empty index would make `readPruned` silently return 0 rows for a
-    * table that exists (ADVICE r4). */
-  private def listData(spark: SparkSession, dataDir: String): Seq[String] = {
+    * table that exists (ADVICE r4). Walks the tree with `listStatus`:
+    * `listFiles` returns `LocatedFileStatus`es, and without Hadoop's
+    * native library each one forks a process to read permissions. */
+  private[graft] def listData(spark: SparkSession,
+      dataDir: String): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dataDir).getFileSystem(conf)
-    val out = Seq.newBuilder[String]
-    val root = fs.makeQualified(new Path(dataDir))
-    val it = fs.listFiles(root, /* recursive = */ true)
     // Spark's listing convention: a file is hidden if ANY path segment
     // below the root starts with `_` or `.` — so sidecar DIRECTORIES
-    // (`_dv`, `_graft_log`) are excluded whole, not just `_`-named
-    // files (a `_dv/part-*.parquet` has a plain leaf name)
-    def hidden(p: Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != root) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return true
-        cur = cur.getParent
+    // (`_dv`, `_graft_log`, `.occ-*` stages) are skipped whole, not
+    // just `_`-named files (a `_dv/part-*.parquet` has a plain leaf name)
+    def walk(dir: Path): Iterator[String] =
+      fs.listStatus(dir).iterator.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
+        else if (st.isDirectory) walk(st.getPath)
+        else if (n.endsWith(".parquet")) Iterator.single(st.getPath.toString)
+        else Iterator.empty
       }
-      false
-    }
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet") && !hidden(f.getPath))
-        out += f.getPath.toString
-    }
-    val files = out.result().sorted
+    val files = walk(fs.makeQualified(new Path(dataDir))).toVector.sorted
     require(files.nonEmpty,
       s"StatsIndex: no .parquet files under $dataDir (recursive) — " +
         "refusing to build an empty index that would prune everything")
@@ -713,8 +889,6 @@ object StatsIndex {
     }
   }
 
-  /** Distributed footer scan of `files` → one index row per
-    * (file, column). */
   /** Global (min, max) per column as doubles, from FOOTER stats only —
     * one distributed metadata job over `files`, zero data rows read.
     * `None` when any file lacks exact integral/floating stats for any
@@ -731,37 +905,29 @@ object StatsIndex {
       files: Seq[String], cols: Seq[String])
       : Option[Seq[(Double, Double)]] = {
     if (files.isEmpty) return None
-    val rows = statsFor(spark, files, cols)
-      .select(col("col"), col("kind"), col("lmin"), col("lmax"),
-        col("dmin"), col("dmax"), col("dtype"))
-      .collect()
-    val byCol = rows.groupBy(_.getString(0))
+    val integral = Set("int", "bigint", "smallint", "tinyint")
+    val byCol = statsFor(spark, files, cols).groupBy(_.col)
     val ranges = cols.map { c =>
-      val rs = byCol.getOrElse(c, Array.empty)
-      if (rs.isEmpty || rs.length < files.size) None
-      else {
-        val ok = rs.forall { r =>
-          val kind = r.getString(1)
-          val dtype = if (r.isNullAt(6)) "" else r.getString(6)
-          (kind == "long" && Seq("int", "bigint", "smallint", "tinyint")
-            .contains(dtype) && !r.isNullAt(2) && !r.isNullAt(3)) ||
-            (kind == "double" && Seq("float", "double").contains(dtype) &&
-              !r.isNullAt(4) && !r.isNullAt(5))
-        }
-        if (!ok) None
-        else Some((
-          rs.map(r => if (r.getString(1) == "long") r.getLong(2).toDouble
-            else r.getDouble(4)).min,
-          rs.map(r => if (r.getString(1) == "long") r.getLong(3).toDouble
-            else r.getDouble(5)).max))
+      val rs = byCol.getOrElse(c, IndexedSeq.empty)
+      val exact = rs.forall { r =>
+        (r.kind == "long" && r.dtype.exists(integral) &&
+          r.lmin.isDefined && r.lmax.isDefined) ||
+          (r.kind == "double" && r.dtype.exists(Set("float", "double")) &&
+            r.dmin.isDefined && r.dmax.isDefined)
       }
+      if (rs.isEmpty || rs.length < files.size || !exact) None
+      else Some((
+        rs.map(r => r.lmin.map(_.toDouble).getOrElse(r.dmin.get)).min,
+        rs.map(r => r.lmax.map(_.toDouble).getOrElse(r.dmax.get)).max))
     }
     if (ranges.exists(_.isEmpty)) None else Some(ranges.map(_.get))
   }
 
+  /** Footer scan of `files` → one [[StatRow]] per (file, column),
+    * collected: one Spark job, footers read on executors, no shuffle
+    * (the paths are parallelized directly). */
   private def statsFor(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    import spark.implicits._
+      cols: Seq[String]): IndexedSeq[StatRow] = {
     val colsB = spark.sparkContext.broadcast(cols)
     // ship the session's filesystem-relevant Hadoop conf to the
     // executors ([[FsConfShip]] — the one vetted implementation, shared
@@ -769,12 +935,11 @@ object StatsIndex {
     // on the executor would only ever resolve local/default filesystems
     val confEntries = spark.sparkContext.broadcast(
       FsConfShip.entries(spark.sparkContext.hadoopConfiguration))
-    files.toDF("file")
-      .repartition(math.max(1, math.min(files.size, 64)))
+    spark.sparkContext
+      .parallelize(files, math.max(1, math.min(files.size, 64)))
       .mapPartitions { it =>
         val c = FsConfShip.rebuild(confEntries.value)
-        it.map { row =>
-          val f = row.getString(0)
+        it.flatMap { f =>
           val r = ParquetFileReader.open(
             HadoopInputFile.fromPath(new Path(f), c))
           try {
@@ -834,26 +999,15 @@ object StatsIndex {
                 .flatMap(_.getColumns.asScala
                   .find(_.getPath.toDotString == name))
                 .nextOption().flatMap(sparkTypeOf)
-              // plain tuple, not the Bounds case class: encoders for
-              // nested private case classes break Janino codegen
-              // (interpreter fallback) — tuples stay codegen'd
-              (name, merged.kind, merged.lmin, merged.lmax,
-                merged.dmin, merged.dmax, merged.smin, merged.smax,
-                nulls, dtype)
+              StatRow(f, Some(nRows), name, merged.kind, merged.lmin,
+                merged.lmax, merged.dmin, merged.dmax, merged.smin,
+                merged.smax, nulls, dtype, bspace = None)
             }
-            (f, nRows, stats)
+            stats
           } finally r.close()
         }
       }
-      .toDF("file", "row_count", "stats")
-      .select(col("file"), col("row_count"),
-        explode(col("stats")).as("s"))
-      .select(col("file"), col("row_count"), col("s._1").as("col"),
-        col("s._2").as("kind"),
-        col("s._3").as("lmin"), col("s._4").as("lmax"),
-        col("s._5").as("dmin"), col("s._6").as("dmax"),
-        col("s._7").as("smin"), col("s._8").as("smax"),
-        col("s._9").as("nulls"), col("s._10").as("dtype"))
+      .collect().toIndexedSeq
   }
 
   /** Per-range exclusion predicate over index rows. NULL bounds (full
@@ -862,17 +1016,26 @@ object StatsIndex {
     * are widened conservatively: a long-stat column probed with a
     * fractional box excludes on `lmax < ceil(lo) || lmin > floor(hi)`
     * (exact, since the data are integers), and a double-stat column
-    * probed with a long box compares against one-ulp-outward doubles. */
-  private def exclusion(r: ColRange): Column = r match {
+    * probed with a long box compares against one-ulp-outward doubles.
+    *
+    * Split in two: the STATS arms (min/max rows, a Scala predicate over
+    * the driver-side [[snapshot]]'s rows — no plan, no job) and, for
+    * point probes, the BLOOM arm (`kind = "bloom"` rows, a Column
+    * evaluated over the generation's parquet, where the filter bytes
+    * live). A file is excluded when either arm excludes it. The stats
+    * arms decide as the SQL comparisons over the index rows would: a
+    * NULL bound (None) never excludes, doubles compare in Spark's order
+    * (NaN greatest, -0.0 = 0.0) and strings in UTF-8 byte order. */
+  private def exclusion(r: ColRange): (StatRow => Boolean, Option[Column]) =
+    r match {
     case LongRange(name, lo, hi) =>
       // "date" joins the long arm: a LongRange on a date column means
       // raw epoch days, the same unit the stats carry
-      col("col") === name && (
-        (col("kind").isin("long", "date") &&
-          (col("lmax") < lo || col("lmin") > hi)) ||
-        (col("kind") === "double" &&
-          (col("dmax") < Math.nextDown(lo.toDouble) ||
-            col("dmin") > Math.nextUp(hi.toDouble))))
+      (s => s.col == name && (
+        (integral(s) && outLong(s, lo, hi)) ||
+        (s.kind == "double" &&
+          outDouble(s, Math.nextDown(lo.toDouble), Math.nextUp(hi.toDouble)))),
+        None)
     case DoubleRange(name, lo, hi) =>
       // ceil/floor as Long with clamping (a bound beyond Long range
       // can never exclude via the integer arm)
@@ -882,14 +1045,12 @@ object StatsIndex {
       val hiFloor = if (hi >= Long.MaxValue.toDouble) Long.MaxValue
         else if (hi <= Long.MinValue.toDouble) Long.MinValue
         else math.floor(hi).toLong
-      col("col") === name && (
-        (col("kind") === "double" &&
-          (col("dmax") < lo || col("dmin") > hi)) ||
-        (col("kind").isin("long", "date") &&
-          (col("lmax") < loCeil || col("lmin") > hiFloor)))
+      (s => s.col == name && (
+        (s.kind == "double" && outDouble(s, lo, hi)) ||
+        (integral(s) && outLong(s, loCeil, hiFloor))), None)
     case StringRange(name, lo, hi) =>
-      col("col") === name && col("kind") === "string" &&
-        (col("smax") < lo || col("smin") > hi)
+      (s => s.col == name && s.kind == "string" && outString(s, lo, hi),
+        None)
     case LongEquals(name, v) =>
       // a point probe is the degenerate range [v, v] for the stats
       // arms, PLUS the bloom arm: a bloom row whose filter rules the
@@ -902,13 +1063,12 @@ object StatsIndex {
         ("long", xxhash64(lit(v))) +: (
           if (v != 0L) Seq(("double", xxhash64(lit(v.toDouble))))
           else Nil)
-      col("col") === name && (
-        (col("kind").isin("long", "date") &&
-          (col("lmax") < v || col("lmin") > v)) ||
-        (col("kind") === "double" &&
-          (col("dmax") < Math.nextDown(v.toDouble) ||
-            col("dmin") > Math.nextUp(v.toDouble))) ||
-        bloomExcludes(spellings, legacySpace = "long"))
+      (s => s.col == name && (
+        (integral(s) && outLong(s, v, v)) ||
+        (s.kind == "double" &&
+          outDouble(s, Math.nextDown(v.toDouble), Math.nextUp(v.toDouble)))),
+        Some(col("col") === name &&
+          bloomExcludes(spellings, legacySpace = "long")))
     case StringEquals(name, v) =>
       // numeric-parsable strings coerce in comparisons. ANSI sessions
       // cast the string to BIGINT (exact long space), but with ANSI
@@ -928,10 +1088,9 @@ object StatsIndex {
             v.toDoubleOption
               .filterNot(d => d == 0.0 || d.isNaN)
               .map(d => ("double", xxhash64(lit(d)))).toSeq)
-      col("col") === name && (
-        (col("kind") === "string" &&
-          (col("smax") < v || col("smin") > v)) ||
-        bloomExcludes(spellings, legacySpace = "string"))
+      (s => s.col == name && s.kind == "string" && outString(s, v, v),
+        Some(col("col") === name &&
+          bloomExcludes(spellings, legacySpace = "string")))
     case DoubleEquals(name, v) =>
       // long-kind stats: `longCol === vDouble` compares in DOUBLE
       // space (Spark widens the column), so exactness depends on
@@ -941,26 +1100,22 @@ object StatsIndex {
       // one ulp; beyond the long range (or non-integer / non-finite
       // probes) no long column value can ever equal v and every
       // long-stat row is excludable outright
-      val longArm =
+      val longArm: StatRow => Boolean =
         if (v == math.rint(v) && math.abs(v) < 9007199254740992.0d) {
           val vl = v.toLong
-          col("kind").isin("long", "date") &&
-            (col("lmax") < vl || col("lmin") > vl)
+          s => integral(s) && outLong(s, vl, vl)
         } else if (v == math.rint(v) && v >= Long.MinValue.toDouble &&
             v <= Long.MaxValue.toDouble) {
           val lo = math.max(v - Math.ulp(v), Long.MinValue.toDouble).toLong
           val hi = math.min(v + Math.ulp(v), Long.MaxValue.toDouble).toLong
-          col("kind").isin("long", "date") &&
-            (col("lmax") < lo || col("lmin") > hi)
-        } else col("kind").isin("long", "date")
-      val mm = col("col") === name && (
-        (col("kind") === "double" &&
-          (col("dmax") < v || col("dmin") > v)) ||
-        longArm)
+          s => integral(s) && outLong(s, lo, hi)
+        } else integral
+      val mm = (s: StatRow) => s.col == name && (
+        (s.kind == "double" && outDouble(s, v, v)) || longArm(s))
       // ±0.0 skips the bloom arm (case-class doc); NaN's comparisons
       // above are all false — the file survives, the exact re-filter
       // then returns no rows (SQL equality never matches NaN)
-      if (v == 0.0d || v.isNaN) mm
+      if (v == 0.0d || v.isNaN) (mm, None)
       else {
         // cross-type coverage for long-built blooms: only an exactly
         // round-tripping integral probe has a long spelling. Legacy
@@ -974,8 +1129,8 @@ object StatsIndex {
             if (v == math.rint(v) && math.abs(v) < 9007199254740992.0d)
               Seq(("long", xxhash64(lit(v.toLong))))
             else Nil)
-        mm || (col("col") === name &&
-          bloomExcludes(spellings, legacySpace = "ambiguous"))
+        (mm, Some(col("col") === name &&
+          bloomExcludes(spellings, legacySpace = "ambiguous")))
       }
     case t @ TimestampEquals(name, v) =>
       // Stats arms PLUS a bloom arm (r6 VERDICT ask #5): on a lake
@@ -999,19 +1154,37 @@ object StatsIndex {
       // Legacy (pre-bspace) rows were never timestamp-built (the
       // build rejected temporal bloom columns until this arm
       // existed), so the sentinel space keeps them non-excluding.
-      val mm = col("col") === name && timestampArms(t.loMicros, t.hiMicros)
-      if (t.loMicros != t.hiMicros) mm
+      val arms = timestampArms(t.loMicros, t.hiMicros)
+      val mm = (s: StatRow) => s.col == name && arms(s)
+      if (t.loMicros != t.hiMicros) (mm, None)
       else {
         val zone = java.time.ZoneId.of(
           org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
         val spellings =
           ("tsutc", xxhash64(lit(t.loMicros))) +:
             wallMicrosFor(v, zone).map(w => ("tswall", xxhash64(lit(w))))
-        mm || (col("col") === name &&
-          bloomExcludes(spellings, legacySpace = "ambiguous"))
+        (mm, Some(col("col") === name &&
+          bloomExcludes(spellings, legacySpace = "ambiguous")))
       }
     case t @ TimestampRange(name, _, _) =>
-      col("col") === name && timestampArms(t.loMicros, t.hiMicros)
+      val arms = timestampArms(t.loMicros, t.hiMicros)
+      (s => s.col == name && arms(s), None)
+  }
+
+  private def integral(s: StatRow): Boolean =
+    s.kind == "long" || s.kind == "date"
+  /** The row's long bounds prove no value in [lo, hi]. */
+  private def outLong(s: StatRow, lo: Long, hi: Long): Boolean =
+    s.lmax.exists(_ < lo) || s.lmin.exists(_ > hi)
+  private def outDouble(s: StatRow, lo: Double, hi: Double): Boolean =
+    s.dmax.exists(SQLOrderingUtil.compareDoubles(_, lo) < 0) ||
+      s.dmin.exists(SQLOrderingUtil.compareDoubles(_, hi) > 0)
+  /** A NULL probe bound compares NULL in SQL: that side never excludes. */
+  private def outString(s: StatRow, lo: String, hi: String): Boolean = {
+    def cmp(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    (lo != null && s.smax.exists(cmp(_, lo) < 0)) ||
+      (hi != null && s.smin.exists(cmp(_, hi) > 0))
   }
 
   /** Every wall-clock (micros since epoch-as-wall) that `zone`
@@ -1051,17 +1224,15 @@ object StatsIndex {
     *    pre-flavor exact/UTC-assumed semantics;
     *  - `date` stats are epoch DAYS: day-converted bounds with ±1-day
     *    slack, absorbing the same session-zone cast shift. */
-  private def timestampArms(loMicros: Long, hiMicros: Long): Column = {
+  private def timestampArms(loMicros: Long,
+      hiMicros: Long): StatRow => Boolean = {
     val md = 86400000000L // micros per day
     val tz = 50400000000L // 14 h in micros: max legal UTC offset
     val loDay = Math.floorDiv(loMicros, md) - 1L
     val hiDay = Math.floorDiv(hiMicros, md) + 1L
-    (col("kind") === "long" &&
-      (col("lmax") < loMicros || col("lmin") > hiMicros)) ||
-      (col("kind") === "tsntz" &&
-        (col("lmax") < loMicros - tz || col("lmin") > hiMicros + tz)) ||
-      (col("kind") === "date" &&
-        (col("lmax") < loDay || col("lmin") > hiDay))
+    s => (s.kind == "long" && outLong(s, loMicros, hiMicros)) ||
+      (s.kind == "tsntz" && outLong(s, loMicros - tz, hiMicros + tz)) ||
+      (s.kind == "date" && outLong(s, loDay, hiDay))
   }
 
   /** Bloom-arm exclusion over index rows: a `kind = "bloom"` row
@@ -1095,31 +1266,26 @@ object StatsIndex {
 
   /** Files whose stats intersect EVERY constraint. A file missing an
     * index row for a constrained column is kept (conservative — e.g. a
-    * column added after the index was built). Metadata-scale: the index
-    * has #files × #cols rows; the collect is the file list. */
+    * column added after the index was built). The stats arms run over
+    * the driver-side [[snapshot]]'s rows in plain Scala (no Spark
+    * job); only point probes on a column the snapshot shows bloom rows
+    * for run the bloom arm, one Spark job over the generation's
+    * parquet. */
   def prunedTyped(spark: SparkSession, indexDir: String,
       ranges: Seq[ColRange]): Seq[String] = {
-    import spark.implicits._
-    val raw = readIndex(spark, indexDir)
-    // older index generations: widen so the bloom exclusion arm
-    // analyses (a NULL filter never rules a key out; a NULL bspace is
-    // read as the probe's legacy native space)
-    val idx = Seq(
-      ("bloom", "binary"), ("bspace", "string"),
-      ("nulls", "bigint"), ("dtype", "string")).foldLeft(raw) {
-      case (df, (c, tp)) =>
-        if (df.columns.contains(c)) df
-        else df.withColumn(c, lit(null).cast(tp))
+    val snap = snapshot(spark, indexDir)
+    val arms = ranges.map(exclusion)
+    val statsOut = snap.rows.iterator
+      .filter(s => arms.exists(_._1(s))).map(_.file).toSet
+    val probes = ranges.zip(arms).collect {
+      case (r, (_, Some(bloom))) if snap.bloomCols(r.name) => bloom
     }
-    val all = idx.select(col("file")).distinct()
-    val excluded = ranges.map(r => idx.filter(exclusion(r))
-      .select(col("file"))).reduceOption(_ union _)
-    excluded match {
-      case None => all.as[String].collect().toSeq.sorted
-      case Some(ex) =>
-        all.join(ex.distinct(), Seq("file"), "left_anti")
-          .as[String].collect().toSeq.sorted
-    }
+    val bloomOut =
+      if (probes.isEmpty) Set.empty[String]
+      else widened(snap.read(spark)).filter(probes.reduce(_ || _))
+        .select(col("file")).distinct().collect().iterator
+        .map(_.getString(0)).toSet
+    snap.files.filterNot(f => statsOut(f) || bloomOut(f))
   }
 
   /** Long-box compatibility shim over [[prunedTyped]]. */
@@ -1195,12 +1361,7 @@ object StatsIndex {
       indexDir: String, ranges: Seq[ColRange]): Long = {
     require(ranges.nonEmpty, "countPruned needs at least one range")
     import spark.implicits._
-    val raw = readIndex(spark, indexDir)
-    val idx = Seq(("bloom", "binary"), ("bspace", "string"),
-      ("nulls", "bigint"), ("dtype", "string")).foldLeft(raw) { case (df, (c, tp)) =>
-      if (df.columns.contains(c)) df
-      else df.withColumn(c, lit(null).cast(tp))
-    }
+    val idx = widened(readIndex(spark, indexDir))
     val kept = prunedTyped(spark, indexDir, ranges)
     // a file is interior iff EVERY range has an index row proving
     // containment — metadata-scale set intersection. ONE job returns
@@ -1276,16 +1437,11 @@ object StatsIndex {
       indexDir: String, groupCol: String): DataFrame = {
     import spark.implicits._
     val idx = widened(readIndex(spark, indexDir))
-    val hasStr = idx.columns.contains("smin") &&
-      idx.columns.contains("smax")
     val dvOpt = DeletionVectors.vectors(spark, dataDir)
     val gRows = idx
       .filter(col("col") === groupCol && col("kind") =!= "bloom")
       .select(col("file"), col("kind"), col("lmin"), col("lmax"),
-        (if (hasStr) col("smin") else lit(null).cast("string"))
-          .as("smin"),
-        (if (hasStr) col("smax") else lit(null).cast("string"))
-          .as("smax"),
+        col("smin"), col("smax"),
         col("nulls"), col("row_count"), col("dtype"))
     // ONE recorded Spark type decides which kind proves VALUES (the
     // minMaxPruned/ADVICE-r7 rule); drift or legacy rows → all scan.
@@ -1415,17 +1571,12 @@ object StatsIndex {
       indexDir: String, groupCol: String, valueCol: String): DataFrame = {
     import spark.implicits._
     val idx = widened(readIndex(spark, indexDir))
-    val hasStr = idx.columns.contains("smin") &&
-      idx.columns.contains("smax")
     val dvOpt = DeletionVectors.vectors(spark, dataDir)
     def rowsFor(c: String, p: String) = idx
       .filter(col("col") === c && col("kind") =!= "bloom")
       .select(col("file"), col("kind").as(s"${p}kind"),
         col("lmin").as(s"${p}lmin"), col("lmax").as(s"${p}lmax"),
-        (if (hasStr) col("smin") else lit(null).cast("string"))
-          .as(s"${p}smin"),
-        (if (hasStr) col("smax") else lit(null).cast("string"))
-          .as(s"${p}smax"),
+        col("smin").as(s"${p}smin"), col("smax").as(s"${p}smax"),
         col("nulls").as(s"${p}nulls"), col("row_count").as(s"${p}rc"),
         col("dtype").as(s"${p}dtype"))
     val gRows = rowsFor(groupCol, "g_")
@@ -1573,24 +1724,27 @@ object StatsIndex {
       s"adoptClone: $cloneDir is not a shallow clone — build or " +
         "refresh its index directly")
     val committed = CommitLog.committedNames(fs, cloneDir)
-    val idxNames = indexedFiles(spark, sourceIndexDir)
-      .map(p => new Path(p).getName).toSet
+    val snap = snapshot(spark, sourceIndexDir)
+    val idxNames = snap.files.map(p => new Path(p).getName).toSet
     require(idxNames == committed,
       s"adoptClone: the source index describes a different file set " +
         s"than the clone's committed view (${(idxNames -- committed).size}" +
         s" extra, ${(committed -- idxNames).size} missing) — refresh " +
         "the source index before cloning, or build after materialize")
-    publishGeneration(spark, cloneIndexDir,
-      readIndex(spark, sourceIndexDir))
+    publishGeneration(spark, cloneIndexDir, snap.read(spark), None)
     idxNames.size
   }
 
   /** Widen older index generations to the current column set (a NULL
     * bloom never excludes; a NULL bspace reads as the probe's legacy
-    * space; NULL nulls = "null count unknown"). */
+    * space; NULL nulls = "null count unknown"; NULL string bounds =
+    * unbounded, and a pre-string generation holds no `string` rows).
+    * Every reader of an old generation goes through here, so its rows
+    * always union with freshly written ones. */
   private def widened(raw: DataFrame): DataFrame =
-    Seq(("bloom", "binary"), ("bspace", "string"),
-      ("nulls", "bigint"), ("dtype", "string")).foldLeft(raw) { case (df, (c, tp)) =>
+    Seq(("smin", "string"), ("smax", "string"), ("bloom", "binary"),
+      ("bspace", "string"), ("nulls", "bigint"), ("dtype", "string"))
+      .foldLeft(raw) { case (df, (c, tp)) =>
       if (df.columns.contains(c)) df
       else df.withColumn(c, lit(null).cast(tp))
     }
@@ -1599,11 +1753,8 @@ object StatsIndex {
     * list DML uses to decide whether the index is CURRENT (its file
     * set matches the committed view) before trusting it for
     * touched-file discovery. */
-  def indexedFiles(spark: SparkSession, indexDir: String): Seq[String] = {
-    import spark.implicits._
-    widened(readIndex(spark, indexDir)).select(col("file")).distinct()
-      .as[String].collect().toSeq.sorted
-  }
+  def indexedFiles(spark: SparkSession, indexDir: String): Seq[String] =
+    snapshot(spark, indexDir).files
 
   /** [[refresh]] with the column sets DERIVED from the index itself
     * (stat columns = non-bloom rows, bloom columns = bloom rows) — for
@@ -1615,13 +1766,12 @@ object StatsIndex {
   def refreshSameColumns(spark: SparkSession, dataDir: String,
       indexDir: String, bloomItems: Long = 1000000L,
       bloomFpp: Double = 0.03): (Int, Int) = {
-    import spark.implicits._
-    val idx = widened(readIndex(spark, indexDir))
-    val cols = idx.filter(col("kind") =!= "bloom")
-      .select(col("col")).distinct().as[String].collect().toSeq.sorted
-    val blooms = idx.filter(col("kind") === "bloom")
-      .select(col("col")).distinct().as[String].collect().toSeq.sorted
-    refresh(spark, dataDir, cols, indexDir, blooms, bloomItems, bloomFpp)
+    val snap = snapshot(spark, indexDir)
+    require(snap.typed, s"refreshSameColumns: $indexDir is a v1 " +
+      "(untyped) index and records no column set — rebuild it with build")
+    val (blooms, stats) = snap.rows.partition(_.kind == "bloom")
+    refresh(spark, dataDir, stats.map(_.col).distinct.sorted, indexDir,
+      blooms.map(_.col).distinct.sorted, bloomItems, bloomFpp)
   }
 
   /** DISJUNCTIVE key-set pruning — the file-skipping half of dynamic
@@ -1649,16 +1799,33 @@ object StatsIndex {
     * rows no arm can read) are kept — the same conservative contract
     * as every other prune path.
     *
+    * When the snapshot shows no bloom row for the column, only the
+    * min/max arms can exclude, and they are decided on the driver from
+    * the [[snapshot]] with no Spark job ([[keptByRuns]]).
+    *
     * An EMPTY key set returns no files: the inner join it serves is
     * empty by definition. */
   def prunedForKeys(spark: SparkSession, indexDir: String,
       column: String, keys: Seq[Long]): Seq[String] = {
     import spark.implicits._
     if (keys.isEmpty) return Seq.empty
-    val idx = widened(readIndex(spark, indexDir))
-    val all = idx.select(col("file")).distinct()
-    val rows = idx.filter(col("col") === column)
+    val snap = snapshot(spark, indexDir)
     val ks = keys.distinct
+    if (!snap.bloomCols(column)) {
+      val sorted = ks.sorted.toArray
+      return keptByRuns(snap, column, sorted.length) { (r, first) =>
+        r.kind match {
+          case "long" | "date" => (
+            r.lmin.fold(0)(lo => first(sorted(_) >= lo)),
+            r.lmax.fold(sorted.length)(hi => first(sorted(_) > hi)))
+          case "double" => (
+            r.dmin.fold(0)(lo => first(sorted(_).toDouble >= lo)),
+            r.dmax.fold(sorted.length)(hi => first(sorted(_).toDouble > hi)))
+          case _ => (0, sorted.length)
+        }
+      }
+    }
+    val rows = widened(snap.read(spark)).filter(col("col") === column)
     // the key frame carries a positional index so the bloom arm's
     // per-row mask (probed in key order) joins back to its key
     val kdf = broadcast(ks.zipWithIndex.map { case (k, i) => (i, k) }
@@ -1698,13 +1865,48 @@ object StatsIndex {
       .select(col("file"), col("kidx"),
         (col("miss") && (coalesce(col("bspace"), lit("long")) === "long" ||
           col("k") =!= 0L)).as("re"))
-    val excluded = stats.unionByName(bloomArm)
-      .groupBy(col("file"), col("kidx"))
+    allAbsent(snap, stats.unionByName(bloomArm))
+  }
+
+  /** The files of `snap` not excluded by `perKey` — (file, kidx, re)
+    * rows, `re` = "this row proves key kidx absent from the file": a
+    * file goes when EVERY key is proven absent by some row. One Spark
+    * job, the set difference on the driver. */
+  private def allAbsent(snap: Snapshot, perKey: DataFrame): Seq[String] = {
+    val out = perKey.groupBy(col("file"), col("kidx"))
       .agg(max(col("re")).as("keyAbsent"))
       .groupBy(col("file")).agg(min(col("keyAbsent")).as("allAbsent"))
       .filter(col("allAbsent")).select(col("file"))
-    all.join(excluded, Seq("file"), "left_anti")
-      .as[String].collect().toSeq.sorted
+      .collect().iterator.map(_.getString(0)).toSet
+    snap.files.filterNot(out)
+  }
+
+  /** Key-set pruning by the min/max arms alone, on the driver: each
+    * stats row of `column` admits one contiguous run [a, b) of the n
+    * sorted keys (`run` gets the row and a binary search for the first
+    * index where a monotone predicate holds), a file admits the
+    * intersection of its rows' runs and is kept when that is nonempty.
+    * A file with no row for the column admits every key. Equivalent
+    * to the per-(row, key) comparisons of the planned form: a row
+    * excludes exactly the keys outside its bounds. */
+  private def keptByRuns(snap: Snapshot, column: String, n: Int)(
+      run: (StatRow, (Int => Boolean) => Int) => (Int, Int)): Seq[String] = {
+    def first(p: Int => Boolean): Int = {
+      var (lo, hi) = (0, n)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (p(mid)) hi = mid else lo = mid + 1
+      }
+      lo
+    }
+    val runs = scala.collection.mutable.HashMap.empty[String, (Int, Int)]
+    snap.rows.iterator.filter(r => r.col == column && r.kind != "bloom")
+      .foreach { r =>
+        val (a, b) = run(r, first)
+        val (a0, b0) = runs.getOrElse(r.file, (0, n))
+        runs(r.file) = (math.max(a0, a), math.min(b0, b))
+      }
+    snap.files.filter(f => runs.get(f).forall { case (a, b) => a < b })
   }
 
   /** xxhash64 of one value, evaluated driver-side through the SAME
@@ -1749,10 +1951,24 @@ object StatsIndex {
       column: String, keys: Seq[String]): Seq[String] = {
     import spark.implicits._
     if (keys.isEmpty) return Seq.empty
-    val idx = widened(readIndex(spark, indexDir))
-    val all = idx.select(col("file")).distinct()
-    val rows = idx.filter(col("col") === column)
+    val snap = snapshot(spark, indexDir)
     val ks = keys.distinct
+    if (!snap.bloomCols(column)) {
+      // a NULL key compares NULL against every bound: no row excludes it
+      if (ks.contains(null)) return snap.files
+      // Spark's string order is UTF8String's (UTF-8 byte order)
+      val sorted = ks.map(UTF8String.fromString).sortWith(_.compareTo(_) < 0)
+        .toArray
+      return keptByRuns(snap, column, sorted.length) { (r, first) =>
+        if (r.kind != "string") (0, sorted.length)
+        else (
+          r.smin.map(UTF8String.fromString)
+            .fold(0)(lo => first(sorted(_).compareTo(lo) >= 0)),
+          r.smax.map(UTF8String.fromString)
+            .fold(sorted.length)(hi => first(sorted(_).compareTo(hi) > 0)))
+      }
+    }
+    val rows = widened(snap.read(spark)).filter(col("col") === column)
     val kdf = broadcast(ks.zipWithIndex.map { case (k, i) => (i, k) }
       .toDF("kidx", "k"))
     // STATS arm: truncated string bounds × keys — scalar comparisons
@@ -1769,8 +1985,7 @@ object StatsIndex {
     // value no real spelling hashes to… no sentinel exists, so
     // instead the mask element is neutralized after the explode via
     // the per-key validity flags carried on the key frame.
-    val hString = ks.map(k => driverHash(
-      org.apache.spark.unsafe.types.UTF8String.fromString(k), StringType))
+    val hString = ks.map(k => driverHash(UTF8String.fromString(k), StringType))
     val longOk = ks.map(_.toLongOption
       .exists(l => l > -9007199254740992L && l < 9007199254740992L))
     val hLong = ks.zip(longOk).map { case (k, ok) =>
@@ -1794,13 +2009,7 @@ object StatsIndex {
           coalesce(col("bspace"), lit("string")) === "string" ||
           (col("bspace") === "long" && col("lok")) ||
           (col("bspace") === "double" && col("dok")))).as("re"))
-    val excluded = stats.unionByName(bloomArm)
-      .groupBy(col("file"), col("kidx"))
-      .agg(max(col("re")).as("keyAbsent"))
-      .groupBy(col("file")).agg(min(col("keyAbsent")).as("allAbsent"))
-      .filter(col("allAbsent")).select(col("file"))
-    all.join(excluded, Seq("file"), "left_anti")
-      .as[String].collect().toSeq.sorted
+    allAbsent(snap, stats.unionByName(bloomArm))
   }
 
   /** String-key variant of [[readPrunedForKeys]]. */

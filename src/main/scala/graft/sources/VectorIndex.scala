@@ -603,9 +603,12 @@ object VectorIndex {
     // index writer published meanwhile, composing over the stale one
     // would silently drop that writer's segment references (the lost
     // update). Conflict = the live pointer moved; loud, retryable.
+    // The lock lives on the lake's filesystem and the generation on
+    // the index's; the two may differ (another scheme or bucket).
     val fs = fsOf(spark, lakeDir)
+    val ifs = fsOf(spark, indexDir)
     CommitLog.withWriterLock(fs, lakeDir, waitMs = 30000L) {
-      val liveNow = readPointer(fs, new Path(indexDir))
+      val liveNow = readPointer(ifs, new Path(indexDir))
       if (!liveNow.contains(gen.getName))
         throw new StaleVectorIndexException(
           s"vector index $indexDir was republished (now " +
@@ -629,8 +632,8 @@ object VectorIndex {
             s"${if (retiredNow.size > 3) ", …" else ""}) — rebuild the " +
             "index")
       publishGeneration(spark, indexDir) { out =>
-        fs.mkdirs(out)
-        writeGeneration(fs, out, meta.centsDir, segments,
+        ifs.mkdirs(out)
+        writeGeneration(ifs, out, meta.centsDir, segments,
           meta.codebookDir, current, p,
           extraParams = driftParams(base, freshMean))
       }
@@ -656,8 +659,9 @@ object VectorIndex {
     // same commit-section discipline as refresh: the fold must not
     // publish over a generation it did not read
     val fs = fsOf(spark, lakeDir)
+    val ifs = fsOf(spark, indexDir)
     CommitLog.withWriterLock(fs, lakeDir, waitMs = 30000L) {
-      val liveNow = readPointer(fs, new Path(indexDir))
+      val liveNow = readPointer(ifs, new Path(indexDir))
       if (!liveNow.contains(gen.getName))
         throw new StaleVectorIndexException(
           s"vector index $indexDir was republished while this fold " +
@@ -674,8 +678,8 @@ object VectorIndex {
       publishGeneration(spark, indexDir) { out =>
         // a fold is a pure reshuffle — the drift state and the
         // centroid/codebook references ride along
-        fs.mkdirs(out)
-        writeGeneration(fs, out, meta.centsDir, Seq(folded),
+        ifs.mkdirs(out)
+        writeGeneration(ifs, out, meta.centsDir, Seq(folded),
           meta.codebookDir, files, p,
           extraParams = meta.paramsMap.toSeq
             .filter(_._1.startsWith("drift")).sortBy(_._1))

@@ -1,12 +1,7 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.ml.feature.{PCAModel, StandardScalerModel}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.ml.MlPipelines
@@ -58,34 +53,6 @@ class ScalerPcaSpec extends SparkSpec {
       assert(math.abs(g - w) <= tol * math.abs(w),
         s"$what($i): got $g, Spark $w")
     }
-
-  /** Spark's job count for `body`, from job-start events carrying a tag. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.spec.job"))).getOrElse(""))
-    }
-    def tagged(t: String)(run: => Unit): Unit = {
-      sc.setLocalProperty("graft.spec.job", t)
-      try run finally sc.setLocalProperty("graft.spec.job", null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      tagged(tag)(body)
-      // events reach a listener in order: once the sentinel's start is
-      // seen, every job of `body` has been counted
-      tagged(s"$tag-end")(sc.parallelize(Seq(1), 1).count(): Unit)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "listener never saw the sentinel")
-      seen.asScala.count(_ == tag)
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the scaler matches StandardScaler.fit on std and mean, for dense " +
     "and sparse rows") {

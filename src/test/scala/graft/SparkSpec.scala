@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +12,34 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
+
+  /** Spark's job count for `body`, from job-start events carrying a tag. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.spec.job"))).getOrElse(""))
+    }
+    def tagged(t: String)(run: => Unit): Unit = {
+      sc.setLocalProperty("graft.spec.job", t)
+      try run finally sc.setLocalProperty("graft.spec.job", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      // events reach a listener in order: once the sentinel's start is
+      // seen, every job of `body` has been counted
+      tagged(s"$tag-end")(sc.parallelize(Seq(1), 1).count(): Unit)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$tag-end"), "listener never saw the sentinel")
+      seen.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

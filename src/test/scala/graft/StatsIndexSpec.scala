@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{StatsIndex, ZOrder}
@@ -1709,5 +1710,292 @@ class StatsIndexSpec extends SparkSpec {
       assert(got == want,
         s"seed $seed (kind=$kind vDate=$vDate): $got vs $want")
     }
+  }
+
+  test("a warm snapshot answers indexedFiles, range/point prunes and " +
+    "key-set prunes with zero Spark jobs") {
+    val idx = s"$base/idx"
+    val all = StatsIndex.indexedFiles(spark, idx)
+    var ranged, point, keyed: Seq[String] = Nil
+    val jobs = jobsOf {
+      assert(StatsIndex.indexedFiles(spark, idx) == all)
+      ranged = StatsIndex.prunedTyped(spark, idx, Seq(
+        StatsIndex.LongRange("x", 100L, 160L),
+        StatsIndex.DoubleRange("y", 200.5, 260.0)))
+      point = StatsIndex.prunedTyped(spark, idx,
+        Seq(StatsIndex.LongEquals("x", 77L)))
+      keyed = StatsIndex.prunedForKeys(spark, idx, "x", Seq(5L, 900L))
+    }
+    assert(jobs == 0, s"warm prunes ran $jobs Spark jobs")
+    assert(ranged.nonEmpty && ranged.size < all.size)
+    assert(point.nonEmpty && point.size < all.size)
+    assert(keyed.nonEmpty && keyed.size < all.size)
+  }
+
+  test("refresh adding one file to a bloom-less index runs at most 2 " +
+    "jobs and seeds a snapshot equal to the generation it wrote") {
+    val dir = Files.createTempDirectory("graft_sidx_r2_").toString
+    val mk = (lo: Long) => spark.range(lo, lo + 500).select(
+      col("id").as("x"), (col("id") * 0.5).as("d"),
+      concat(lit("s"), col("id").cast("string")).as("s"))
+    mk(0L).coalesce(1).write.parquet(s"$dir/data")
+    mk(1000L).coalesce(1).write.mode("append").parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("x", "d", "s"), s"$dir/idx")
+    mk(5000L).coalesce(1).write.mode("append").parquet(s"$dir/data")
+    val jobs = jobsOf {
+      assert(StatsIndex.refresh(spark, s"$dir/data", Seq("x", "d", "s"),
+        s"$dir/idx") == ((1, 0)))
+    }
+    assert(jobs <= 2, s"one-file refresh ran $jobs Spark jobs")
+    val snap = StatsIndex.snapshot(spark, s"$dir/idx")
+    // StatRow's fields in order, Options as nullable values
+    val held = snap.rows.map(_.productIterator.map {
+      case o: Option[_] => o.getOrElse(null)
+      case x => x
+    }.toSeq).toSet
+    val written = StatsIndex.readIndex(spark, s"$dir/idx")
+      .select("file", "row_count", "col", "kind", "lmin", "lmax", "dmin",
+        "dmax", "smin", "smax", "nulls", "dtype", "bspace")
+      .collect().map(_.toSeq).toSet
+    assert(held == written)
+    assert(snap.files.size == 3 && snap.rows.size == 9)
+    assert(StatsIndex.prunedTyped(spark, s"$dir/idx",
+      Seq(StatsIndex.LongRange("x", 5100L, 5200L))).size == 1)
+  }
+
+  test("driver-side key-set pruning equals the per-(row, key) SQL arms " +
+    "on random long, double and truncated-string layouts") {
+    val dir = Files.createTempDirectory("graft_sidx_keys_").toString
+    // strings track k, so files are clustered on all three columns;
+    // every 7th value carries a >64-char multibyte tail, so string
+    // bounds are truncated (prefix min, incremented or open max)
+    spark.range(3000).select(
+      col("id").as("k"), (col("id") * 0.5 - 100.0).as("d"),
+      concat(lpad((col("id") / 3).cast("long").cast("string"), 5, "0"),
+        when(col("id") % 7 === 0,
+          lit("x" * 70 + "\u00e9\ud83d\ude00")).otherwise(lit("")))
+        .as("s"))
+      .repartitionByRange(6, col("k"))
+      .write.parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("k", "d", "s"), s"$dir/idx")
+    val idx = StatsIndex.readIndex(spark, s"$dir/idx")
+    val all = idx.select(col("file")).distinct()
+    def oracle(column: String, keys: DataFrame, excl: Column): Set[String] = {
+      val out = idx.filter(col("col") === column && col("kind") =!= "bloom")
+        .crossJoin(keys).withColumn("re", coalesce(excl, lit(false)))
+        .groupBy(col("file"), col("k")).agg(max(col("re")).as("a"))
+        .groupBy(col("file")).agg(min(col("a")).as("all"))
+        .filter(col("all")).select(col("file"))
+      all.join(out, Seq("file"), "left_anti").collect()
+        .map(_.getString(0)).toSet
+    }
+    val numExcl =
+      (col("kind").isin("long", "date") &&
+        (col("lmax") < col("k") || col("lmin") > col("k"))) ||
+        (col("kind") === "double" && (col("dmax") < col("k").cast("double") ||
+          col("dmin") > col("k").cast("double")))
+    val strExcl = col("kind") === "string" &&
+      (col("smax") < col("k") || col("smin") > col("k"))
+    val strings = spark.read.parquet(s"$dir/data").select(col("s"))
+      .collect().map(_.getString(0))
+    val rnd = new scala.util.Random(4711)
+    (1 to 12).foreach { trial =>
+      val n = 1 + rnd.nextInt(6)
+      val longs = Seq.fill(n)(rnd.nextInt(5) match {
+        case 0 => rnd.nextLong(6000L) - 1500L // in, around and out of range
+        case 1 => (rnd.nextInt(6) * 500).toLong // near file edges
+        case _ => rnd.nextLong(3000L)
+      })
+      val strs = Seq.fill(n)(rnd.nextInt(4) match {
+        case 0 => strings(rnd.nextInt(strings.length))
+        case 1 => strings(rnd.nextInt(strings.length)).take(64)
+        case 2 => f"${rnd.nextInt(1100)}%05d"
+        case _ => f"${rnd.nextInt(1000)}%05d" + "x" * 70 + "\uffff"
+      })
+      val lk = longs.toDF("k")
+      Seq("k", "d").foreach { c =>
+        assert(StatsIndex.prunedForKeys(spark, s"$dir/idx", c, longs).toSet ==
+          oracle(c, lk, numExcl), s"trial $trial column $c keys $longs")
+      }
+      assert(StatsIndex.prunedForKeysString(spark, s"$dir/idx", "s", strs)
+        .toSet == oracle("s", strs.toDF("k"), strExcl),
+        s"trial $trial strings $strs")
+    }
+  }
+
+  test("bloom rows stay in parquet: the snapshot holds their rows " +
+    "without the filter bytes, and the bloom arm still prunes") {
+    val dir = Files.createTempDirectory("graft_sidx_bsnap_").toString
+    spark.range(9000).selectExpr("id AS k", "xxhash64(id) % 3 AS b")
+      .repartition(3, col("b")).drop("b").write.parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("k"), s"$dir/idx",
+      bloomCols = Seq("k"), bloomItems = 10000, bloomFpp = 0.001)
+    val snap = StatsIndex.snapshot(spark, s"$dir/idx")
+    assert(!classOf[StatsIndex.StatRow].getDeclaredFields
+      .exists(_.getName == "bloom"))
+    assert(snap.rows.count(_.kind == "bloom") == 3)
+    assert(snap.bloomCols == Set("k"))
+    // every file spans the key range: only the bloom arm can prune
+    val kept = StatsIndex.prunedTyped(spark, s"$dir/idx",
+      Seq(StatsIndex.LongEquals("k", 4242L)))
+    assert(kept.size == 1, s"bloom point probe kept ${kept.size} of 3")
+    assert(spark.read.parquet(kept: _*).filter(col("k") === 4242L)
+      .count() == 1L)
+  }
+
+  test("a bloom generation written before string bounds (no smin/smax " +
+    "columns) refreshes, unchanged or shrunk, and still prunes") {
+    val dir = Files.createTempDirectory("graft_sidx_nostr_").toString
+    spark.range(9000).selectExpr("id AS k", "xxhash64(id) % 3 AS b")
+      .repartition(3, col("b")).drop("b").write.parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("k"), s"$dir/idx",
+      bloomCols = Seq("k"), bloomItems = 10000, bloomFpp = 0.001)
+    // the same rows in the pre-string layout: a flat generation
+    StatsIndex.readIndex(spark, s"$dir/idx").drop("smin", "smax")
+      .coalesce(1).write.parquet(s"$dir/old")
+    assert(StatsIndex.refresh(spark, s"$dir/data", Seq("k"), s"$dir/old",
+      bloomCols = Seq("k")) == ((0, 0)))
+    val gone = StatsIndex.indexedFiles(spark, s"$dir/old").head
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(gone), false))
+    assert(StatsIndex.refresh(spark, s"$dir/data", Seq("k"), s"$dir/old",
+      bloomCols = Seq("k")) == ((0, 1)))
+    val live = spark.read.parquet(s"$dir/data")
+    val k = live.select(col("k")).head().getLong(0)
+    val kept = StatsIndex.prunedTyped(spark, s"$dir/old",
+      Seq(StatsIndex.LongEquals("k", k)))
+    assert(kept.size == 1 && kept.head != gone)
+    assert(StatsIndex.readIndex(spark, s"$dir/old")
+      .filter(col("kind") === "bloom").count() == 2)
+  }
+
+  test("driver-side stats arms exclude exactly the files the SQL arms " +
+    "over the index rows exclude, on random ranges of every kind") {
+    val dir = Files.createTempDirectory("graft_sidx_arms_").toString
+    // clustered on every column; d has NULLs, dt is a date, t an instant
+    spark.range(3000).select(
+      col("id").as("k"),
+      when(col("id") % 11 === 0, lit(null))
+        .otherwise(col("id") * 0.5 - 100.0).as("d"),
+      lpad((col("id") / 3).cast("long").cast("string"), 5, "0").as("s"),
+      expr("date_add(DATE'2020-01-01', CAST(id AS INT))").as("dt"),
+      expr("timestamp_micros(id * 3600000000)").as("t"))
+      .repartitionByRange(6, col("k")).write.parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("k", "d", "s", "dt", "t"),
+      s"$dir/idx")
+    val idx = StatsIndex.readIndex(spark, s"$dir/idx")
+    val all = StatsIndex.indexedFiles(spark, s"$dir/idx").toSet
+    def kind(ks: String*) = col("kind").isin(ks: _*)
+    def outL(lo: Long, hi: Long) = col("lmax") < lo || col("lmin") > hi
+    def outD(lo: Double, hi: Double) = col("dmax") < lo || col("dmin") > hi
+    def ts(lo: Long, hi: Long) = {
+      val (md, tz) = (86400000000L, 50400000000L)
+      (kind("long") && outL(lo, hi)) ||
+        (kind("tsntz") && outL(lo - tz, hi + tz)) ||
+        (kind("date") && outL(Math.floorDiv(lo, md) - 1,
+          Math.floorDiv(hi, md) + 1))
+    }
+    def clamp(x: Double): Long =
+      if (x <= Long.MinValue.toDouble) Long.MinValue
+      else if (x >= Long.MaxValue.toDouble) Long.MaxValue else x.toLong
+    // the SQL form of each range's stats arms
+    def sqlArm(r: StatsIndex.ColRange): Column = col("col") === r.name && (
+      r match {
+        case StatsIndex.LongRange(_, lo, hi) =>
+          (kind("long", "date") && outL(lo, hi)) || (kind("double") &&
+            outD(Math.nextDown(lo.toDouble), Math.nextUp(hi.toDouble)))
+        case StatsIndex.LongEquals(_, v) =>
+          sqlArm(StatsIndex.LongRange(r.name, v, v))
+        case StatsIndex.DoubleRange(_, lo, hi) =>
+          (kind("double") && outD(lo, hi)) || (kind("long", "date") &&
+            outL(clamp(math.ceil(lo)), clamp(math.floor(hi))))
+        case StatsIndex.DoubleEquals(_, v) =>
+          (kind("double") && outD(v, v)) || (kind("long", "date") &&
+            (if (v == math.rint(v)) outL(v.toLong, v.toLong) else lit(true)))
+        case StatsIndex.StringRange(_, lo, hi) =>
+          kind("string") && (col("smax") < lo || col("smin") > hi)
+        case StatsIndex.StringEquals(_, v) =>
+          kind("string") && (col("smax") < v || col("smin") > v)
+        case t: StatsIndex.TimestampRange => ts(t.loMicros, t.hiMicros)
+        case t: StatsIndex.TimestampEquals => ts(t.loMicros, t.hiMicros)
+      })
+    // half the probe values sit on a file's k bound or next to it, so
+    // the strict/inclusive edge of every comparison is exercised
+    val edges = idx.filter(col("col") === "k")
+      .select(explode(array(col("lmin"), col("lmax")))).collect()
+      .map(_.getLong(0))
+    val rnd = new scala.util.Random(2718)
+    def lng(): Long =
+      if (rnd.nextBoolean()) edges(rnd.nextInt(edges.length)) + rnd.nextInt(3) - 1
+      else rnd.nextLong(4000L) - 500L
+    def inst(): java.time.Instant =
+      java.time.Instant.ofEpochSecond(lng() * 3600L, rnd.nextInt(3) * 500L)
+    def str(): String = f"${lng() / 3}%05d" + (if (rnd.nextBoolean()) "z" else "")
+    def range(): StatsIndex.ColRange = {
+      val (a, b) = (lng(), lng())
+      val (lo, hi) = (math.min(a, b), math.max(a, b))
+      rnd.nextInt(12) match {
+        case 0 => StatsIndex.LongRange("k", lo, hi)
+        case 1 => StatsIndex.LongRange("d", lo, hi / 4)
+        case 2 => StatsIndex.LongRange("dt", 18262L + lo, 18262L + hi)
+        case 3 => StatsIndex.DoubleRange("d", lo * 0.5 - 100.0, hi * 0.5 - 100.0)
+        case 4 => StatsIndex.DoubleRange("k", lo + 0.5, hi - 0.25)
+        case 5 => StatsIndex.LongEquals(if (rnd.nextBoolean()) "k" else "d", lo)
+        case 6 => StatsIndex.DoubleEquals(if (rnd.nextBoolean()) "k" else "d",
+          if (rnd.nextBoolean()) lo.toDouble else lo + 0.5)
+        case 7 =>
+          val (x, y) = (str(), str())
+          StatsIndex.StringRange("s", Seq(x, y).min, Seq(x, y).max)
+        case 8 => StatsIndex.StringEquals("s", str())
+        case 9 =>
+          val (x, y) = (inst(), inst())
+          StatsIndex.TimestampRange(if (rnd.nextBoolean()) "t" else "dt",
+            Seq(x, y).min, Seq(x, y).max)
+        case 10 => StatsIndex.TimestampEquals("t", inst())
+        case _ => StatsIndex.LongRange("missing", lo, hi)
+      }
+    }
+    var pruning = 0
+    (1 to 60).foreach { trial =>
+      val ranges = Seq.fill(1 + rnd.nextInt(2))(range())
+      val out = idx.filter(ranges.map(sqlArm).reduce(_ || _))
+        .select(col("file")).collect().map(_.getString(0)).toSet
+      val got = StatsIndex.prunedTyped(spark, s"$dir/idx", ranges).toSet
+      assert(got == all -- out, s"trial $trial: $ranges")
+      if (got.size < all.size) pruning += 1
+    }
+    assert(pruning >= 30, s"only $pruning of 60 trials pruned anything")
+  }
+
+  test("listData walks exactly the files a recursive listFiles found: " +
+    "sidecar dirs and hidden files skipped, partition dirs walked") {
+    val dir = Files.createTempDirectory("graft_sidx_walk_").toString
+    val one = spark.range(10).toDF("x").coalesce(1)
+    Seq("", "/p=1", "/p=2/q=a", "/_dv", "/_graft_log", "/.occ-stage1",
+      "/p=1/_tmp").foreach(sub => one.write.parquet(s"$dir/lake$sub"))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a hidden leaf name and a non-parquet file beside the data
+    Files.write(java.nio.file.Paths.get(s"$dir/lake/p=1/.hidden.parquet"),
+      Array[Byte](1))
+    Files.write(java.nio.file.Paths.get(s"$dir/lake/notes.txt"),
+      Array[Byte](1))
+    // the listing the index used before: listFiles(recursive) + a
+    // file is hidden when any segment below the root starts _ or .
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(s"$dir/lake"))
+    val it = fs.listFiles(root, true)
+    val before = Seq.newBuilder[String]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      val segs = Iterator.iterate(p)(_.getParent)
+        .takeWhile(q => q != null && q != root).map(_.getName)
+      if (p.getName.endsWith(".parquet") &&
+          !segs.exists(n => n.startsWith("_") || n.startsWith(".")))
+        before += p.toString
+    }
+    val want = before.result().sorted
+    assert(want.size == 3, want.toString) // root part, p=1, p=2/q=a
+    assert(StatsIndex.listData(spark, s"$dir/lake") == want)
   }
 }

@@ -123,4 +123,38 @@ class StatsIndexSwapSpec extends SparkSpec {
     assert(gens.size <= 2, s"stale generations not swept: $gens")
     assert(StatsIndex.prunedFiles(spark, s"$dir/idx", Nil).size == 2)
   }
+
+  test("the driver-side snapshot follows the index across a rebuild " +
+    "at the same path and across publishes by other writers") {
+    val dir = Files.createTempDirectory("graft_swap_snap_").toString
+    mk(0, 1000).coalesce(1).write.parquet(s"$dir/a")
+    mk(5000, 1000).coalesce(1).write.parquet(s"$dir/b")
+    mk(9000, 1000).coalesce(1).write.parquet(s"$dir/c")
+    def dataFiles(d: String) = StatsIndex.listData(spark, d)
+    val idx = s"$dir/idx"
+    StatsIndex.build(spark, s"$dir/a", Seq("x"), idx)
+    assert(StatsIndex.indexedFiles(spark, idx) == dataFiles(s"$dir/a"))
+    // delete the index dir and build another one at the same path: the
+    // new generation is v00001 again, with different part files
+    fs(dir).delete(new Path(idx), true)
+    StatsIndex.build(spark, s"$dir/b", Seq("x"), s"$dir/other")
+    fs(dir).mkdirs(new Path(idx))
+    org.apache.hadoop.fs.FileUtil.copy(fs(dir), new Path(s"$dir/other/v00001"),
+      fs(dir), new Path(s"$idx/v00001"), false,
+      spark.sparkContext.hadoopConfiguration)
+    org.apache.hadoop.fs.FileUtil.copy(fs(dir), new Path(s"$dir/other/CURRENT"),
+      fs(dir), new Path(s"$idx/CURRENT"), false,
+      spark.sparkContext.hadoopConfiguration)
+    assert(pointer(idx) == "v00001")
+    assert(StatsIndex.indexedFiles(spark, idx) == dataFiles(s"$dir/b"))
+    assert(StatsIndex.prunedTyped(spark, idx,
+      Seq(StatsIndex.LongRange("x", 5100L, 5200L))) == dataFiles(s"$dir/b"))
+    assert(StatsIndex.prunedTyped(spark, idx,
+      Seq(StatsIndex.LongRange("x", 100L, 200L))).isEmpty)
+    // a publish through a second session is seen by the first
+    val other = spark.newSession()
+    StatsIndex.build(other, s"$dir/c", Seq("x"), idx)
+    assert(pointer(idx) == "v00002")
+    assert(StatsIndex.indexedFiles(spark, idx) == dataFiles(s"$dir/c"))
+  }
 }

@@ -192,6 +192,32 @@ class VectorIndexSpec extends SparkSpec {
         f.listStatus(segRoot).length}")
   }
 
+  test("refresh and compactSegments publish through the INDEX's " +
+    "filesystem when the index lives on another scheme than the lake") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftalt.impl", classOf[AltSchemeFs].getName)
+    conf.set("fs.AbstractFileSystem.graftalt.impl",
+      classOf[AltSchemeAfs].getName)
+    val third = emb.count() / 3
+    val (lake, localIdx) = mkLake(emb.filter(col("vec_id") < third))
+    // the same local directory, reached only through the second scheme
+    val idx = s"graftalt://$localIdx"
+    VectorIndex.build(spark, lake, idx)
+    assert(Occ.append(spark, lake, emb.filter(
+      col("vec_id") >= third && col("vec_id") < 2 * third)) > 0L)
+    assert(VectorIndex.refresh(spark, lake, idx)._1 > 0)
+    assert(Occ.append(spark, lake,
+      emb.filter(col("vec_id") >= 2 * third)) > 0L)
+    assert(VectorIndex.refresh(spark, lake, idx)._1 > 0)
+    val before = pairs(
+      VectorIndex.query(spark, lake, idx, qvec, k = 10, probes = 4))
+    assert(VectorIndex.compactSegments(spark, lake, idx) == 3)
+    assert(pairs(VectorIndex.query(spark, lake, idx, qvec, k = 10,
+      probes = 4)) == before)
+    // the generations landed in the index's own directory
+    assert(new java.io.File(localIdx, "CURRENT").isFile)
+  }
+
   test("two refreshes racing: the loser's commit section detects the " +
     "republish and fails LOUDLY instead of silently dropping the " +
     "winner's segment references; the retry converges") {
@@ -345,3 +371,20 @@ class VectorIndexSpec extends SparkSpec {
       s"stored trained-centroid recall@10 = ${r.getDouble(2)}")
   }
 }
+
+/** The local filesystem under a second scheme, `graftalt:` — enough to
+  * put a lake and its index on two different Hadoop filesystems in one
+  * process. Registered per spec through `fs.graftalt.impl` (and the
+  * `FileContext` twin, used by the pointer rename). */
+class AltSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = AltSchemeFs.Uri
+  override def getScheme: String = "graftalt"
+}
+
+object AltSchemeFs {
+  val Uri: java.net.URI = java.net.URI.create("graftalt:///")
+}
+
+class AltSchemeAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri, new AltSchemeFs,
+      conf, "graftalt", false)
