@@ -1,11 +1,6 @@
 package graft.bench
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SizeEstimator
@@ -32,7 +27,7 @@ import graft.sources.StatsIndex
   * snapshot on the driver". */
 object StatsSnapshotScale {
 
-  import BenchUtil.{rmrf, secs}
+  import BenchUtil.{jobsOf, rmrf, secs}
 
   def main(args: Array[String]): Unit = {
     val files = args.lift(0).map(_.toInt).getOrElse(100000)
@@ -94,26 +89,5 @@ object StatsSnapshotScale {
       f"warm_jobs=$jobs")
     rmrf(root)
     spark.stop()
-  }
-
-  /** Spark jobs started by `body`, counted by a listener; a tagged
-    * sentinel job marks the end, since events arrive asynchronously. */
-  private def jobsOf(spark: SparkSession)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val seen = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("probe.job"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("probe.job", "end")
-      try sc.parallelize(Seq(1), 1).count() finally
-        sc.setLocalProperty("probe.job", null)
-      while (!seen.contains("end")) Thread.sleep(10)
-      seen.asScala.count(_ == "")
-    } finally sc.removeSparkListener(listener)
   }
 }

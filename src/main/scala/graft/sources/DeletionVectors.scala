@@ -32,9 +32,15 @@ import org.apache.spark.sql.functions._
   * checkpoint rename nothing changed; after it, both halves are live.
   *
   * [[readMor]] is the read surface: the committed view anti-joined
-  * against the covered vector set on `(file name, row position)` —
-  * the DV side is tiny, so AQE broadcasts it and the plan is one scan
-  * + one broadcast anti-join. [[compact]] applies the vectors
+  * against the covered vector set on `(file name, row position)`.
+  * Both halves are resolved on the driver from [[FileMemo]], keyed by
+  * write-once file identity: the read schema from memoized footer
+  * schemas (no inference job) and the vector set as a local frame of
+  * memoized sidecar pairs, which the join broadcasts with one job that
+  * reads nothing. A warm read therefore runs that broadcast and the
+  * query's own scan jobs only; a vector set above
+  * `spark.sql.autoBroadcastJoinThreshold` stays a distributed sidecar
+  * read + distinct. [[compact]] applies the vectors
   * physically (rewrites ONLY files that carry DV rows, drops `_dv`),
   * returning the lake to plain-files state.
   *
@@ -134,11 +140,7 @@ object DeletionVectors {
       : Option[DataFrame] = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val covered = coveredDvFiles(fs, lakeDir)
-    if (covered.isEmpty) None
-    else Some(spark.read
-      .parquet(resolveDvPaths(fs, lakeDir, covered): _*)
-      .select(col("file"), col("pos")).distinct())
+    vectorsFor(spark, lakeDir, coveredDvFiles(fs, lakeDir).toSet)
   }
 
   /** Unpublished debris sweep: `_dv` files the log does not cover are
@@ -220,8 +222,8 @@ object DeletionVectors {
       // mergeSchema: an evolved lake mixes physical schemas — the
       // predicate must see every column deterministically (rows from
       // files missing an evolved column read it as NULL)
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+      val lake = FileMemo.readFiles(spark, lakeDir, committed,
+        mergeSchema = true)
       val hits = lake.filter(coalesce(expr(predicate), lit(false)))
         .select(fileNameCol.as("file"),
           col("_metadata.row_index").as("pos"))
@@ -323,8 +325,8 @@ object DeletionVectors {
       val committed = CommitLog.committedNames(fs, lakeDir).toSeq.sorted
       require(committed.nonEmpty,
         s"mergeMor: no committed files in $lakeDir — ingest first")
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+      val lake = FileMemo.readFiles(spark, lakeDir, committed,
+        mergeSchema = true)
       MergeInto.requireFullRowCompatible(lake, updates0, "mergeMor",
         evolveSchema)
       // matched-position discovery: key columns + _metadata only (a
@@ -456,8 +458,8 @@ object DeletionVectors {
       val committed = CommitLog.committedNames(fs, lakeDir).toSeq.sorted
       require(committed.nonEmpty,
         s"mergeClausesMor: no committed files in $lakeDir — ingest first")
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+      val lake = FileMemo.readFiles(spark, lakeDir, committed,
+        mergeSchema = true)
       val prep = prepare(lake, vectors(spark, lakeDir))
       if (prep.nMarked == 0 && prep.appended == 0) (0L, 0L)
       else {
@@ -727,8 +729,8 @@ object DeletionVectors {
       val committed = CommitLog.committedNames(fs, lakeDir).toSeq.sorted
       require(committed.nonEmpty,
         s"updateMor: no committed files in $lakeDir — ingest first")
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+      val lake = FileMemo.readFiles(spark, lakeDir, committed,
+        mergeSchema = true)
       requireNoClash(lake, "updateMor")
       val unknown = set.keySet -- lake.columns.toSet
       require(unknown.isEmpty,
@@ -821,13 +823,7 @@ object DeletionVectors {
   private[sources] def vectorsFor(spark: SparkSession, lakeDir: String,
       covered: Set[String]): Option[DataFrame] =
     if (covered.isEmpty) None
-    else {
-      val fs = new Path(lakeDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Some(spark.read
-        .parquet(resolveDvPaths(fs, lakeDir, covered.toSeq.sorted): _*)
-        .select(col("file"), col("pos")).distinct())
-    }
+    else Some(FileMemo.vectorsFor(spark, lakeDir, covered.toSeq.sorted))
 
   /** [[readMor]] PINNED at a captured [[MorCursor]] — both name sets
     * are write-once, so the read serves exactly the cursor version's
@@ -838,19 +834,18 @@ object DeletionVectors {
   def readMorAt(spark: SparkSession, lakeDir: String,
       at: MorCursor, mergeSchema: Boolean = false): DataFrame = {
     require(at.files.nonEmpty, s"readMorAt: empty cursor for $lakeDir")
-    val fs = new Path(lakeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rdr = if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val base = rdr.parquet(
-      CommitLog.resolveDataPaths(fs, lakeDir, at.files.toSeq.sorted): _*)
+    val base = FileMemo.readFiles(spark, lakeDir, at.files.toSeq.sorted,
+      mergeSchema)
     applyVectors(base, vectorsFor(spark, lakeDir, at.dvFiles))
   }
 
   /** The committed view MINUS the covered vectors — ONE scan plus one
-    * (AQE-broadcast) anti-join on `(file name, row position)`. With no
+    * broadcast anti-join on `(file name, row position)`. With no
     * covered vectors this is exactly the plain committed read. Files
-    * and vectors come from one atomic log resolution. */
+    * and vectors come from one atomic log resolution; the schema and
+    * the vector set come from [[FileMemo]], so building the frame runs
+    * no Spark job once the memo holds this version's files (the writer
+    * of a sidecar seeds it, a first read fills it). */
   def readMor(spark: SparkSession, lakeDir: String,
       mergeSchema: Boolean = false): DataFrame = {
     val fs = new Path(lakeDir)
@@ -858,9 +853,7 @@ object DeletionVectors {
     val (files, covered) = CommitLog.committedView(fs, lakeDir)
     val committed = files.toSeq.sorted
     require(committed.nonEmpty, s"readMor: no committed files in $lakeDir")
-    val rdr = if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val base = rdr.parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+    val base = FileMemo.readFiles(spark, lakeDir, committed, mergeSchema)
     // column mapping last: physical names scan, logical names out
     ColumnMapping.toLogical(spark, lakeDir,
       applyVectors(base, vectorsFor(spark, lakeDir, covered)))
@@ -896,11 +889,9 @@ object DeletionVectors {
       else StatsIndex.prunedTyped(spark, indexDir, ranges)
         .map(p => new Path(p).getName).filter(committed.contains).sorted
     val base =
-      if (scanned.isEmpty)
-        spark.read.parquet(CommitLog.resolveDataPaths(fs, lakeDir,
-          committed.toSeq.sorted): _*).filter(pred).limit(0)
-      else spark.read.parquet(
-        CommitLog.resolveDataPaths(fs, lakeDir, scanned): _*).filter(pred)
+      if (scanned.isEmpty) FileMemo.readFiles(spark, lakeDir,
+        committed.toSeq.sorted).filter(pred).limit(0)
+      else FileMemo.readFiles(spark, lakeDir, scanned).filter(pred)
     applyVectors(base, vectorsFor(spark, lakeDir, covered))
   }
 
@@ -937,8 +928,8 @@ object DeletionVectors {
     val resolved = CommitLog.resolveDataPaths(fs, lakeDir, committed)
     // union schema: an evolved lake mixes physical schemas and the
     // stream must see every column deterministically
-    val schema = spark.read.option("mergeSchema", "true")
-      .parquet(resolved: _*).schema
+    val schema = FileMemo.readFiles(spark, lakeDir, committed,
+      mergeSchema = true).schema
     require(!schema.fieldNames.contains(FileCol) &&
       !schema.fieldNames.contains(PosCol),
       s"readMorStream: the schema carries a reserved column name " +
@@ -1098,10 +1089,8 @@ object DeletionVectors {
     val committedH = filesH.toSeq.sorted
     require(committedH.nonEmpty,
       s"readMorChanges: no committed files in $lakeDir")
-    val rdr = if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    val schemaFrame = rdr.parquet(
-      CommitLog.resolveDataPaths(fs, lakeDir, committedH): _*)
+    val schemaFrame = FileMemo.readFiles(spark, lakeDir, committedH,
+      mergeSchema)
     requireNoClash(schemaFrame, "readMorChanges")
     val schema = schemaFrame.schema
     val none = schemaFrame.limit(0)
@@ -1126,9 +1115,7 @@ object DeletionVectors {
         // the touched-file list (metadata-bounded) rides the pin's
         // materialization job instead of a second distinct+collect
         val (newPairs, touched0) = Pins.pinWithDistinct(
-          spark.read
-            .parquet(resolveDvPaths(fs, lakeDir, newDvFiles): _*)
-            .select(col("file"), col("pos")).distinct()
+          FileMemo.vectorsFor(spark, lakeDir, newDvFiles)
             .join(from.files.toSeq.toDF("file"), Seq("file"),
               "left_semi"),
           "file")
@@ -1203,8 +1190,8 @@ object DeletionVectors {
         // file and an additively-evolved delta both carrying vectors)
         // — a single-schema read would silently drop the evolved
         // column from the rewritten survivors
-        val base = spark.read.option("mergeSchema", "true")
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, touched): _*)
+        val base = FileMemo.readFiles(spark, lakeDir, touched,
+          mergeSchema = true)
         requireNoClash(base, "compact")
         val survivors = base
           .withColumn(FileCol, fileNameCol)

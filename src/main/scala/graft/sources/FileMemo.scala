@@ -1,0 +1,274 @@
+package graft.sources
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.Footer
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetSchemaSteps, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
+
+/** Driver memos for the merge-on-read read surface, keyed by WRITE-ONCE
+  * file identity `(qualified path, length, mtime)` — the rule
+  * [[CommitLog]]'s record cache and the [[StatsIndex]] snapshot follow.
+  * Data parts and `_dv` sidecars are never rewritten in place, so an
+  * identity that still lists is still the same bytes, and a same-named
+  * file written again lists with a new length or mtime and misses.
+  *
+  *  - Footer schemas of data files: [[readFiles]] builds a read's
+  *    schema on the driver by Spark's own inference rule and hands it
+  *    to `spark.read.schema(s)`, so no read runs a schema-inference
+  *    job. A miss reads that file's footer on the driver.
+  *  - `(file, pos)` pairs of sidecars: [[vectorsFor]] returns the
+  *    covered set as a local frame, which AQE broadcasts without a
+  *    job. Misses are read in one job over the missing sidecars, or
+  *    seeded by the writer that staged them ([[seedPairs]]). The local
+  *    frame is used only while its estimated size is within
+  *    `spark.sql.autoBroadcastJoinThreshold` — the bound under which
+  *    the join broadcasts that side anyway; above it (or with the
+  *    threshold disabled) the read keeps the distributed frame.
+  *
+  * Each memo is a small fixed LRU over directories (a lake, its `_dv`,
+  * each clone hop), and every use lists the directory once: entries for
+  * files that left the listing are dropped there. The measured driver
+  * bytes are in SCALE.md. */
+private[graft] object FileMemo {
+
+  private type Id = (String, Long, Long)
+
+  private def idOf(st: FileStatus): Id =
+    (st.getPath.toString, st.getLen, st.getModificationTime)
+
+  /** Values derived from write-once files, per listed directory. */
+  private final class Memo[V](slots: Int) {
+    private val dirs =
+      new java.util.LinkedHashMap[String, Map[Id, V]](16, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Map[Id, V]]): Boolean =
+          size() > slots
+      }
+
+    /** The entries of `dir` still present in its listing `listed`. */
+    def sync(dir: String, listed: Seq[FileStatus]): Map[Id, V] =
+      synchronized {
+        val ids = listed.iterator.map(idOf).toSet
+        val kept = Option(dirs.get(dir)).getOrElse(Map.empty[Id, V])
+          .filter { case (k, _) => ids(k) }
+        dirs.put(dir, kept)
+        kept
+      }
+
+    def put(dir: String, add: Map[Id, V]): Unit = synchronized {
+      dirs.put(dir, Option(dirs.get(dir)).getOrElse(Map.empty[Id, V]) ++ add)
+    }
+  }
+
+  private val schemas = new Memo[StructType](32)
+
+  /** One instance per distinct schema, shared by every file that has
+    * it: a lake's files mostly share a handful of schemas, and a memo
+    * entry then costs its identity, not a StructType. */
+  private val schemaPool = new java.util.HashMap[StructType, StructType]()
+
+  private def interned(s: StructType): StructType = schemaPool.synchronized {
+    if (schemaPool.size >= 1024) schemaPool.clear()
+    Option(schemaPool.putIfAbsent(s, s)).getOrElse(s)
+  }
+  private val pairs = new Memo[Map[String, Array[Long]]](32)
+
+  /** The parquet files of `dir`, or none when it does not exist. */
+  private def listParquet(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
+        !n.startsWith(".")
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** `names` resolved to statuses, in order: one listing of
+    * `dirOf(lakeDir)` per clone hop, local wins (the
+    * [[CommitLog.resolveDataPaths]] rule). Also returns the memo hits of
+    * every listed directory. None when a name resolves nowhere. */
+  private def resolve[V](fs: FileSystem, lakeDir: String, names: Seq[String],
+      dirOf: String => String, memo: Memo[V])
+      : Option[(Seq[FileStatus], Map[Id, V])] = {
+    val dir = fs.makeQualified(new Path(dirOf(lakeDir)))
+    val listed = listParquet(fs, dir)
+    val hits = memo.sync(dir.toString, listed)
+    val local = listed.iterator.map(st => st.getPath.getName -> st).toMap
+    val missing = names.filterNot(local.contains)
+    val there: Option[(Map[String, FileStatus], Map[Id, V])] =
+      if (missing.isEmpty) Some((Map.empty, Map.empty))
+      else CommitLog.cloneSourceOf(fs, lakeDir).flatMap(src =>
+        resolve(fs, src, missing, dirOf, memo).map { case (sts, h) =>
+          (missing.zip(sts).toMap, h)
+        })
+    there.map { case (far, farHits) =>
+      (names.map(n => local.getOrElse(n, far(n))), hits ++ farHits)
+    }
+  }
+
+  // ---- data files ---------------------------------------------------
+
+  /** The committed data files `names` of `lakeDir` as one frame — the
+    * one data-file read of the merge-on-read verbs. The schema is
+    * Spark's own inference, computed on the driver from memoized
+    * footer schemas: without `mergeSchema`, the footer of the first
+    * file by path (the one file Spark's inference reads); with it,
+    * every footer merged in that order, case sensitivity as the
+    * session's. A name that resolves nowhere falls through to Spark's
+    * read, which fails on it as before. */
+  def readFiles(spark: SparkSession, lakeDir: String, names: Seq[String],
+      mergeSchema: Boolean = false): DataFrame = {
+    val fs = new Path(lakeDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val resolved =
+      if (names.isEmpty) None
+      else resolve(fs, lakeDir, names, identity, schemas)
+    resolved match {
+      case None =>
+        val rdr = if (mergeSchema) spark.read.option("mergeSchema", "true")
+          else spark.read
+        rdr.parquet(CommitLog.resolveDataPaths(fs, lakeDir, names): _*)
+      case Some((sts, hits)) =>
+        val byPath = sts.sortBy(_.getPath.toString)
+        val touched = if (mergeSchema) byPath else byPath.take(1)
+        val found = hits ++ footerSchemas(spark,
+          touched.filterNot(st => hits.contains(idOf(st))))
+        val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+        val schema = touched.map(st => found(idOf(st)))
+          .reduceLeft(ParquetSchemaSteps.merge(_, _, caseSensitive))
+        spark.read.schema(schema).parquet(sts.map(_.getPath.toString): _*)
+    }
+  }
+
+  /** Footer schemas of `sts`, read on the driver and memoized. */
+  private def footerSchemas(spark: SparkSession,
+      sts: Seq[FileStatus]): Map[Id, StructType] =
+    if (sts.isEmpty) Map.empty
+    else {
+      val converter =
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      val byPath = footers(spark, sts).map(f =>
+        f.getFile.toString -> interned(ParquetFileFormat.readSchemaFromFooter(
+          f, converter))).toMap
+      val got = sts.map(st => idOf(st) -> byPath(st.getPath.toString)).toMap
+      sts.groupBy(_.getPath.getParent.toString).foreach { case (dir, in) =>
+        schemas.put(dir, in.map(st => idOf(st) -> got(idOf(st))).toMap)
+      }
+      got
+    }
+
+  private def footers(spark: SparkSession,
+      sts: Seq[FileStatus]): Seq[Footer] =
+    if (sts.isEmpty) Seq.empty
+    else ParquetSchemaSteps.footers(spark.sparkContext.hadoopConfiguration,
+      sts)
+
+  // ---- deletion-vector sidecars -------------------------------------
+
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** Spark's size estimate for one row of a local `(file, pos)`
+    * relation without column statistics: row overhead plus the types'
+    * default sizes. */
+  private val PairBytes = 8L + StringType.defaultSize + LongType.defaultSize
+
+  /** Does a local frame of `n` pairs stay within the broadcast bound? */
+  private def fitsLocal(spark: SparkSession, n: Long): Boolean = {
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    bound >= 0 && n * PairBytes <= bound
+  }
+
+  /** The distinct `(file, pos)` pairs of the covered sidecars `covered`
+    * of `lakeDir` (resolved through the clone chain): a local frame
+    * from the memo while it fits the broadcast bound, else the
+    * distributed read. A covered name that resolves nowhere falls
+    * through to Spark's read, which fails on it loudly. */
+  def vectorsFor(spark: SparkSession, lakeDir: String,
+      covered: Seq[String]): DataFrame = {
+    val fs = new Path(lakeDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def distributed(paths: Seq[String]): DataFrame =
+      spark.read.schema(DvSchema).parquet(paths: _*).distinct()
+    resolve(fs, lakeDir, covered, DeletionVectors.dvDir, pairs) match {
+      case None => distributed(
+        DeletionVectors.resolveDvPaths(fs, lakeDir, covered))
+      case Some((sts, hits)) =>
+        val misses = sts.filterNot(st => hits.contains(idOf(st)))
+        def count(p: Map[String, Array[Long]]): Long =
+          p.valuesIterator.map(_.length.toLong).sum
+        // an upper bound of the distinct set: memoized pairs plus the
+        // misses' footer row counts, so nothing large is collected
+        val bound = sts.iterator.flatMap(st => hits.get(idOf(st)))
+          .map(count).sum + footers(spark, misses)
+          .map(_.getParquetMetadata.getBlocks.asScala
+            .map(_.getRowCount).sum).sum
+        if (!fitsLocal(spark, bound))
+          distributed(sts.map(_.getPath.toString))
+        else {
+          val all = hits ++ readPairs(spark, misses)
+          local(spark, sts.map(st => all(idOf(st))))
+        }
+    }
+  }
+
+  /** The pairs of `sts`, in one job, memoized per sidecar. */
+  private def readPairs(spark: SparkSession,
+      sts: Seq[FileStatus]): Map[Id, Map[String, Array[Long]]] =
+    if (sts.isEmpty) Map.empty
+    else {
+      val rows = spark.read.schema(DvSchema)
+        .parquet(sts.map(_.getPath.toString): _*)
+        .select(col("_metadata.file_name"), col("file"), col("pos"))
+        .collect()
+      val bySidecar = rows.groupBy(_.getString(0))
+      val got = sts.map(st => idOf(st) -> grouped(
+        bySidecar.getOrElse(st.getPath.getName, Array.empty[Row])
+          .iterator.map(r => (r.getString(1), r.getLong(2))))).toMap
+      sts.groupBy(_.getPath.getParent.toString).foreach { case (dir, in) =>
+        pairs.put(dir, in.map(st => idOf(st) -> got(idOf(st))).toMap)
+      }
+      got
+    }
+
+  /** `(file, pos)` pairs grouped by file, positions sorted. */
+  private def grouped(
+      it: Iterator[(String, Long)]): Map[String, Array[Long]] =
+    it.toSeq.groupBy(_._1).map { case (f, ps) =>
+      f -> ps.iterator.map(_._2).toArray.sorted
+    }
+
+  /** The union of `parts` as a local frame, one row per distinct pair. */
+  private def local(spark: SparkSession,
+      parts: Seq[Map[String, Array[Long]]]): DataFrame = {
+    val rows = parts.flatMap(_.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (f, ps) =>
+        ps.iterator.flatMap(_._2).toArray.sorted.distinct.iterator
+          .map(p => Row(f, p))
+      }
+    spark.createDataFrame(rows.asJava, DvSchema)
+  }
+
+  /** The pairs of a small pinned `(file, pos)` frame of `n` rows, for a
+    * writer to seed the memo with after publishing them as a sidecar;
+    * None when a local frame of `n` pairs would not fit. */
+  def pairsIfSmall(spark: SparkSession, df: DataFrame,
+      n: Long): Option[Map[String, Array[Long]]] =
+    if (!fitsLocal(spark, n)) None
+    else Some(grouped(df.select(col("file"), col("pos")).collect()
+      .iterator.map(r => (r.getString(0), r.getLong(1)))))
+
+  /** Seed the memo with the pairs of the published sidecar `dvDir/name`
+    * (one status lookup), so the next read of it runs no job. */
+  def seedPairs(fs: FileSystem, dvDir: String, name: String,
+      got: Map[String, Array[Long]]): Unit = {
+    val path = fs.makeQualified(new Path(dvDir, name))
+    val st = fs.getFileStatus(path)
+    pairs.put(path.getParent.toString,
+      Map((path.toString, st.getLen, st.getModificationTime) -> got))
+  }
+}

@@ -120,6 +120,34 @@ object Occ {
         None
     }
 
+  /** Stages `pairs` (a pinned `(file, pos)` frame of `n` > 0 rows) as
+    * one sidecar under `stage/dv`. Returns its name and, when a local
+    * frame of the pairs fits the broadcast bound, the pairs themselves
+    * for [[publishVectors]] to seed the read memo with. */
+  private def stageVectors(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, stage: String, pairs: DataFrame,
+      n: Long): StagedVectors = {
+    pairs.coalesce(1).write.parquet(s"$stage/dv")
+    StagedVectors(stagedNames(fs, s"$stage/dv"),
+      FileMemo.pairsIfSmall(spark, pairs, n))
+  }
+
+  private final case class StagedVectors(names: Seq[String],
+      pairs: Option[Map[String, Array[Long]]])
+
+  private val NoVectors = StagedVectors(Nil, None)
+
+  /** Commit-section half of [[stageVectors]]: renames the staged
+    * sidecar into `_dv` and seeds the read memo with its pairs, so the
+    * next read of the lake reads no sidecar. */
+  private def publishVectors(fs: org.apache.hadoop.fs.FileSystem,
+      lakeDir: String, stage: String, dv: StagedVectors): Unit = {
+    val dvDir = DeletionVectors.dvDir(lakeDir)
+    renameInto(fs, s"$stage/dv", dv.names, dvDir)
+    for (got <- dv.pairs; name <- dv.names.headOption if dv.names.size == 1)
+      FileMemo.seedPairs(fs, dvDir, name, got)
+  }
+
   /** OCC APPEND: stage the parquet write with no lock held, then
     * claim the next batch id and publish the manifest in a
     * metadata-scale commit section. Never conflicts: a blind add
@@ -243,63 +271,71 @@ object Occ {
       require(filesSnap.nonEmpty,
         s"deleteMor(occ): no committed files in $lakeDir")
       val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      val hits = lake.filter(coalesce(expr(predicate), lit(false)))
-        .select(DeletionVectors.fileNameCol.as("file"),
-          col("_metadata.row_index").as("pos"))
-      val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap) match {
-        case None => hits
-        case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-      }
-      val (pairs, n) = Pins.pinCounted(fresh)
-      if (n == 0) return 0L
       val stage = stageDir(lakeDir)
-      pairs.repartition(1).write.parquet(s"$stage/dv")
-      val newDv = stagedNames(fs, s"$stage/dv")
-      // change feed: stage the dead rows' full images UNLOCKED against
-      // the pinned snapshot; the commit section renames them into
-      // place iff it wins
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      if (cdcWanted)
-        lake.withColumn(DeletionVectors.FileCol,
-            DeletionVectors.fileNameCol)
-          .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
-          .join(pairs.select(col("file").as(DeletionVectors.FileCol),
-            col("pos").as(DeletionVectors.PosCol)),
-            Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
-            "left_semi")
-          .drop(DeletionVectors.FileCol, DeletionVectors.PosCol)
-          .withColumn(ChangeDataFeed.ChangeTypeCol, lit("delete"))
-          .write.parquet(s"$stage/cdc")
-      beforeCommit()
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        // the feed flipping ON between staging and here is a conflict:
-        // publishing without change data would make every later feed
-        // window spanning this version permanently unservable — retry
-        // so the restage captures it
-        if (CommitLog.committedView(fs, lakeDir) != snap ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+      // ---- PREPARE (no lock) ----
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
+        val hits = lake.filter(coalesce(expr(predicate), lit(false)))
+          .select(DeletionVectors.fileNameCol.as("file"),
+            col("_metadata.row_index").as("pos"))
+        val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
+          match {
+          case None => hits
+          case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
+        }
+        val (pairs, n) = Pins.pinCounted(fresh)
+        if (n == 0) (0L, NoVectors)
         else {
-          renameInto(fs, s"$stage/dv", newDv,
-            DeletionVectors.dvDir(lakeDir))
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
-            else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
-            }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id, committed,
-            dvNames = dvSnap.toSeq.sorted ++ newDv, gen = gen)
-          true
+          val dv = stageVectors(spark, fs, stage, pairs, n)
+          // change feed: stage the dead rows' full images UNLOCKED
+          // against the pinned snapshot; the commit section renames
+          // them into place iff it wins
+          if (cdcWanted)
+            lake.withColumn(DeletionVectors.FileCol,
+                DeletionVectors.fileNameCol)
+              .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
+              .join(pairs.select(col("file").as(DeletionVectors.FileCol),
+                col("pos").as(DeletionVectors.PosCol)),
+                Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
+                "left_semi")
+              .drop(DeletionVectors.FileCol, DeletionVectors.PosCol)
+              .withColumn(ChangeDataFeed.ChangeTypeCol, lit("delete"))
+              .write.parquet(s"$stage/cdc")
+          (n, dv)
+        }
+      }
+      if (prepared.exists(_._1 == 0L)) return 0L
+      // ---- COMMIT SECTION (locked) ----
+      val won = prepared.exists { case (_, dv) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          // the feed flipping ON between staging and here is a conflict:
+          // publishing without change data would make every later feed
+          // window spanning this version permanently unservable — retry
+          // so the restage captures it
+          if (CommitLog.committedView(fs, lakeDir) != snap ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            publishVectors(fs, lakeDir, stage, dv)
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id, committed,
+              dvNames = dvSnap.toSeq.sorted ++ dv.names, gen = gen)
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return n
+      if (won) return prepared.get._1
       attempt += 1
       require(attempt < maxRetries,
         s"deleteMor(occ): $maxRetries consecutive commit conflicts on " +
@@ -347,88 +383,94 @@ object Occ {
       require(filesSnap.nonEmpty,
         s"updateMor(occ): no committed files in $lakeDir — ingest first")
       val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      DeletionVectors.requireNoClash(lake, "updateMor(occ)")
-      val unknown = set.keySet -- lake.columns.toSet
-      require(unknown.isEmpty,
-        s"updateMor(occ): SET names unknown columns " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-      val positioned = lake
-        .withColumn(DeletionVectors.FileCol, DeletionVectors.fileNameCol)
-        .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
-      val live = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap) match {
-        case None => positioned
-        case Some(dv) => positioned.join(
-          dv.select(col("file").as(DeletionVectors.FileCol),
-            col("pos").as(DeletionVectors.PosCol)),
-          Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
-          "left_anti")
-      }
-      val matched = live
-        .filter(coalesce(expr(predicate), lit(false)))
-        .localCheckpoint()
-      val n = matched.count()
-      if (n == 0) return 0L
       val stage = stageDir(lakeDir)
-      matched
-        .select(col(DeletionVectors.FileCol).as("file"),
-          col(DeletionVectors.PosCol).as("pos"))
-        .repartition(1).write.parquet(s"$stage/dv")
-      val newDv = stagedNames(fs, s"$stage/dv")
-      val updated = GeneratedColumns.recompute(spark, lakeDir,
-        matched.select(lake.schema.fields.map { f =>
-          set.get(f.name) match {
-            case Some(e) => expr(e).cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }.toIndexedSeq: _*))
-      val nDelta = math.max(1L,
-        (n + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
-      updated.repartition(nDelta).write.parquet(s"$stage/data")
-      val delta = stagedNames(fs, s"$stage/data")
-      Constraints.validatePaths(spark, lakeDir,
-        delta.map(d => s"$stage/data/$d"))
-      GeneratedColumns.validatePaths(spark, lakeDir,
-        delta.map(d => s"$stage/data/$d"))
-      // change feed: pre/post images staged unlocked off the already-
-      // checkpointed `matched` rows, renamed into place iff we win
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      if (cdcWanted) {
-        val ct = ChangeDataFeed.ChangeTypeCol
-        matched.select(lake.schema.fieldNames.map(col).toIndexedSeq: _*)
-          .withColumn(ct, lit("update_preimage"))
-          .unionByName(updated.withColumn(ct, lit("update_postimage")))
-          .write.parquet(s"$stage/cdc")
-      }
-      beforeCommit()
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        if (CommitLog.committedView(fs, lakeDir) != snap ||
-            defsSnapshot(fs, lakeDir) != defsSnap ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+      // ---- PREPARE (no lock) ----
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
+        DeletionVectors.requireNoClash(lake, "updateMor(occ)")
+        val unknown = set.keySet -- lake.columns.toSet
+        require(unknown.isEmpty,
+          s"updateMor(occ): SET names unknown columns " +
+            s"${unknown.toSeq.sorted.mkString(", ")}")
+        val positioned = lake
+          .withColumn(DeletionVectors.FileCol, DeletionVectors.fileNameCol)
+          .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
+        val live = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
+          match {
+          case None => positioned
+          case Some(dv) => positioned.join(
+            dv.select(col("file").as(DeletionVectors.FileCol),
+              col("pos").as(DeletionVectors.PosCol)),
+            Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
+            "left_anti")
+        }
+        val (matched, n) = Pins.pinCounted(live
+          .filter(coalesce(expr(predicate), lit(false))))
+        if (n == 0) (0L, NoVectors, Seq.empty[String])
         else {
-          renameInto(fs, s"$stage/dv", newDv,
-            DeletionVectors.dvDir(lakeDir))
-          renameInto(fs, s"$stage/data", delta, lakeDir)
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
-            else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
-            }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
-            committed ++ delta,
-            dvNames = dvSnap.toSeq.sorted ++ newDv,
-            added = delta, gen = gen)
-          true
+          val dv = stageVectors(spark, fs, stage, matched
+            .select(col(DeletionVectors.FileCol).as("file"),
+              col(DeletionVectors.PosCol).as("pos")), n)
+          val updated = GeneratedColumns.recompute(spark, lakeDir,
+            matched.select(lake.schema.fields.map { f =>
+              set.get(f.name) match {
+                case Some(e) => expr(e).cast(f.dataType).as(f.name)
+                case None => col(f.name)
+              }
+            }.toIndexedSeq: _*))
+          val nDelta = math.max(1L,
+            (n + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
+          updated.repartition(nDelta).write.parquet(s"$stage/data")
+          val delta = stagedNames(fs, s"$stage/data")
+          Constraints.validatePaths(spark, lakeDir,
+            delta.map(d => s"$stage/data/$d"))
+          GeneratedColumns.validatePaths(spark, lakeDir,
+            delta.map(d => s"$stage/data/$d"))
+          // change feed: pre/post images staged unlocked off the
+          // already-checkpointed `matched` rows, renamed into place iff
+          // we win
+          if (cdcWanted) {
+            val ct = ChangeDataFeed.ChangeTypeCol
+            matched.select(lake.schema.fieldNames.map(col).toIndexedSeq: _*)
+              .withColumn(ct, lit("update_preimage"))
+              .unionByName(updated.withColumn(ct, lit("update_postimage")))
+              .write.parquet(s"$stage/cdc")
+          }
+          (n, dv, delta)
+        }
+      }
+      if (prepared.exists(_._1 == 0L)) return 0L
+      // ---- COMMIT SECTION (locked) ----
+      val won = prepared.exists { case (_, dv, delta) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          if (CommitLog.committedView(fs, lakeDir) != snap ||
+              defsSnapshot(fs, lakeDir) != defsSnap ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            publishVectors(fs, lakeDir, stage, dv)
+            renameInto(fs, s"$stage/data", delta, lakeDir)
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
+              committed ++ delta,
+              dvNames = dvSnap.toSeq.sorted ++ dv.names,
+              added = delta, gen = gen)
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return n
+      if (won) return prepared.get._1
       attempt += 1
       require(attempt < maxRetries,
         s"updateMor(occ): $maxRetries consecutive commit conflicts on " +
@@ -501,8 +543,8 @@ object Occ {
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
       val prepared = unlessSwept(fs, lakeDir, filesSnap) {
         val committed = filesSnap.toSeq.sorted
-        val lake = spark.read.option("mergeSchema", "true")
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
         MergeInto.requireFullRowCompatible(lake, updates0, "merge(occ)",
           evolveSchema)
         def touchedIn(base: DataFrame): Set[String] = base
@@ -644,8 +686,8 @@ object Occ {
       val committed = filesSnap.toSeq.sorted
       val stage = stageDir(lakeDir)
       val prepared = unlessSwept(fs, lakeDir, filesSnap) {
-        val base = spark.read.option("mergeSchema", "true")
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        val base = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
         val input = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
           match {
           case None => base
@@ -738,113 +780,114 @@ object Occ {
       require(filesSnap.nonEmpty,
         s"mergeMor(occ): no committed files in $lakeDir — ingest first")
       val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      MergeInto.requireFullRowCompatible(lake, updates0, "mergeMor(occ)",
-        evolveSchema)
-      def hitsIn(base: DataFrame): DataFrame = base
-        .select(Seq(
-          DeletionVectors.fileNameCol.as(DeletionVectors.FileCol),
-          col("_metadata.row_index").as(DeletionVectors.PosCol)) ++
-          keys.map(col): _*)
-        .join(updates0.select(keys.map(col): _*).distinct(), keys,
-          "left_semi")
-        .select(col(DeletionVectors.FileCol).as("file"),
-          col(DeletionVectors.PosCol).as("pos"))
-      val hits = MergeInto.keyCandidateFiles(spark, updates0, keys,
-          indexDir, committed) match {
-        case Some(Seq()) => hitsIn(lake).limit(0)
-        case Some(cand) => hitsIn(
-          spark.read.schema(lake.schema).parquet(cand: _*))
-        case None => hitsIn(lake)
-      }
-      // vectors from the SNAPSHOT's coverage, not a re-resolution — a
-      // concurrent mutation between the two reads must not tear the
-      // (files, vectors) pair this discovery ran against
-      val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap) match {
-        case None => hits
-        case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-      }
-      val (pairs, matched) = Pins.pinCounted(fresh)
       val stage = stageDir(lakeDir)
-      val newDv =
-        if (matched == 0) Seq.empty[String]
-        else {
-          pairs.repartition(1).write.parquet(s"$stage/dv")
-          stagedNames(fs, s"$stage/dv")
-        }
-      val nDelta = math.max(1L,
-        (appended + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
-      updates0.repartition(nDelta).write.parquet(s"$stage/data")
-      val delta = stagedNames(fs, s"$stage/data")
-      Constraints.validatePaths(spark, lakeDir,
-        delta.map(n => s"$stage/data/$n"))
-      GeneratedColumns.validatePaths(spark, lakeDir,
-        delta.map(n => s"$stage/data/$n"))
-      // change feed: same images as the locked MoR merge
-      // ([[DeletionVectors.mergeMor]]), staged unlocked off the pinned
-      // snapshot — pre-images resolved by semi-joining the snapshot
-      // against the checkpointed pair set
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      if (cdcWanted) {
-        val ct = ChangeDataFeed.ChangeTypeCol
-        val pre = lake
-          .withColumn(DeletionVectors.FileCol, DeletionVectors.fileNameCol)
-          .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
-          .join(pairs.select(col("file").as(DeletionVectors.FileCol),
-            col("pos").as(DeletionVectors.PosCol)),
-            Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
+        MergeInto.requireFullRowCompatible(lake, updates0, "mergeMor(occ)",
+          evolveSchema)
+        def hitsIn(base: DataFrame): DataFrame = base
+          .select(Seq(
+            DeletionVectors.fileNameCol.as(DeletionVectors.FileCol),
+            col("_metadata.row_index").as(DeletionVectors.PosCol)) ++
+            keys.map(col): _*)
+          .join(updates0.select(keys.map(col): _*).distinct(), keys,
             "left_semi")
-          .drop(DeletionVectors.FileCol, DeletionVectors.PosCol)
-        // pinned: feeds two joins below — unpinned, the one staged
-        // feed write executes `pre` (full snapshot scan + pair join)
-        // three times
-        val matchedKeys = pre.select(keys.map(col): _*).distinct()
-          .localCheckpoint()
-        pre.withColumn(ct, lit("update_preimage"))
-          .unionByName(updates0.join(matchedKeys, keys, "left_semi")
-            .withColumn(ct, lit("update_postimage")),
-            allowMissingColumns = true)
-          .unionByName(updates0.join(matchedKeys, keys, "left_anti")
-            .withColumn(ct, lit("insert")),
-            allowMissingColumns = true)
-          .write.parquet(s"$stage/cdc")
+          .select(col(DeletionVectors.FileCol).as("file"),
+            col(DeletionVectors.PosCol).as("pos"))
+        val hits = MergeInto.keyCandidateFiles(spark, updates0, keys,
+            indexDir, committed) match {
+          case Some(Seq()) => hitsIn(lake).limit(0)
+          case Some(cand) => hitsIn(
+            spark.read.schema(lake.schema).parquet(cand: _*))
+          case None => hitsIn(lake)
+        }
+        // vectors from the SNAPSHOT's coverage, not a re-resolution — a
+        // concurrent mutation between the two reads must not tear the
+        // (files, vectors) pair this discovery ran against
+        val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
+          match {
+          case None => hits
+          case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
+        }
+        val (pairs, matched) = Pins.pinCounted(fresh)
+        val dv =
+          if (matched == 0) NoVectors
+          else stageVectors(spark, fs, stage, pairs, matched)
+        val nDelta = math.max(1L,
+          (appended + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
+        updates0.repartition(nDelta).write.parquet(s"$stage/data")
+        val delta = stagedNames(fs, s"$stage/data")
+        Constraints.validatePaths(spark, lakeDir,
+          delta.map(n => s"$stage/data/$n"))
+        GeneratedColumns.validatePaths(spark, lakeDir,
+          delta.map(n => s"$stage/data/$n"))
+        // change feed: same images as the locked MoR merge
+        // ([[DeletionVectors.mergeMor]]), staged unlocked off the pinned
+        // snapshot — pre-images resolved by semi-joining the snapshot
+        // against the checkpointed pair set
+        if (cdcWanted) {
+          val ct = ChangeDataFeed.ChangeTypeCol
+          val pre = lake
+            .withColumn(DeletionVectors.FileCol, DeletionVectors.fileNameCol)
+            .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
+            .join(pairs.select(col("file").as(DeletionVectors.FileCol),
+              col("pos").as(DeletionVectors.PosCol)),
+              Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
+              "left_semi")
+            .drop(DeletionVectors.FileCol, DeletionVectors.PosCol)
+          // pinned: feeds two joins below — unpinned, the one staged
+          // feed write executes `pre` (full snapshot scan + pair join)
+          // three times
+          val matchedKeys = pre.select(keys.map(col): _*).distinct()
+            .localCheckpoint()
+          pre.withColumn(ct, lit("update_preimage"))
+            .unionByName(updates0.join(matchedKeys, keys, "left_semi")
+              .withColumn(ct, lit("update_postimage")),
+              allowMissingColumns = true)
+            .unionByName(updates0.join(matchedKeys, keys, "left_anti")
+              .withColumn(ct, lit("insert")),
+              allowMissingColumns = true)
+            .write.parquet(s"$stage/cdc")
+        }
+        (matched, dv, delta)
       }
-      beforeCommit()
       // ---- COMMIT SECTION (locked) ----
       // renames, the manifest write and, when `indexDir` is set, the
       // StatsIndex refresh over the delta files: one footer-read job
       // and one index write (the kept stats rows come from the
       // driver-side snapshot), so the lock is held for two Spark jobs
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        if (CommitLog.committedView(fs, lakeDir) != snap ||
-            defsSnapshot(fs, lakeDir) != defsSnap ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
-        else {
-          renameInto(fs, s"$stage/dv", newDv,
-            DeletionVectors.dvDir(lakeDir))
-          renameInto(fs, s"$stage/data", delta, lakeDir)
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
-            else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
-            }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
-            committed ++ delta,
-            dvNames = dvSnap.toSeq.sorted ++ newDv,
-            added = delta, gen = gen)
-          indexDir.foreach(idx =>
-            StatsIndex.refreshSameColumns(spark, lakeDir, idx))
-          true
+      val won = prepared.exists { case (_, dv, delta) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          if (CommitLog.committedView(fs, lakeDir) != snap ||
+              defsSnapshot(fs, lakeDir) != defsSnap ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            publishVectors(fs, lakeDir, stage, dv)
+            renameInto(fs, s"$stage/data", delta, lakeDir)
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
+              committed ++ delta,
+              dvNames = dvSnap.toSeq.sorted ++ dv.names,
+              added = delta, gen = gen)
+            indexDir.foreach(idx =>
+              StatsIndex.refreshSameColumns(spark, lakeDir, idx))
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return (matched, appended)
+      if (won) return (prepared.get._1, appended)
       attempt += 1
       require(attempt < maxRetries,
         s"mergeMor(occ): $maxRetries consecutive commit conflicts on " +
@@ -901,8 +944,8 @@ object Occ {
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
       val stage = stageDir(lakeDir)
       val prepared = unlessSwept(fs, lakeDir, filesSnap) {
-        val lake = spark.read.option("mergeSchema", "true")
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
         val (touched, survivors, changes) = plan(lake, committed, cdcWanted)
         val fresh = survivors match {
           case None => Seq.empty[String]
@@ -1003,67 +1046,75 @@ object Occ {
         s"mergeClausesMor(occ): no committed files in $lakeDir — " +
           "ingest first")
       val committed = filesSnap.toSeq.sorted
-      val lake = spark.read.option("mergeSchema", "true")
-        .parquet(CommitLog.resolveDataPaths(fs, lakeDir, committed): _*)
-      val prep = prepare(lake,
-        DeletionVectors.vectorsFor(spark, lakeDir, dvSnap))
-      if (prep.nMarked == 0 && prep.appended == 0) return (0L, 0L)
       val stage = stageDir(lakeDir)
-      val newDv =
-        if (prep.nMarked == 0) Seq.empty[String]
-        else {
-          prep.pairs.repartition(1).write.parquet(s"$stage/dv")
-          stagedNames(fs, s"$stage/dv")
-        }
-      val delta =
-        if (prep.appended == 0) Seq.empty[String]
-        else {
-          val nDelta = math.max(1L,
-            (prep.appended + targetRowsPerDelta - 1) /
-              targetRowsPerDelta).toInt
-          prep.delta0.get.repartition(nDelta).write
-            .parquet(s"$stage/data")
-          stagedNames(fs, s"$stage/data")
-        }
-      Constraints.validatePaths(spark, lakeDir,
-        delta.map(n => s"$stage/data/$n"))
-      GeneratedColumns.validatePaths(spark, lakeDir,
-        delta.map(n => s"$stage/data/$n"))
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
-      if (cdcWanted)
-        DeletionVectors.clausesMorChanges(lake, prep)
-          .write.parquet(s"$stage/cdc")
-      beforeCommit()
-      // ---- COMMIT SECTION (locked, metadata-scale) ----
-      val won = CommitLog.withWriterLock(fs, lakeDir,
-          waitMs = commitWaitMs) {
-        if (CommitLog.committedView(fs, lakeDir) != snap ||
-            defsSnapshot(fs, lakeDir) != defsSnap ||
-            (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+      val prepared = unlessSwept(fs, lakeDir, filesSnap) {
+        val lake = FileMemo.readFiles(spark, lakeDir, committed,
+          mergeSchema = true)
+        val prep = prepare(lake,
+          DeletionVectors.vectorsFor(spark, lakeDir, dvSnap))
+        if (prep.nMarked == 0 && prep.appended == 0)
+          (prep, NoVectors, Seq.empty[String])
         else {
-          renameInto(fs, s"$stage/dv", newDv,
-            DeletionVectors.dvDir(lakeDir))
-          renameInto(fs, s"$stage/data", delta, lakeDir)
-          val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
-          val gen =
-            if (!cdcWanted) None
+          val dv =
+            if (prep.nMarked == 0) NoVectors
+            else stageVectors(spark, fs, stage, prep.pairs, prep.nMarked)
+          val delta =
+            if (prep.appended == 0) Seq.empty[String]
             else {
-              val g = CommitLog.nextGen(fs, lakeDir)
-              ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
-                s"$stage/cdc")
-              Some(g)
+              val nDelta = math.max(1L,
+                (prep.appended + targetRowsPerDelta - 1) /
+                  targetRowsPerDelta).toInt
+              prep.delta0.get.repartition(nDelta).write
+                .parquet(s"$stage/data")
+              stagedNames(fs, s"$stage/data")
             }
-          CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
-            committed ++ delta,
-            dvNames = dvSnap.toSeq.sorted ++ newDv,
-            added = delta, gen = gen)
-          indexDir.foreach(idx =>
-            StatsIndex.refreshSameColumns(spark, lakeDir, idx))
-          true
+          Constraints.validatePaths(spark, lakeDir,
+            delta.map(n => s"$stage/data/$n"))
+          GeneratedColumns.validatePaths(spark, lakeDir,
+            delta.map(n => s"$stage/data/$n"))
+          if (cdcWanted)
+            DeletionVectors.clausesMorChanges(lake, prep)
+              .write.parquet(s"$stage/cdc")
+          (prep, dv, delta)
+        }
+      }
+      if (prepared.exists { case (p, _, _) =>
+          p.nMarked == 0 && p.appended == 0 }) return (0L, 0L)
+      // ---- COMMIT SECTION (locked, metadata-scale) ----
+      val won = prepared.exists { case (_, dv, delta) =>
+        beforeCommit()
+        CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+          if (CommitLog.committedView(fs, lakeDir) != snap ||
+              defsSnapshot(fs, lakeDir) != defsSnap ||
+              (!cdcWanted && ChangeDataFeed.isEnabled(fs, lakeDir))) false
+          else {
+            publishVectors(fs, lakeDir, stage, dv)
+            renameInto(fs, s"$stage/data", delta, lakeDir)
+            val id = math.max(CommitLog.maxCommittedId(fs, lakeDir), -1L)
+            val gen =
+              if (!cdcWanted) None
+              else {
+                val g = CommitLog.nextGen(fs, lakeDir)
+                ChangeDataFeed.publishStaged(fs, lakeDir, id, g,
+                  s"$stage/cdc")
+                Some(g)
+              }
+            CommitLog.commitMutationCheckpoint(fs, lakeDir, id,
+              committed ++ delta,
+              dvNames = dvSnap.toSeq.sorted ++ dv.names,
+              added = delta, gen = gen)
+            indexDir.foreach(idx =>
+              StatsIndex.refreshSameColumns(spark, lakeDir, idx))
+            true
+          }
         }
       }
       fs.delete(new Path(stage), true)
-      if (won) return (prep.nMarked, prep.appended)
+      if (won) {
+        val prep = prepared.get._1
+        return (prep.nMarked, prep.appended)
+      }
       attempt += 1
       require(attempt < maxRetries,
         s"mergeClausesMor(occ): $maxRetries consecutive commit " +

@@ -627,7 +627,9 @@ object StatsIndex {
     * on an index without bloom rows a refresh runs two Spark jobs:
     * the churn's footer read and the local generation write, which
     * seeds the next snapshot. Kept bloom rows are carried by a Spark
-    * scan of the old generation inside the write job.
+    * scan of the old generation inside the write job. With no churn
+    * (nothing added or removed) it publishes nothing: no job, no
+    * pointer flip, no retention sweep.
     * Returns (added, removed). */
   def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
       indexDir: String, bloomCols: Seq[String] = Nil,
@@ -649,6 +651,9 @@ object StatsIndex {
         val known = old.files.toSet
         val added = current.filterNot(known)
         val removed = known -- current
+        // no churn: the live generation already indexes exactly these
+        // files, so nothing is written, flipped or swept
+        if (added.isEmpty && removed.isEmpty) return (0, 0)
         val kept = old.rows.filter(r => r.kind != "bloom" && !removed(r.file))
         val fresh = if (added.isEmpty) IndexedSeq.empty
           else statsFor(spark, added, cols)

@@ -521,6 +521,44 @@ class ConcurrencySpec extends SparkSpec {
     }
   }
 
+  test("a MoR OCC verb whose snapshot an Occ.optimize winner vacuums " +
+    "before the unlocked preparation reads it retries instead of " +
+    "failing on the missing file") {
+    import graft.sources.MergeInto.MatchedUpdate
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftgate.impl", classOf[GateFs].getName)
+    val upd = (0 until 10).map(k => (k, -1L))
+    val verbs: Seq[(String, String => Any)] = Seq(
+      "deleteMor" -> (lake => Occ.deleteMor(spark, lake, "k < 10")),
+      "updateMor" -> (lake =>
+        Occ.updateMor(spark, lake, "k < 10", Map("v" -> "-1"))),
+      "mergeMor" -> (lake =>
+        Occ.mergeMor(spark, lake, upd.toDF("k", "v"), Seq("k"))),
+      "mergeClausesMor" -> (lake =>
+        Occ.mergeClausesMor(spark, lake, upd.toDF("k", "nv"), Seq("k"),
+          matched = Seq(MatchedUpdate(Map("v" -> "s.nv"))))))
+    for ((verb, run) <- verbs) {
+      val lake = "graftgate://" + mkLake()
+      // the stale listing the gate hands back resolves its records
+      // from the parse cache, so the verb's snapshot is the one from
+      // before the optimize
+      CommitLog.committedView(fs(lake), lake)
+      val fired = new AtomicBoolean(false)
+      GateFs.arm(verb, () => {
+        Occ.optimize(spark, lake, Seq("k"))
+        fired.set(true)
+      })
+      try run(lake) finally GateFs.disarm()
+      assert(fired.get, s"$verb: the optimize winner never ran")
+      val got = DeletionVectors.readMor(spark, lake)
+      val live = if (verb == "deleteMor") 190L else 200L
+      assert(got.count() == live, s"$verb: ${got.count()} rows")
+      if (verb != "deleteMor")
+        assert(got.filter(col("k") < 10 && col("v") =!= -1L).count() == 0L,
+          s"$verb: the retried write was lost")
+    }
+  }
+
   test("the change feed flipping ON inside an OCC verb's window is a " +
     "conflict: the verb retries and the published version carries " +
     "change data") {
@@ -606,5 +644,45 @@ class ConcurrencySpec extends SparkSpec {
       f"waited ~2x the bound: $elapsedMs%.0f ms — the deadline must " +
         "span both stages")
     f.delete(lockPath, false)
+  }
+}
+
+/** The local filesystem under the scheme `graftgate:`, with one hook:
+  * armed for an `Occ` verb, the first listing of a commit log that the
+  * verb's snapshot (`CommitLog.committedView` called from the verb
+  * itself) makes runs the hook after the listing is taken. The verb
+  * then prepares on a snapshot the hook has already moved past. */
+class GateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftgate:///")
+  override def getScheme: String = "graftgate"
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(p)
+    if (p.getName == "_graft_log") GateFs.fire()
+    listed
+  }
+}
+
+object GateFs {
+  private var armed: Option[(String, () => Unit)] = None
+
+  def arm(verb: String, hook: () => Unit): Unit = synchronized {
+    armed = Some((verb, hook))
+  }
+
+  def disarm(): Unit = synchronized { armed = None }
+
+  private def fire(): Unit = {
+    val frames = Thread.currentThread.getStackTrace.toSeq
+      .map(e => (e.getClassName, e.getMethodName))
+    val hook = synchronized {
+      armed.filter { case (verb, _) =>
+        frames.sliding(2).exists {
+          case Seq(a, b) => a == ("graft.sources.CommitLog$",
+            "committedView") && b == ("graft.sources.Occ$", verb)
+          case _ => false
+        }
+      }.map { h => armed = None; h._2 }
+    }
+    hook.foreach(_())
   }
 }

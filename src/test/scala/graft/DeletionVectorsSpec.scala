@@ -713,6 +713,175 @@ class DeletionVectorsSpec extends SparkSpec {
     }.sum
     assert(got == expect)
   }
+
+  /** The plain committed read of `dir` minus the covered sidecars read
+    * the way the MoR path read them before the memo: the sidecar
+    * parquet, `distinct`, resolved local-first through a clone source. */
+  private def sidecarReadView(dir: String, src: Option[String] = None)
+      : Set[(Int, Long)] = {
+    val f = fs(dir)
+    val (files, dv) = CommitLog.committedView(f, dir)
+    val base = spark.read.parquet(CommitLog.resolveDataPaths(f, dir,
+        files.toSeq.sorted): _*)
+      .withColumn("file", element_at(split(col("_metadata.file_path"), "/"),
+        -1))
+      .withColumn("pos", col("_metadata.row_index"))
+    val live =
+      if (dv.isEmpty) base
+      else base.join(spark.read.parquet(dv.toSeq.sorted.map { n =>
+        val local = s"${DeletionVectors.dvDir(dir)}/$n"
+        if (f.exists(new Path(local))) local
+        else s"${DeletionVectors.dvDir(src.get)}/$n"
+      }: _*).select("file", "pos").distinct(), Seq("file", "pos"),
+        "left_anti")
+    live.select("k", "v").as[(Int, Long)].collect().toSet
+  }
+
+  private def morView(dir: String): Set[(Int, Long)] =
+    DeletionVectors.readMor(spark, dir).select("k", "v").as[(Int, Long)]
+      .collect().toSet
+
+  test("warm merge-on-read reads run only the query's own jobs: no " +
+    "schema inference, no sidecar read, no distinct over the vectors") {
+    import graft.sources.StatsIndex
+    val lake = mkLake()
+    val f = fs(lake)
+    val idx = lake.stripSuffix("/lake") + "/idx"
+    StatsIndex.build(spark, lake, Seq("k"), idx)
+    DeletionVectors.deleteMor(spark, lake, "k % 10 = 3")
+    val asOf = CommitLog.maxCommittedId(f, lake)
+    val reads: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "readMor" -> (() => DeletionVectors.readMor(spark, lake)),
+      "readMorAsOf" -> (() => DeletionVectors.readMorAsOf(spark, lake, asOf)),
+      "readMorPruned" -> (() => DeletionVectors.readMorPruned(spark, lake,
+        idx, Seq(StatsIndex.LongRange("k", 1000L, 1099L)))))
+    reads.foreach(_._2().count()) // warm the memos
+    // the same count over the committed files with no vectors at all
+    val plain = spark.read.schema(DeletionVectors.readMor(spark, lake).schema)
+      .parquet(CommitLog.resolveDataPaths(f, lake,
+        CommitLog.committedNames(f, lake).toSeq.sorted): _*)
+    val own = jobsOf(plain.count(): Unit)
+    for ((what, read) <- reads) {
+      var df: org.apache.spark.sql.DataFrame = null
+      val planning = jobsOf { df = read() }
+      assert(planning == 0, s"$what ran $planning jobs before its action")
+      // beyond the plain count: only the broadcast of the in-memory
+      // vector set (a collect of local rows, no input)
+      val counting = jobsOf(df.count(): Unit)
+      assert(counting <= own + 1,
+        s"$what's count ran $counting jobs, a plain count $own")
+    }
+  }
+
+  test("the read schema is Spark's inference on an evolved lake whose " +
+    "first file lacks later columns, with and without mergeSchema") {
+    val lake = Files.createTempDirectory("graft_dv_evo_").toString + "/lake"
+    val f = fs(lake)
+    // named files, so the one lacking `w` and `z` sorts first
+    def put(name: String, df: org.apache.spark.sql.DataFrame,
+        id: Long): Unit = {
+      val tmp = s"${lake}_$id"
+      df.coalesce(1).write.parquet(tmp)
+      val part = f.listStatus(new Path(tmp)).map(_.getPath)
+        .find(_.getName.endsWith(".parquet")).get
+      f.mkdirs(new Path(lake))
+      assert(f.rename(part, new Path(lake, name)))
+      CommitLog.commit(f, lake, id, Seq(name))
+    }
+    put("p0.parquet", Seq((1, 10L)).toDF("k", "v"), 0)
+    put("p1.parquet", Seq((2, 20L, "b")).toDF("k", "v", "w"), 1)
+    put("p2.parquet", Seq((0.5, 3)).toDF("z", "k"), 2)
+    DeletionVectors.deleteMor(spark, lake, "k = 2")
+    val paths = Seq("p0", "p1", "p2").map(n => s"$lake/$n.parquet")
+    for (merge <- Seq(false, true); pass <- 1 to 2) {
+      val rdr = if (merge) spark.read.option("mergeSchema", "true")
+        else spark.read
+      val want = rdr.parquet(paths: _*)
+      val got = DeletionVectors.readMor(spark, lake, mergeSchema = merge)
+      assert(got.schema == want.schema,
+        s"mergeSchema=$merge pass $pass: ${got.schema} vs ${want.schema}")
+      assert(got.collect().toSet ==
+        want.filter(col("k") =!= 2).collect().toSet)
+    }
+    assert(DeletionVectors.readMor(spark, lake).columns.toSeq == Seq("k", "v"))
+  }
+
+  test("the vector frame is the sidecar read and distinct: duplicate " +
+    "pairs across sidecars, a shallow clone's source sidecars, and " +
+    "after compact retires them") {
+    import graft.sources.Clone
+    val lake = mkLake()
+    val f = fs(lake)
+    DeletionVectors.deleteMor(spark, lake, "k < 10")
+    // a second sidecar repeating five pairs of the first and adding
+    // five, covered beside it
+    spark.read.parquet(CommitLog.resolveDataPaths(f, lake,
+        CommitLog.committedNames(f, lake).toSeq.sorted): _*)
+      .filter(col("k").between(5, 14))
+      .select(element_at(split(col("_metadata.file_path"), "/"), -1)
+        .as("file"), col("_metadata.row_index").as("pos"))
+      .coalesce(1).write.mode("append").parquet(DeletionVectors.dvDir(lake))
+    CommitLog.commitMutationCheckpoint(f, lake,
+      CommitLog.maxCommittedId(f, lake),
+      CommitLog.committedNames(f, lake).toSeq.sorted,
+      dvNames = CommitLog.dataFileNames(f, DeletionVectors.dvDir(lake))
+        .toSeq.sorted)
+    assert(CommitLog.coveredDvNames(f, lake).size == 2)
+    for (_ <- 1 to 2) {
+      assert(morView(lake) == sidecarReadView(lake))
+      assert(morView(lake).size == 285)
+    }
+    // a shallow clone reads the source's sidecars, then its own too
+    val dst = lake.stripSuffix("/lake") + "/branch"
+    Clone.shallow(spark, lake, dst)
+    assert(morView(dst) == sidecarReadView(dst, Some(lake)))
+    DeletionVectors.deleteMor(spark, dst, "k = 2050")
+    assert(morView(dst) == sidecarReadView(dst, Some(lake)))
+    assert(morView(dst).size == 284)
+    // compact applies and retires the sidecars: no memo entry survives
+    DeletionVectors.compact(spark, lake)
+    assert(!DeletionVectors.hasDvs(f, lake))
+    assert(morView(lake) == sidecarReadView(lake))
+    assert(morView(lake).size == 285)
+    DeletionVectors.deleteMor(spark, lake, "k = 1050")
+    assert(morView(lake) == sidecarReadView(lake))
+    assert(morView(lake).size == 284)
+  }
+
+  test("a cursor whose sidecar was vacuumed still fails the read " +
+    "loudly, memo warm or not") {
+    val lake = mkLake()
+    val f = fs(lake)
+    DeletionVectors.deleteMor(spark, lake, "k < 5")
+    val cur = DeletionVectors.cursor(spark, lake)
+    assert(DeletionVectors.readMorAt(spark, lake, cur).count() == 295L)
+    val sidecar = cur.dvFiles.head
+    f.delete(new Path(DeletionVectors.dvDir(lake), sidecar), false)
+    val e = intercept[Exception](
+      DeletionVectors.readMorAt(spark, lake, cur).count())
+    assert(e.getMessage.contains(sidecar), e.getMessage)
+  }
+
+  test("above the broadcast bound the read keeps the distributed " +
+    "vector frame and returns the same rows") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val lake = mkLake()
+    DeletionVectors.deleteMor(spark, lake, "k % 10 = 3")
+    def local(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectLeaves()
+        .exists(_.isInstanceOf[LocalRelation])
+    val want = morView(lake)
+    assert(want.size == 270)
+    assert(local(DeletionVectors.readMor(spark, lake)))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    // 30 pairs estimate at 36 bytes each: 1080 bytes
+    spark.conf.set(key, "1000")
+    try {
+      assert(!local(DeletionVectors.readMor(spark, lake)))
+      assert(morView(lake) == want)
+    } finally spark.conf.set(key, old)
+  }
 }
 
 /** JVM-global kill switch for the pin-loss spec: closures are

@@ -1763,6 +1763,31 @@ class StatsIndexSpec extends SparkSpec {
       Seq(StatsIndex.LongRange("x", 5100L, 5200L))).size == 1)
   }
 
+  test("refresh with no churn publishes nothing: no job, CURRENT and " +
+    "the generation dirs untouched") {
+    val dir = Files.createTempDirectory("graft_sidx_noop_").toString
+    spark.range(0, 500).select(col("id").as("x")).coalesce(1)
+      .write.parquet(s"$dir/data")
+    StatsIndex.build(spark, s"$dir/data", Seq("x"), s"$dir/idx")
+    def state: Seq[(String, Long)] = {
+      val root = new java.io.File(s"$dir/idx")
+      root.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) f.listFiles().toSeq else Seq(f))
+        .map(f => (f.getPath, f.lastModified())).sortBy(_._1) :+
+        ("CURRENT", java.nio.file.Files.readString(
+          new java.io.File(root, "CURRENT").toPath).hashCode.toLong)
+    }
+    val before = state
+    val jobs = jobsOf {
+      assert(StatsIndex.refresh(spark, s"$dir/data", Seq("x"),
+        s"$dir/idx") == ((0, 0)))
+    }
+    assert(jobs == 0, s"a no-churn refresh ran $jobs Spark jobs")
+    assert(state == before, "a no-churn refresh changed the index dir")
+    assert(StatsIndex.prunedTyped(spark, s"$dir/idx",
+      Seq(StatsIndex.LongRange("x", 10L, 20L))).size == 1)
+  }
+
   test("driver-side key-set pruning equals the per-(row, key) SQL arms " +
     "on random long, double and truncated-string layouts") {
     val dir = Files.createTempDirectory("graft_sidx_keys_").toString

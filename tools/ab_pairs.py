@@ -17,9 +17,14 @@ change wins at least 9 of 10 pairs and its median is better than the
 parent's by more than the parent's IQR. `--claim` marks the metric a gain
 is claimed on; the rule is printed for every metric either way.
 
-Every run's result line is appended to `--log` (JSON lines), and pairs
-already in the log for the same workload, seed and seconds are reused, so
-an interrupted series resumes where it stopped.
+Under the summary it prints, per operation kind, each side's median of
+the run's `op_p50_s` (from the `[graftbench] detail` line the benchmark
+writes to stderr) and their ratio, so a change shows which kinds moved.
+
+Every run's result line, with its detail line under "detail", is
+appended to `--log` (JSON lines), and pairs already in the log for the
+same workload, seed and seconds are reused, so an interrupted series
+resumes where it stopped.
 """
 import argparse
 import json
@@ -47,7 +52,7 @@ def run_once(checkout, workload, seed, seconds):
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     t0 = time.monotonic()
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                       stderr=subprocess.DEVNULL, text=True)
+                       stderr=subprocess.PIPE, text=True)
     wall = time.monotonic() - t0
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     try:
@@ -55,6 +60,13 @@ def run_once(checkout, workload, seed, seconds):
     except (IndexError, ValueError):
         res = {"error": f"exit {p.returncode}, no result line"}
     res["wall_s"] = round(wall, 1)
+    tag = "[graftbench] detail "
+    for line in p.stderr.splitlines():
+        if line.startswith(tag):
+            try:
+                res["detail"] = json.loads(line[len(tag):])
+            except ValueError:
+                pass
     return res
 
 
@@ -135,6 +147,22 @@ def main():
               f"{cm:>9.4g} [{c1:.4g}, {c3:.4g}] {c3 - c1:<8.3g} "
               f"{cm / pm if pm else float('nan'):>6.3f} {wins:>3}/{len(ok):<2}"
               f"  {'holds' if rule else 'not met'}{tag}")
+
+    def kinds(seed, side):
+        return results[(seed, side)].get("detail", {}).get("op_p50_s", {})
+    both = [s for s in ok if kinds(s, "parent") and kinds(s, "change")]
+    if both:
+        print(f"\nop_p50_s per operation kind, median over {len(both)} pairs")
+        print(f"{'kind':<26} {'parent':>9} {'change':>9} {'ratio':>6}")
+        names = sorted(set().union(*(kinds(s, side).keys()
+                                     for s in both for side in sides)))
+        for k in names:
+            pv = [kinds(s, "parent")[k] for s in both if k in kinds(s, "parent")]
+            cv = [kinds(s, "change")[k] for s in both if k in kinds(s, "change")]
+            if pv and cv:
+                pm, cm = statistics.median(pv), statistics.median(cv)
+                print(f"{k:<26} {pm:>9.4g} {cm:>9.4g} "
+                      f"{cm / pm if pm else float('nan'):>6.3f}")
 
 
 if __name__ == "__main__":
