@@ -13,14 +13,15 @@ import graft.sources.FileMemo
   *
   *  - pairs: `_dv` sidecars holding `pairs` `(file, pos)` pairs over 100
   *    Spark-shaped data-file names, in 10 sidecar files; the cold
-  *    `vectorsFor` (footer row counts plus one job over the sidecars)
-  *    and the warm one (the local frame built from the memo, median of
-  *    5), which runs no job;
+  *    `vectorsFor` (footer row counts plus one job over the sidecars,
+  *    then the local frame built and analyzed) and the warm one (the
+  *    frame reused for the unchanged sidecar set, median of 5), which
+  *    runs no job;
   *  - schemas: `files` data files of 8 columns; the cold `readFiles`
   *    with `mergeSchema` (every footer read on the driver) and the warm
-  *    one (median of 5). Both walls include Spark's own file index over
-  *    the paths (a listing job above 32 paths), so their difference is
-  *    the footer reads.
+  *    one (median of 5). Spark is handed the listed file statuses, so
+  *    neither wall holds a listing of the paths and their difference
+  *    is the footer reads.
   *
   * The session raises `spark.sql.autoBroadcastJoinThreshold` to 64 MB
   * so 10⁶ pairs (36 MB by Spark's estimate) take the local path; at the
@@ -51,8 +52,9 @@ object MorMemoScale {
     def median(f: => Unit): Double = (1 to 5).map(_ => secs(f)).sorted.apply(2)
     // the memo object's fields compile to statics, which SizeEstimator
     // skips: estimate their values instead
+    // (the reused vector frames are Spark's own rows, held apart)
     val fields = FileMemo.getClass.getDeclaredFields.toSeq
-      .filter(_.getName != "MODULE$")
+      .filter(f => f.getName != "MODULE$" && f.getName != "frames")
     fields.foreach(_.setAccessible(true))
     def held: Long = SizeEstimator.estimate(fields.map(_.get(null)))
 

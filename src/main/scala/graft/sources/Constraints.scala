@@ -152,20 +152,17 @@ object Constraints {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     validatePaths(spark, lakeDir,
-      CommitLog.resolveDataPaths(fs, lakeDir, files))
+      CommitLog.resolveDataPaths(fs, lakeDir, files), list(fs, lakeDir))
   }
 
   /** [[validateFiles]] for EXPLICIT physical paths — the OCC verbs
     * validate their STAGED bytes (written aside, not yet renamed into
     * the lake) before entering the commit section, so the gate adds
-    * zero time under the lock. */
+    * zero time under the lock. `defs` are the definitions the caller
+    * pinned. */
   private[graft] def validatePaths(spark: SparkSession, lakeDir: String,
-      paths: Seq[String]): Unit = {
-    if (paths.isEmpty) return
-    val fs = new Path(lakeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val defs = list(fs, lakeDir)
-    if (defs.isEmpty) return
+      paths: Seq[String], defs: Seq[(String, String)]): Unit = {
+    if (paths.isEmpty || defs.isEmpty) return
     // Definitions live in LOGICAL-name space ([[add]] validated
     // against the mapped live view), so the gate must evaluate them
     // there too: raw parquet carries PHYSICAL names, and a predicate

@@ -344,8 +344,7 @@ object DeletionVectors {
           indexDir, committed) match {
         case Some(Seq()) => // provably pure-insert merge
           hitsIn(lake).limit(0)
-        case Some(cand) => hitsIn(
-          spark.read.schema(lake.schema).parquet(cand: _*))
+        case Some(cand) => hitsIn(FileMemo.readSubset(spark, lake, cand))
         case None => hitsIn(lake)
       }
       val fresh = vectors(spark, lakeDir) match {
@@ -742,8 +741,7 @@ object DeletionVectors {
       val base = MergeInto.rangeCandidateFiles(spark, committed,
           indexDir, impliedRanges) match {
         case Some(Seq()) => lake.limit(0)
-        case Some(cand) =>
-          spark.read.schema(lake.schema).parquet(cand: _*)
+        case Some(cand) => FileMemo.readSubset(spark, lake, cand)
         case None => lake
       }
       // matched LIVE rows, with their positions attached: the covered
@@ -1092,7 +1090,6 @@ object DeletionVectors {
     val schemaFrame = FileMemo.readFiles(spark, lakeDir, committedH,
       mergeSchema)
     requireNoClash(schemaFrame, "readMorChanges")
-    val schema = schemaFrame.schema
     val none = schemaFrame.limit(0)
       .withColumn("_change_type", lit(null).cast("string"))
     val newFiles = (filesH -- from.files).toSeq.sorted
@@ -1102,8 +1099,7 @@ object DeletionVectors {
     val inserts =
       if (newFiles.isEmpty) none
       else applyVectors(
-        spark.read.schema(schema)
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, newFiles): _*),
+        FileMemo.readSubset(spark, schemaFrame, newFiles),
         vectorsFor(spark, lakeDir, dvH))
         .withColumn("_change_type", lit("insert"))
     // deletes: the window's new pairs restricted to cursor-era files,
@@ -1121,8 +1117,7 @@ object DeletionVectors {
           "file")
         val touched = touched0.sorted
         if (touched.isEmpty) none
-        else spark.read.schema(schema)
-          .parquet(CommitLog.resolveDataPaths(fs, lakeDir, touched): _*)
+        else FileMemo.readSubset(spark, schemaFrame, touched)
           .withColumn(FileCol, fileNameCol)
           .withColumn(PosCol, col("_metadata.row_index"))
           .join(broadcast(newPairs.select(col("file").as(FileCol),

@@ -5,11 +5,18 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetSchemaSteps, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver memos for the merge-on-read read surface, keyed by WRITE-ONCE
   * file identity `(qualified path, length, mtime)` — the rule
@@ -19,17 +26,25 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField,
   * file written again lists with a new length or mtime and misses.
   *
   *  - Footer schemas of data files: [[readFiles]] builds a read's
-  *    schema on the driver by Spark's own inference rule and hands it
-  *    to `spark.read.schema(s)`, so no read runs a schema-inference
-  *    job. A miss reads that file's footer on the driver.
+  *    schema on the driver by Spark's own inference rule, so no read
+  *    runs a schema-inference job. A miss reads that file's footer on
+  *    the driver.
   *  - `(file, pos)` pairs of sidecars: [[vectorsFor]] returns the
-  *    covered set as a local frame, which AQE broadcasts without a
-  *    job. Misses are read in one job over the missing sidecars, or
-  *    seeded by the writer that staged them ([[seedPairs]]). The local
-  *    frame is used only while its estimated size is within
-  *    `spark.sql.autoBroadcastJoinThreshold` — the bound under which
-  *    the join broadcasts that side anyway; above it (or with the
-  *    threshold disabled) the read keeps the distributed frame.
+  *    covered set as a local frame of internal rows, whose broadcast
+  *    is one job that reads nothing. Misses are read in one job over
+  *    the missing sidecars, or seeded by the writer that staged them
+  *    ([[seedPairs]]). The local frame is used only while its
+  *    estimated size is within `spark.sql.autoBroadcastJoinThreshold`
+  *    — the bound under which the join broadcasts that side anyway;
+  *    above it (or with the threshold disabled) the read keeps the
+  *    distributed frame.
+  *
+  * Every read of resolved files — data files, their candidate subsets
+  * ([[readSubset]]) and sidecars — goes through [[scan]], which hands
+  * Spark the statuses the listing returned. A warm read of a lake
+  * therefore costs one `listStatus` of the lake dir and one of its
+  * `_dv` (plus one per clone hop) and no Spark job before its action:
+  * Spark neither probes nor lists the files, however many there are.
   *
   * Each memo is a small fixed LRU over directories (a lake, its `_dv`,
   * each clone hop), and every use lists the directory once: entries for
@@ -118,8 +133,9 @@ private[graft] object FileMemo {
     * footer schemas: without `mergeSchema`, the footer of the first
     * file by path (the one file Spark's inference reads); with it,
     * every footer merged in that order, case sensitivity as the
-    * session's. A name that resolves nowhere falls through to Spark's
-    * read, which fails on it as before. */
+    * session's. The frame is a [[scan]] of the listed statuses. A
+    * name that resolves nowhere falls through to Spark's read, which
+    * fails on it as before. */
   def readFiles(spark: SparkSession, lakeDir: String, names: Seq[String],
       mergeSchema: Boolean = false): DataFrame = {
     val fs = new Path(lakeDir)
@@ -140,8 +156,57 @@ private[graft] object FileMemo {
         val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
         val schema = touched.map(st => found(idOf(st)))
           .reduceLeft(ParquetSchemaSteps.merge(_, _, caseSensitive))
-        spark.read.schema(schema).parquet(sts.map(_.getPath.toString): _*)
+        scan(spark, sts, schema)
     }
+  }
+
+  /** The parquet files `sts` as one frame of `schema`, read through
+    * Spark's own file index with its listing step fed: an
+    * `InMemoryFileIndex` whose status cache answers each root path
+    * with the status already held, so Spark neither probes nor lists
+    * any of them (no existence check per path, no parallel listing job
+    * above `parallelPartitionDiscovery.threshold` paths). Partition
+    * inference, `_metadata`, `input_file_name`, `ignoreMissingFiles`
+    * and relation equality are the index's own. A status from
+    * `listStatus` carries no block locations, so the scan has no
+    * preferred hosts: `file:` and object stores have none to lose;
+    * HDFS locality is not kept. */
+  private def scan(spark: SparkSession, sts: Seq[FileStatus],
+      schema: StructType): DataFrame = {
+    val held = sts.iterator.map(st => st.getPath -> Array(st)).toMap
+    val fed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        held.get(path)
+      override def putLeafFiles(path: Path,
+          files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, sts.map(_.getPath),
+      Map.empty, Some(schema), fed)
+    spark.baseRelationToDataFrame(
+      ParquetSchemaSteps.relation(spark, index, schema))
+  }
+
+  /** The files `names` (names or paths) of `lake`, a frame
+    * [[readFiles]] built, read with `lake`'s schema: the statuses are
+    * the ones `lake`'s file index already holds, so this touches no
+    * filesystem. For the candidate subsets the DML verbs narrow a
+    * committed read to. */
+  def readSubset(spark: SparkSession, lake: DataFrame,
+      names: Seq[String]): DataFrame = {
+    val plan = lake.queryExecution.logical
+    val index = Some(plan).collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.location }
+      .collect { case i: PartitioningAwareFileIndex => i }
+      .getOrElse(throw new IllegalArgumentException(
+        s"readSubset: not a plain file read: ${plan.nodeName}"))
+    val held = index.allFiles().iterator
+      .map(st => st.getPath.getName -> st).toMap
+    scan(spark, names.map { n =>
+      val name = new Path(n).getName
+      held.getOrElse(name, throw new IllegalArgumentException(
+        s"readSubset: $n is not among the files of the read"))
+    }, lake.schema)
   }
 
   /** Footer schemas of `sts`, read on the driver and memoized. */
@@ -177,6 +242,18 @@ private[graft] object FileMemo {
     * default sizes. */
   private val PairBytes = 8L + StringType.defaultSize + LongType.defaultSize
 
+  /** The last local vector frames built, by session and covered
+    * sidecar identities. Spark's analysis of a local relation walks
+    * every row, so a frame is analyzed once and a read of an unchanged
+    * covered set reuses it. */
+  private val frames =
+    new java.util.LinkedHashMap[(SparkSession, Seq[Id]), DataFrame](8,
+        0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, Seq[Id]), DataFrame])
+          : Boolean = size() > 4
+    }
+
   /** Does a local frame of `n` pairs stay within the broadcast bound? */
   private def fitsLocal(spark: SparkSession, n: Long): Boolean = {
     val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
@@ -192,11 +269,10 @@ private[graft] object FileMemo {
       covered: Seq[String]): DataFrame = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def distributed(paths: Seq[String]): DataFrame =
-      spark.read.schema(DvSchema).parquet(paths: _*).distinct()
     resolve(fs, lakeDir, covered, DeletionVectors.dvDir, pairs) match {
-      case None => distributed(
-        DeletionVectors.resolveDvPaths(fs, lakeDir, covered))
+      case None => spark.read.schema(DvSchema)
+        .parquet(DeletionVectors.resolveDvPaths(fs, lakeDir, covered): _*)
+        .distinct()
       case Some((sts, hits)) =>
         val misses = sts.filterNot(st => hits.contains(idOf(st)))
         def count(p: Map[String, Array[Long]]): Long =
@@ -207,11 +283,15 @@ private[graft] object FileMemo {
           .map(count).sum + footers(spark, misses)
           .map(_.getParquetMetadata.getBlocks.asScala
             .map(_.getRowCount).sum).sum
-        if (!fitsLocal(spark, bound))
-          distributed(sts.map(_.getPath.toString))
+        if (!fitsLocal(spark, bound)) scan(spark, sts, DvSchema).distinct()
         else {
-          val all = hits ++ readPairs(spark, misses)
-          local(spark, sts.map(st => all(idOf(st))))
+          val key = (spark, sts.map(idOf))
+          Option(frames.synchronized(frames.get(key))).getOrElse {
+            val all = hits ++ readPairs(spark, misses)
+            val df = local(spark, sts.map(st => all(idOf(st))))
+            frames.synchronized(frames.put(key, df))
+            df
+          }
         }
     }
   }
@@ -221,8 +301,7 @@ private[graft] object FileMemo {
       sts: Seq[FileStatus]): Map[Id, Map[String, Array[Long]]] =
     if (sts.isEmpty) Map.empty
     else {
-      val rows = spark.read.schema(DvSchema)
-        .parquet(sts.map(_.getPath.toString): _*)
+      val rows = scan(spark, sts, DvSchema)
         .select(col("_metadata.file_name"), col("file"), col("pos"))
         .collect()
       val bySidecar = rows.groupBy(_.getString(0))
@@ -242,15 +321,23 @@ private[graft] object FileMemo {
       f -> ps.iterator.map(_._2).toArray.sorted
     }
 
-  /** The union of `parts` as a local frame, one row per distinct pair. */
+  /** The union of `parts` as a local frame, one row per distinct pair,
+    * built as internal rows (one shared string per file). */
   private def local(spark: SparkSession,
       parts: Seq[Map[String, Array[Long]]]): DataFrame = {
     val rows = parts.flatMap(_.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
       .flatMap { case (f, ps) =>
-        ps.iterator.flatMap(_._2).toArray.sorted.distinct.iterator
-          .map(p => Row(f, p))
+        val name = UTF8String.fromString(f)
+        val pos = ps match {
+          case Seq((_, one)) => one // sorted by [[grouped]]
+          case _ => ps.iterator.flatMap(_._2).toArray.sorted
+        }
+        pos.iterator.zipWithIndex.collect {
+          case (p, i) if i == 0 || pos(i - 1) != p =>
+            new GenericInternalRow(Array[Any](name, p)): InternalRow
+        }
       }
-    spark.createDataFrame(rows.asJava, DvSchema)
+    ParquetSchemaSteps.localFrame(spark, DvSchema, rows)
   }
 
   /** The pairs of a small pinned `(file, pos)` frame of `n` rows, for a

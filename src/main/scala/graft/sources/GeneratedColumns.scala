@@ -148,11 +148,17 @@ object GeneratedColumns {
       : DataFrame = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    list(fs, lakeDir).foldLeft(df) { case (d, (c, e, t)) =>
+    fill(df, list(fs, lakeDir))
+  }
+
+  /** [[fill]] with the definitions `defs` already read — the OCC
+    * verbs pass each attempt's pinned snapshot. */
+  private[sources] def fill(df: DataFrame,
+      defs: Seq[(String, String, String)]): DataFrame =
+    defs.foldLeft(df) { case (d, (c, e, t)) =>
       if (d.columns.contains(c)) d
       else d.withColumn(c, expr(e).cast(t))
     }
-  }
 
   /** SET assignments must not name a generated column — its value is
     * the expression's, never the caller's. Shared by both UPDATE
@@ -194,18 +200,15 @@ object GeneratedColumns {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     validatePaths(spark, lakeDir,
-      CommitLog.resolveDataPaths(fs, lakeDir, files))
+      CommitLog.resolveDataPaths(fs, lakeDir, files), list(fs, lakeDir))
   }
 
-  /** [[validateFiles]] for EXPLICIT physical paths — the OCC verbs'
-    * staged-bytes gate (see [[Constraints.validatePaths]]). */
+  /** [[validateFiles]] for EXPLICIT physical paths against the
+    * definitions `defs` the caller pinned — the OCC verbs' staged-bytes
+    * gate (see [[Constraints.validatePaths]]). */
   private[graft] def validatePaths(spark: SparkSession, lakeDir: String,
-      paths: Seq[String]): Unit = {
-    if (paths.isEmpty) return
-    val fs = new Path(lakeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val defs = list(fs, lakeDir)
-    if (defs.isEmpty) return
+      paths: Seq[String], defs: Seq[(String, String, String)]): Unit = {
+    if (paths.isEmpty || defs.isEmpty) return
     // evaluate in LOGICAL-name space, same reasoning as
     // [[Constraints.validatePaths]]: definitions were captured against
     // the mapped live view, raw parquet carries physical names

@@ -100,9 +100,20 @@ object Occ {
     * fill), while [[append]] re-validates its unchanged staged bytes
     * under the lock (caller-provided rows; only the gate re-runs). */
   private def defsSnapshot(fs: org.apache.hadoop.fs.FileSystem,
-      lakeDir: String): (Seq[(String, String)],
-      Seq[(String, String, String)]) =
+      lakeDir: String): Defs =
     (Constraints.list(fs, lakeDir), GeneratedColumns.list(fs, lakeDir))
+
+  private type Defs = (Seq[(String, String)], Seq[(String, String, String)])
+
+  /** Both staged-bytes gates ([[Constraints.validatePaths]],
+    * [[GeneratedColumns.validatePaths]]) against the definitions
+    * `defs` an attempt pinned, so the gates read no definition record
+    * of their own. */
+  private def validateStaged(spark: SparkSession, lakeDir: String,
+      paths: Seq[String], defs: Defs): Unit = {
+    Constraints.validatePaths(spark, lakeDir, paths, defs._1)
+    GeneratedColumns.validatePaths(spark, lakeDir, paths, defs._2)
+  }
 
   /** Runs an OCC verb's unlocked preparation over the snapshot
     * `filesSnap`. A copy-on-write winner vacuums the files it replaced
@@ -208,10 +219,8 @@ object Occ {
     if (!hasRows) { fs.delete(new Path(stage), true); return -1L }
     // pre-publish gates read the STAGED bytes — zero lock time
     val defsSnap = defsSnapshot(fs, lakeDir)
-    Constraints.validatePaths(spark, lakeDir,
-      names.map(n => s"$stage/$n"))
-    GeneratedColumns.validatePaths(spark, lakeDir,
-      names.map(n => s"$stage/$n"))
+    validateStaged(spark, lakeDir,
+      names.map(n => s"$stage/$n"), defsSnap)
     beforeCommit()
     val id = CommitLog.withWriterLock(fs, lakeDir,
         waitMs = commitWaitMs) {
@@ -223,12 +232,10 @@ object Occ {
       // violate a live definition. Rare (definition churn), so the
       // usually-metadata-scale section paying one O(batch) re-read
       // here is the cheap arm of the advice's retry-or-revalidate
-      if (defsSnapshot(fs, lakeDir) != defsSnap) {
-        Constraints.validatePaths(spark, lakeDir,
-          names.map(n => s"$stage/$n"))
-        GeneratedColumns.validatePaths(spark, lakeDir,
-          names.map(n => s"$stage/$n"))
-      }
+      val defsNow = defsSnapshot(fs, lakeDir)
+      if (defsNow != defsSnap)
+        validateStaged(spark, lakeDir, names.map(n => s"$stage/$n"),
+          defsNow)
       // first commit ever on a lake with PRE-EXISTING plain files:
       // grandfather them into the bootstrap manifest first (the
       // LayoutSink convention) — without it those files would drop
@@ -424,10 +431,8 @@ object Occ {
             (n + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
           updated.repartition(nDelta).write.parquet(s"$stage/data")
           val delta = stagedNames(fs, s"$stage/data")
-          Constraints.validatePaths(spark, lakeDir,
-            delta.map(d => s"$stage/data/$d"))
-          GeneratedColumns.validatePaths(spark, lakeDir,
-            delta.map(d => s"$stage/data/$d"))
+          validateStaged(spark, lakeDir,
+            delta.map(d => s"$stage/data/$d"), defsSnap)
           // change feed: pre/post images staged unlocked off the
           // already-checkpointed `matched` rows, renamed into place iff
           // we win
@@ -531,7 +536,7 @@ object Occ {
           "would resurrect DV-deleted rows)")
       require(filesSnap.nonEmpty,
         s"merge(occ): no committed files in $lakeDir — ingest first")
-      val updates0 = GeneratedColumns.fill(spark, lakeDir, updates)
+      val updates0 = GeneratedColumns.fill(updates, defsSnap._2)
         .localCheckpoint()
       MergeInto.requireUniqueKeys(updates0, keys, "merge(occ)")
       // pin the distinct key set once per attempt — it feeds the
@@ -557,23 +562,19 @@ object Occ {
             indexDir, committed) match {
           case Some(Seq()) => Set.empty[String] // pure-insert merge
           case Some(cand) => touchedIn(
-            spark.read.schema(lake.schema).parquet(cand: _*))
+            FileMemo.readSubset(spark, lake, cand))
           case None => touchedIn(lake)
         }
         val survivors =
           if (touched.isEmpty) updates0
-          else spark.read.schema(lake.schema)
-            .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
-              touched.toSeq.sorted): _*)
+          else FileMemo.readSubset(spark, lake, touched.toSeq.sorted)
             .join(updKeys, keys, "left_anti")
             .unionByName(updates0, allowMissingColumns = true)
         survivors.repartition(filesPerRewrite).write
           .parquet(s"$stage/data")
         val fresh = stagedNames(fs, s"$stage/data")
-        Constraints.validatePaths(spark, lakeDir,
-          fresh.map(n => s"$stage/data/$n"))
-        GeneratedColumns.validatePaths(spark, lakeDir,
-          fresh.map(n => s"$stage/data/$n"))
+        validateStaged(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"), defsSnap)
         // change feed: same images as the locked verb
         // ([[MergeInto.merge]]), staged unlocked off the pinned snapshot
         if (cdcWanted) {
@@ -581,9 +582,8 @@ object Occ {
           val cdc =
             if (touched.isEmpty) updates0.withColumn(ct, lit("insert"))
             else {
-              val base = spark.read.schema(lake.schema)
-                .parquet(CommitLog.resolveDataPaths(fs, lakeDir,
-                  touched.toSeq.sorted): _*)
+              val base = FileMemo.readSubset(spark, lake,
+                touched.toSeq.sorted)
               // pinned: feeds two joins below — unpinned, one feed
               // write scans the touched files three times
               val baseKeys = base.select(keys.map(col): _*).distinct()
@@ -771,7 +771,7 @@ object Occ {
       // change is a conflict, and the retry re-fills under the fresh
       // definitions instead of publishing stale-generated rows
       val defsSnap = defsSnapshot(fs, lakeDir)
-      val updates0 = GeneratedColumns.fill(spark, lakeDir, updates)
+      val updates0 = GeneratedColumns.fill(updates, defsSnap._2)
         .localCheckpoint()
       val appended = Pins.requireUniqueKeysCounted(updates0, keys,
         "mergeMor(occ)")
@@ -799,8 +799,7 @@ object Occ {
         val hits = MergeInto.keyCandidateFiles(spark, updates0, keys,
             indexDir, committed) match {
           case Some(Seq()) => hitsIn(lake).limit(0)
-          case Some(cand) => hitsIn(
-            spark.read.schema(lake.schema).parquet(cand: _*))
+          case Some(cand) => hitsIn(FileMemo.readSubset(spark, lake, cand))
           case None => hitsIn(lake)
         }
         // vectors from the SNAPSHOT's coverage, not a re-resolution — a
@@ -819,10 +818,8 @@ object Occ {
           (appended + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
         updates0.repartition(nDelta).write.parquet(s"$stage/data")
         val delta = stagedNames(fs, s"$stage/data")
-        Constraints.validatePaths(spark, lakeDir,
-          delta.map(n => s"$stage/data/$n"))
-        GeneratedColumns.validatePaths(spark, lakeDir,
-          delta.map(n => s"$stage/data/$n"))
+        validateStaged(spark, lakeDir,
+          delta.map(n => s"$stage/data/$n"), defsSnap)
         // change feed: same images as the locked MoR merge
         // ([[DeletionVectors.mergeMor]]), staged unlocked off the pinned
         // snapshot — pre-images resolved by semi-joining the snapshot
@@ -953,10 +950,8 @@ object Occ {
             sv.repartition(filesPerRewrite).write.parquet(s"$stage/data")
             stagedNames(fs, s"$stage/data")
         }
-        Constraints.validatePaths(spark, lakeDir,
-          fresh.map(n => s"$stage/data/$n"))
-        GeneratedColumns.validatePaths(spark, lakeDir,
-          fresh.map(n => s"$stage/data/$n"))
+        validateStaged(spark, lakeDir,
+          fresh.map(n => s"$stage/data/$n"), defsSnap)
         if (cdcWanted)
           changes.getOrElse(throw new IllegalStateException(
             "mergeClauses(occ): change feed enabled but no change " +
@@ -1069,10 +1064,8 @@ object Occ {
                 .parquet(s"$stage/data")
               stagedNames(fs, s"$stage/data")
             }
-          Constraints.validatePaths(spark, lakeDir,
-            delta.map(n => s"$stage/data/$n"))
-          GeneratedColumns.validatePaths(spark, lakeDir,
-            delta.map(n => s"$stage/data/$n"))
+          validateStaged(spark, lakeDir,
+            delta.map(n => s"$stage/data/$n"), defsSnap)
           if (cdcWanted)
             DeletionVectors.clausesMorChanges(lake, prep)
               .write.parquet(s"$stage/cdc")

@@ -239,7 +239,16 @@ object VectorIndex {
 
   private def readMeta(fs: org.apache.hadoop.fs.FileSystem,
       gen: Path): Meta = {
-    val in = fs.open(new Path(gen, "meta.txt"))
+    val in =
+      try fs.open(new Path(gen, "meta.txt"))
+      catch {
+        case e: java.io.FileNotFoundException
+            if fs.exists(new Path(gen, "meta")) =>
+          throw new StaleVectorIndexException(
+            s"vector index ${gen.getParent}: generation ${gen.getName} " +
+              "has the old layout (a parquet meta/ dir, no meta.txt) — " +
+              "rebuild the index with VectorIndex.build").initCause(e)
+      }
     val lines =
       try {
         val buf = new java.io.ByteArrayOutputStream()
@@ -362,11 +371,15 @@ object VectorIndex {
     * generation references (crashed publishes' debris,
     * dropped-generation leftovers). Runs after the pointer flip, when
     * `keptGens` = the new live generation + the previous one
-    * (in-flight reader grace). Driver FS I/O only. */
+    * (in-flight reader grace). A kept generation whose meta cannot be
+    * read (the old parquet layout) has unknown references, so nothing
+    * is deleted. Driver FS I/O only. */
   private def sweepUnreferenced(fs: org.apache.hadoop.fs.FileSystem,
       indexDir: String, keptGens: Seq[Path]): Unit = {
-    val metas = keptGens.filter(g => fs.exists(g))
-      .map(g => readMeta(fs, g))
+    val read = keptGens.filter(g => fs.exists(g))
+      .map(g => scala.util.Try(readMeta(fs, g)))
+    if (read.exists(_.isFailure)) return
+    val metas = read.map(_.get)
     val segRefs = metas.flatMap(_.segments).toSet
     val auxRefs = metas.flatMap(m =>
       Seq(m.centsDir, m.codebookDir)).filter(_.nonEmpty).toSet
@@ -510,30 +523,8 @@ object VectorIndex {
       rows.repartition(spark.sparkContext.defaultParallelism,
         col(params.idCol)),
       cents, codebook, params)
-    val segment = writeSegment(spark, indexDir, assigned, params)
-    // centroids/codebook land ONCE as immutable aux dirs — every later
-    // refresh/compact publish carries them by reference (they are
-    // pinned at build time by contract, so rewriting them per publish
-    // was pure fixed cost)
+    val staged = writeSegment(spark, indexDir, assigned, params)
     val fs = fsOf(spark, indexDir)
-    val centsDir = s"cent-${java.util.UUID.randomUUID()}"
-    cents.repartition(1).write.parquet(
-      new Path(auxRoot(indexDir), centsDir).toString)
-    val codebookDir =
-      if (params.pqM == 0) ""
-      else {
-        import spark.implicits._
-        val d = s"code-${java.util.UUID.randomUUID()}"
-        codebook.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
-          .toDF("code_id", "codevec")
-          .repartition(1).write.parquet(
-            new Path(auxRoot(indexDir), d).toString)
-        d
-      }
-    // drift baseline: how well the just-trained centroids fit their
-    // own training corpus — the reference level [[driftReport]]
-    // compares refresh batches against
-    val base = segmentMeanAsim(spark, indexDir, segment)
     // publish under the LAKE's writer lock: two index writers racing
     // the vNNNNN allocation would collide on the generation dir (the
     // same arbitration every lake publish uses; the expensive segment
@@ -541,6 +532,35 @@ object VectorIndex {
     // wins whole, which is rebuild semantics.
     CommitLog.withWriterLock(fsOf(spark, lakeDir), lakeDir,
         waitMs = 30000L) {
+      // every publish sweeps the segment and aux dirs no kept
+      // generation references, and until this publish nothing
+      // references the staged segment: a writer that published since
+      // it was written swept it, so it is written again here
+      val segment =
+        if (fs.exists(new Path(segmentsRoot(indexDir), staged))) staged
+        else writeSegment(spark, indexDir, assigned, params)
+      // centroids/codebook land ONCE as immutable aux dirs, inside the
+      // lock for the same reason — every later refresh/compact publish
+      // carries them by reference (they are pinned at build time by
+      // contract, so rewriting them per publish was pure fixed cost)
+      val centsDir = s"cent-${java.util.UUID.randomUUID()}"
+      cents.repartition(1).write.parquet(
+        new Path(auxRoot(indexDir), centsDir).toString)
+      val codebookDir =
+        if (params.pqM == 0) ""
+        else {
+          import spark.implicits._
+          val d = s"code-${java.util.UUID.randomUUID()}"
+          codebook.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
+            .toDF("code_id", "codevec")
+            .repartition(1).write.parquet(
+              new Path(auxRoot(indexDir), d).toString)
+          d
+        }
+      // drift baseline: how well the just-trained centroids fit their
+      // own training corpus — the reference level [[driftReport]]
+      // compares refresh batches against
+      val base = segmentMeanAsim(spark, indexDir, segment)
       publishGeneration(spark, indexDir) { gen =>
         fs.mkdirs(gen)
         writeGeneration(fs, gen, centsDir, Seq(segment), codebookDir,

@@ -150,13 +150,14 @@ object LayoutSink {
       def defsPin() = (graft.sources.Constraints.list(fs, lakeDir),
         graft.sources.GeneratedColumns.list(fs, lakeDir))
       val pinnedDefs = defsPin()
-      def validateStaged(): Unit = {
+      def validateStaged(defs: (Seq[(String, String)],
+          Seq[(String, String, String)])): Unit = {
         graft.sources.Constraints.validatePaths(spark, lakeDir,
-          newFiles.map(n => s"$stage/$n"))
+          newFiles.map(n => s"$stage/$n"), defs._1)
         graft.sources.GeneratedColumns.validatePaths(spark, lakeDir,
-          newFiles.map(n => s"$stage/$n"))
+          newFiles.map(n => s"$stage/$n"), defs._2)
       }
-      validateStaged()
+      validateStaged(pinnedDefs)
       if (failAfterWrite)
         throw new RuntimeException("injected crash before commit")
       // bounded wait, NOT fail-fast: the concurrent ingest+OCC mix
@@ -172,7 +173,8 @@ object LayoutSink {
         // rows (isCommitted reads "id ≤ committed" as done) — the
         // marker makes Occ.append refuse. Idempotent, one probe
         CommitLog.claimEpochOwner(fs, lakeDir, "LayoutSink")
-        if (defsPin() != pinnedDefs) validateStaged()
+        val defsNow = defsPin()
+        if (defsNow != pinnedDefs) validateStaged(defsNow)
         // first commit ever: grandfather pre-existing (bootstrap)
         // files into their own manifest BEFORE anything lands, so a
         // crash on the very first batch still leaves its debris

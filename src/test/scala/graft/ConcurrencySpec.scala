@@ -645,6 +645,38 @@ class ConcurrencySpec extends SparkSpec {
         "span both stages")
     f.delete(lockPath, false)
   }
+
+  test("an index writer publishing while VectorIndex.build prepares " +
+    "cannot sweep the segment and aux dirs build then publishes") {
+    import graft.sources.VectorIndex
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftlockgate.impl", classOf[LockGateFs].getName)
+    val emb = graft.queries.Oracle
+      .table(spark, "/root/testdata/sf0.001", "embeddings")
+      .filter(col("vec_id") < 400)
+    val dir = Files.createTempDirectory("graft_vidx_race_").toString
+    assert(Occ.append(spark, s"$dir/lake", emb) >= 0L)
+    val lake = s"graftlockgate://$dir/lake"
+    val idx = s"$dir/vidx"
+    VectorIndex.build(spark, lake, idx)
+    // a second build publishes after this build wrote its segment and
+    // before it takes the writer lock; that publish sweeps every
+    // segment and aux dir no kept generation references
+    val fired = new AtomicBoolean(false)
+    LockGateFs.arm(() => {
+      VectorIndex.build(spark, lake, idx)
+      fired.set(true)
+    })
+    val params = VectorIndex.Params(pqM = 4, pqK = 16)
+    try VectorIndex.build(spark, lake, idx, params)
+    finally LockGateFs.disarm()
+    assert(fired.get, "the racing build never ran")
+    assert(VectorIndex.centroids(spark, idx).count() == 16L)
+    val qvec = emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).head.getSeq[Float](0)
+    assert(VectorIndex.queryPq(spark, lake, idx, qvec.toArray, k = 10,
+      probes = 4, shortlist = 40).count() == 10L)
+  }
 }
 
 /** The local filesystem under the scheme `graftgate:`, with one hook:
@@ -682,6 +714,40 @@ object GateFs {
           case _ => false
         }
       }.map { h => armed = None; h._2 }
+    }
+    hook.foreach(_())
+  }
+}
+
+/** The local filesystem under the scheme `graftlockgate:`, with one
+  * hook: armed, it runs once when `VectorIndex.build` is about to take
+  * the lake's writer lock (the lock's `mkdirs` of the log dir), before
+  * the lock file exists. */
+class LockGateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create("graftlockgate:///")
+  override def getScheme: String = "graftlockgate"
+  override def mkdirs(p: Path): Boolean = {
+    LockGateFs.fire()
+    super.mkdirs(p)
+  }
+}
+
+object LockGateFs {
+  private var armed: Option[() => Unit] = None
+
+  def arm(hook: () => Unit): Unit = synchronized { armed = Some(hook) }
+
+  def disarm(): Unit = synchronized { armed = None }
+
+  private def fire(): Unit = {
+    val frames = Thread.currentThread.getStackTrace.toSeq
+      .map(e => (e.getClassName, e.getMethodName))
+    val hook = synchronized {
+      armed.filter { _ =>
+        frames.contains(("graft.sources.CommitLog$", "withFileWriterLock")) &&
+          frames.contains(("graft.sources.VectorIndex$", "build"))
+      }.map { h => armed = None; h }
     }
     hook.foreach(_())
   }

@@ -370,6 +370,37 @@ class VectorIndexSpec extends SparkSpec {
     assert(r.getDouble(2) >= 0.9,
       s"stored trained-centroid recall@10 = ${r.getDouble(2)}")
   }
+
+  test("a generation in the old layout (parquet meta/ dir, no meta.txt) " +
+    "fails with a rebuild error naming the index, and a build over it " +
+    "publishes without sweeping its unknown references") {
+    import org.apache.hadoop.fs.Path
+    val (lake, idx) = mkLake(emb.filter(col("vec_id") < 400))
+    VectorIndex.build(spark, lake, idx)
+    val f = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = f.open(new Path(idx, "CURRENT"))
+    val live = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+    val gen = new Path(idx, live)
+    assert(f.delete(new Path(gen, "meta.txt"), false))
+    spark.range(3).write.parquet(new Path(gen, "meta").toString)
+    def kept(sub: String): Set[String] =
+      f.listStatus(new Path(idx, sub)).map(_.getPath.getName).toSet
+    val (segs, aux) = (kept("segments"), kept("aux"))
+    for (read <- Seq[() => Any](
+        () => VectorIndex.centroids(spark, idx),
+        () => VectorIndex.refresh(spark, lake, idx))) {
+      val e = intercept[StaleVectorIndexException](read())
+      assert(e.getMessage.contains(idx) &&
+        e.getMessage.contains("rebuild the index"), e.getMessage)
+    }
+    VectorIndex.build(spark, lake, idx)
+    assert(segs.subsetOf(kept("segments")) && aux.subsetOf(kept("aux")),
+      "a publish swept references of an unreadable kept generation")
+    assert(VectorIndex.centroids(spark, idx).count() == 16L)
+    assert(VectorIndex.query(spark, lake, idx, qvec, k = 10, probes = 4)
+      .count() == 10L)
+  }
 }
 
 /** The local filesystem under a second scheme, `graftalt:` — enough to
