@@ -303,20 +303,18 @@ object DeletionVectors {
     // the shared PHYSICAL schema (identity on unmapped lakes).
     // generated-column FILL second: an update frame omitting a defined
     // column gets it computed before compatibility checks and the
-    // delta write. localCheckpoint materializes the caller's update
-    // DAG exactly ONCE (outside the writer lock): the key-discovery
-    // join, the row count that sizes the delta files, and the write
-    // all read the materialized partitions instead of re-executing a
-    // possibly expensive plan.
+    // delta write. [[UpdateBatch]] materializes the caller's update
+    // DAG exactly ONCE (outside the writer lock), counting it in the
+    // same job: the uniqueness gate, the key-discovery join, the row
+    // count that sizes the delta files, and the write all read the
+    // materialized partitions instead of re-executing a possibly
+    // expensive plan.
     val cmap = ColumnMapping.mapping(fs, lakeDir)
     val keys = keys0.map(cmap.physicalOf)
-    val updates0 = GeneratedColumns.fill(spark, lakeDir,
-      ColumnMapping.toPhysical(spark, lakeDir, updates))
-      .localCheckpoint()
-    // one job gates uniqueness AND counts the rows that size the
-    // delta files below (the separate count() job was pure fixed cost)
-    val appended = Pins.requireUniqueKeysCounted(updates0, keys,
-      "mergeMor")
+    val batch = UpdateBatch.pin(GeneratedColumns.fill(spark, lakeDir,
+      ColumnMapping.toPhysical(spark, lakeDir, updates)), keys, "mergeMor")
+    val updates0 = batch.rows
+    val appended = batch.count
     requireNoClash(updates0, "mergeMor")
     require(fs.exists(new Path(CommitLog.logDir(lakeDir))),
       s"mergeMor: $lakeDir has no commit log — cannot publish atomically")
@@ -337,10 +335,9 @@ object DeletionVectors {
       def hitsIn(base: DataFrame): DataFrame = base
         .select(Seq(fileNameCol.as(FileCol),
           col("_metadata.row_index").as(PosCol)) ++ keys.map(col): _*)
-        .join(updates0.select(keys.map(col): _*).distinct(), keys,
-          "left_semi")
+        .join(batch.keys, keys, "left_semi")
         .select(col(FileCol).as("file"), col(PosCol).as("pos"))
-      val hits = MergeInto.keyCandidateFiles(spark, updates0, keys,
+      val hits = MergeInto.keyCandidateFiles(spark, batch, keys,
           indexDir, committed) match {
         case Some(Seq()) => // provably pure-insert merge
           hitsIn(lake).limit(0)
@@ -357,12 +354,12 @@ object DeletionVectors {
       // TARGET-SIZED delta files: ⌈rows / target⌉ writer tasks, so a
       // sparse upsert keeps today's one-file shape while a bulk one
       // neither funnels through a single task nor emits one oversized
-      // file compaction must later split. `appended` rode the
-      // uniqueness gate's job above — never the caller's DAG.
+      // file compaction must later split. `appended` rode the pin's
+      // job above — never the caller's DAG.
       val nDelta = math.max(1L,
         (appended + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
       val before = CommitLog.dataFileNames(fs, lakeDir)
-      updates0.repartition(nDelta).write.mode("append")
+      batch.asFiles(nDelta).write.mode("append")
         .parquet(lakeDir)
       val delta =
         (CommitLog.dataFileNames(fs, lakeDir) -- before).toSeq.sorted
@@ -532,16 +529,15 @@ object DeletionVectors {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keys = keys0.map(ColumnMapping.mapping(fs, lakeDir).physicalOf)
-    val source = ColumnMapping.toPhysical(spark, lakeDir, source0)
-      .localCheckpoint()
-    require(!source.columns.contains("__m") &&
-      !source.columns.contains("__c"),
+    val physical = ColumnMapping.toPhysical(spark, lakeDir, source0)
+    require(!physical.columns.contains("__m") &&
+      !physical.columns.contains("__c"),
       s"$verb: source columns __m/__c collide with merge markers")
-    requireNoClash(source, verb)
-    val missingKeys = keys.toSet -- source.columns.toSet
+    requireNoClash(physical, verb)
+    val missingKeys = keys.toSet -- physical.columns.toSet
     require(missingKeys.isEmpty, s"$verb: source lacks key " +
       s"columns ${missingKeys.toSeq.sorted.mkString(", ")}")
-    MergeInto.requireUniqueKeys(source, keys, verb)
+    val source = UpdateBatch.pin(physical, keys, verb).rows
     val allSets = (matched.collect { case MatchedUpdate(s, _) => s } ++
       notMatchedBySource.collect { case BySourceUpdate(s, _) => s })
       .flatMap(_.keySet).toSet

@@ -152,8 +152,9 @@ object GeneratedColumns {
   }
 
   /** [[fill]] with the definitions `defs` already read — the OCC
-    * verbs pass each attempt's pinned snapshot. */
-  private[sources] def fill(df: DataFrame,
+    * verbs and [[graft.streaming.LayoutSink]] pass their pinned
+    * definitions. */
+  private[graft] def fill(df: DataFrame,
       defs: Seq[(String, String, String)]): DataFrame =
     defs.foldLeft(df) { case (d, (c, e, t)) =>
       if (d.columns.contains(c)) d
@@ -167,7 +168,15 @@ object GeneratedColumns {
       lakeDir: String, set: Set[String], verb: String): Unit = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = list(fs, lakeDir).map(_._1).toSet & set
+    requireNoGeneratedSet(list(fs, lakeDir), set, verb)
+  }
+
+  /** [[requireNoGeneratedSet]] against the definitions `defs` already
+    * read. */
+  private[sources] def requireNoGeneratedSet(
+      defs: Seq[(String, String, String)], set: Set[String],
+      verb: String): Unit = {
+    val gen = defs.map(_._1).toSet & set
     require(gen.isEmpty,
       s"$verb: SET names generated column(s) ${gen.toSeq.sorted
         .mkString(", ")} — generated values are recomputed from their " +
@@ -182,11 +191,16 @@ object GeneratedColumns {
       df: DataFrame): DataFrame = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    list(fs, lakeDir).foldLeft(df) { case (d, (c, e, t)) =>
+    recompute(df, list(fs, lakeDir))
+  }
+
+  /** [[recompute]] with the definitions `defs` already read. */
+  private[sources] def recompute(df: DataFrame,
+      defs: Seq[(String, String, String)]): DataFrame =
+    defs.foldLeft(df) { case (d, (c, e, t)) =>
       if (!d.columns.contains(c)) d
       else d.withColumn(c, expr(e).cast(t))
     }
-  }
 
   /** The pre-publish gate beside [[Constraints.validateFiles]]:
     * validate the about-to-commit `files` against every definition.

@@ -102,16 +102,14 @@ object MergeInto {
     val fs0 = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val keys = keys0.map(ColumnMapping.mapping(fs0, lakeDir).physicalOf)
-    // pin the update frame and its key set once (same rationale as
-    // clausesPlanFor): they feed the uniqueness gate, discovery, the
+    // pin the update frame once ([[UpdateBatch]]; same rationale as
+    // clausesPlanFor): it feeds the uniqueness gate, discovery, the
     // survivor anti-join and up to three change-feed joins — without
     // the pin each execution re-runs the caller's source plan
-    val updates0 = GeneratedColumns.fill(spark, lakeDir,
-      ColumnMapping.toPhysical(spark, lakeDir, updates))
-      .localCheckpoint()
-    requireUniqueKeys(updates0, keys, "merge")
-    val updKeys = updates0.select(keys.map(col): _*).distinct()
-      .localCheckpoint()
+    val batch = UpdateBatch.pin(GeneratedColumns.fill(spark, lakeDir,
+      ColumnMapping.toPhysical(spark, lakeDir, updates)), keys, "merge")
+    val updates0 = batch.rows
+    val updKeys = batch.keys
     mutate(spark, lakeDir, "merge", filesPerRewrite,
         indexDir) { (lake, committed, cdcWanted) =>
       requireFullRowCompatible(lake, updates0, "merge", evolveSchema)
@@ -137,7 +135,7 @@ object MergeInto {
         .select(col("__file")).distinct()
         .collect().map(r => new Path(r.getString(0)).getName).toSet
       val touchedViaIndex: Option[Set[String]] =
-        keyCandidateFiles(spark, updates0, keys, indexDir, committed).map {
+        keyCandidateFiles(spark, batch, keys, indexDir, committed).map {
           case cand if cand.isEmpty => Set.empty[String] // pure-insert merge
           case cand => touchedIn(
             spark.read.schema(lake.schema).parquet(cand: _*))
@@ -279,19 +277,18 @@ object MergeInto {
     // a pinned source re-read by a LATER verb over a MUTATED lake
     // could silently serve the stale cache — a correctness landmine
     // worse than the retry.
-    val source = ColumnMapping.toPhysical(spark, lakeDir, source0)
-      .localCheckpoint()
-    require(!source.columns.contains("__m") &&
-      !source.columns.contains("__c"),
+    val physical = ColumnMapping.toPhysical(spark, lakeDir, source0)
+    require(!physical.columns.contains("__m") &&
+      !physical.columns.contains("__c"),
       s"$verb: source columns __m/__c collide with merge markers")
-    val missingKeys = keys.toSet -- source.columns.toSet
+    val missingKeys = keys.toSet -- physical.columns.toSet
     require(missingKeys.isEmpty, s"$verb: source lacks key " +
       s"columns ${missingKeys.toSeq.sorted.mkString(", ")}")
-    requireUniqueKeys(source, keys, verb)
-    // the distinct key set feeds 2-4 joins per attempt — pin it too
-    // (it is exactly as stable as the pinned source)
-    val srcKeysPinned = source.select(keys.map(col): _*).distinct()
-      .localCheckpoint()
+    val batch = UpdateBatch.pin(physical, keys, verb)
+    val source = batch.rows
+    // the key set feeds 2-4 joins per attempt; it reads the pinned
+    // source, so it is exactly as stable
+    val srcKeysPinned = batch.keys
     val allSets = (matched.collect { case MatchedUpdate(s, _) => s } ++
       notMatchedBySource.collect { case BySourceUpdate(s, _) => s })
       .flatMap(_.keySet).toSet
@@ -350,7 +347,7 @@ object MergeInto {
         } else {
           val m: Set[String] =
             if (matched.isEmpty && notMatched.isEmpty) Set.empty
-            else keyCandidateFiles(spark, source, keys, indexDir,
+            else keyCandidateFiles(spark, batch, keys, indexDir,
                 committed).map {
               case cand if cand.isEmpty => Set.empty[String]
               case cand => matchedIn(
@@ -662,7 +659,7 @@ object MergeInto {
     }
 
   /** Index-assisted candidate files (FULL paths, sorted) that can hold
-    * at least one of `updates`' key tuples — `None` when the index is
+    * at least one of `batch`'s key tuples — `None` when the index is
     * absent, stale, or no key column's type/cardinality qualifies
     * (fall back to the full column-pruned pass); `Some(Nil)` for a
     * provably pure-insert merge. A COMPOSITE key intersects the
@@ -671,31 +668,24 @@ object MergeInto {
     * necessary condition — never excludes a file the full pass would
     * keep. NULL update keys never equality-match a lake row (they are
     * pure inserts), so dropping them from discovery is exact. Shared
-    * by [[merge]] and [[DeletionVectors.mergeMor]]. */
+    * by the merge and clause-merge verbs, locked and OCC. */
   private[sources] def keyCandidateFiles(spark: SparkSession,
-      updates: DataFrame, keys: Seq[String], indexDir: Option[String],
+      batch: UpdateBatch, keys: Seq[String], indexDir: Option[String],
       committed: Seq[String]): Option[Seq[String]] =
     indexDir.flatMap { idx =>
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-      import spark.implicits._
       val current = StatsIndex.indexedFiles(spark, idx)
         .map(p => new Path(p).getName).toSet == committed.toSet
       if (!current) None
       else {
         val sets: Seq[Set[String]] = keys.flatMap { k =>
-          updates.schema(k).dataType match {
+          batch.rows.schema(k).dataType match {
             case ByteType | ShortType | IntegerType | LongType =>
-              val ks = updates.select(col(k).cast("long")).na.drop()
-                .distinct().limit(100001).as[Long].collect()
-              if (ks.length > 100000) None
-              else Some(
-                StatsIndex.prunedForKeys(spark, idx, k, ks.toSeq).toSet)
+              batch.keyValues(k).map(ks => StatsIndex.prunedForKeys(spark,
+                idx, k, ks.map(_.asInstanceOf[Long])).toSet)
             case StringType =>
-              val ks = updates.select(col(k)).na.drop()
-                .distinct().limit(100001).as[String].collect()
-              if (ks.length > 100000) None
-              else Some(StatsIndex
-                .prunedForKeysString(spark, idx, k, ks.toSeq).toSet)
+              batch.keyValues(k).map(ks => StatsIndex.prunedForKeysString(
+                spark, idx, k, ks.map(_.asInstanceOf[String])).toSet)
             case _ => None
           }
         }
@@ -728,19 +718,6 @@ object MergeInto {
   private[sources] def holdsCond(c: Option[String])
       : org.apache.spark.sql.Column =
     c.map(e => coalesce(expr(e), lit(false))).getOrElse(lit(true))
-
-  /** The merge-shape preconditions [[merge]] and
-    * [[DeletionVectors.mergeMor]] share: `updates` must be unique on
-    * `keys` (each duplicate would race to replace the same row). */
-  private[sources] def requireUniqueKeys(updates: DataFrame,
-      keys: Seq[String], verb: String): Unit = {
-    require(keys.nonEmpty, s"$verb needs at least one key column")
-    val dupes = updates.groupBy(keys.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
-    require(dupes == 0,
-      s"$verb: duplicate keys in updates on (${keys.mkString(", ")}) — " +
-        "each duplicate would race to replace the same row")
-  }
 
   /** Full-row schema compatibility between the lake and an update
     * frame — shared by the CoW and MoR merge verbs (see [[merge]]'s

@@ -370,8 +370,6 @@ object Occ {
     require(set.nonEmpty, "updateMor(occ) needs at least one SET")
     require(targetRowsPerDelta > 0, "targetRowsPerDelta must be positive")
     val fs = fsOf(spark, lakeDir)
-    GeneratedColumns.requireNoGeneratedSet(spark, lakeDir,
-      set.keySet, "updateMor(occ)")
     require(fs.exists(new Path(CommitLog.logDir(lakeDir))),
       s"updateMor(occ): $lakeDir has no commit log — cannot publish " +
         "atomically")
@@ -381,12 +379,12 @@ object Occ {
       val snap @ (filesSnap, dvSnap) = CommitLog.committedView(fs, lakeDir)
       // definitions are part of the snapshot: recompute and the gates
       // below embed them into the staged delta, so a mid-prepare
-      // add/drop is a conflict exactly like a moved file (re-checked
-      // here too — a definition landing mid-loop must not silently
+      // add/drop is a conflict exactly like a moved file (checked per
+      // attempt — a definition landing mid-loop must not silently
       // override this SET)
       val defsSnap = defsSnapshot(fs, lakeDir)
-      GeneratedColumns.requireNoGeneratedSet(spark, lakeDir,
-        set.keySet, "updateMor(occ)")
+      GeneratedColumns.requireNoGeneratedSet(defsSnap._2, set.keySet,
+        "updateMor(occ)")
       require(filesSnap.nonEmpty,
         s"updateMor(occ): no committed files in $lakeDir — ingest first")
       val committed = filesSnap.toSeq.sorted
@@ -420,13 +418,13 @@ object Occ {
           val dv = stageVectors(spark, fs, stage, matched
             .select(col(DeletionVectors.FileCol).as("file"),
               col(DeletionVectors.PosCol).as("pos")), n)
-          val updated = GeneratedColumns.recompute(spark, lakeDir,
+          val updated = GeneratedColumns.recompute(
             matched.select(lake.schema.fields.map { f =>
               set.get(f.name) match {
                 case Some(e) => expr(e).cast(f.dataType).as(f.name)
                 case None => col(f.name)
               }
-            }.toIndexedSeq: _*))
+            }.toIndexedSeq: _*), defsSnap._2)
           val nDelta = math.max(1L,
             (n + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
           updated.repartition(nDelta).write.parquet(s"$stage/data")
@@ -536,14 +534,12 @@ object Occ {
           "would resurrect DV-deleted rows)")
       require(filesSnap.nonEmpty,
         s"merge(occ): no committed files in $lakeDir — ingest first")
-      val updates0 = GeneratedColumns.fill(updates, defsSnap._2)
-        .localCheckpoint()
-      MergeInto.requireUniqueKeys(updates0, keys, "merge(occ)")
-      // pin the distinct key set once per attempt — it feeds the
-      // discovery semi-join, the survivor anti-join and the change
-      // feed; unpinned, each execution re-runs the distinct shuffle
-      val updKeys = updates0.select(keys.map(col): _*).distinct()
-        .localCheckpoint()
+      // the key set feeds the discovery semi-join, the survivor
+      // anti-join and the change feed; it reads the pinned batch
+      val batch = UpdateBatch.pin(GeneratedColumns.fill(updates,
+        defsSnap._2), keys, "merge(occ)")
+      val updates0 = batch.rows
+      val updKeys = batch.keys
       val stage = stageDir(lakeDir)
       val cdcWanted = ChangeDataFeed.isEnabled(fs, lakeDir)
       val prepared = unlessSwept(fs, lakeDir, filesSnap) {
@@ -558,7 +554,7 @@ object Occ {
           .join(updKeys, keys, "left_semi")
           .select(col("__file")).distinct()
           .collect().map(r => new Path(r.getString(0)).getName).toSet
-        val touched = MergeInto.keyCandidateFiles(spark, updates0, keys,
+        val touched = MergeInto.keyCandidateFiles(spark, batch, keys,
             indexDir, committed) match {
           case Some(Seq()) => Set.empty[String] // pure-insert merge
           case Some(cand) => touchedIn(
@@ -745,7 +741,16 @@ object Occ {
     * it. The commit section also refreshes the index at `indexDir`
     * (see the section's note). `beforeCommit` is a spec hook, invoked
     * after preparation and BEFORE the commit section's lock. Returns
-    * (matched, appended). */
+    * (matched, appended).
+    *
+    * Job budget of one attempt with a small batch (within
+    * [[UpdateBatch.DriverBound]] rows) that fits one delta file, over
+    * an indexed lake with deletion vectors: the batch's pin with its
+    * count, one collect of its key columns (the uniqueness gate and
+    * the index key sets, on the driver), discovery (the vector and key
+    * broadcasts and the pair pin), the sidecar write and its memo
+    * seed, the delta write and the index publish: 9 Spark jobs
+    * (`MergeBudgetSpec`). */
   def mergeMor(spark: SparkSession, lakeDir: String, updates0In: DataFrame,
       keys0: Seq[String], evolveSchema: Boolean = false,
       indexDir: Option[String] = None,
@@ -771,10 +776,10 @@ object Occ {
       // change is a conflict, and the retry re-fills under the fresh
       // definitions instead of publishing stale-generated rows
       val defsSnap = defsSnapshot(fs, lakeDir)
-      val updates0 = GeneratedColumns.fill(updates, defsSnap._2)
-        .localCheckpoint()
-      val appended = Pins.requireUniqueKeysCounted(updates0, keys,
-        "mergeMor(occ)")
+      val batch = UpdateBatch.pin(GeneratedColumns.fill(updates,
+        defsSnap._2), keys, "mergeMor(occ)")
+      val updates0 = batch.rows
+      val appended = batch.count
       DeletionVectors.requireNoClash(updates0, "mergeMor(occ)")
       if (appended == 0) return (0L, 0L)
       require(filesSnap.nonEmpty,
@@ -792,11 +797,10 @@ object Occ {
             DeletionVectors.fileNameCol.as(DeletionVectors.FileCol),
             col("_metadata.row_index").as(DeletionVectors.PosCol)) ++
             keys.map(col): _*)
-          .join(updates0.select(keys.map(col): _*).distinct(), keys,
-            "left_semi")
+          .join(batch.keys, keys, "left_semi")
           .select(col(DeletionVectors.FileCol).as("file"),
             col(DeletionVectors.PosCol).as("pos"))
-        val hits = MergeInto.keyCandidateFiles(spark, updates0, keys,
+        val hits = MergeInto.keyCandidateFiles(spark, batch, keys,
             indexDir, committed) match {
           case Some(Seq()) => hitsIn(lake).limit(0)
           case Some(cand) => hitsIn(FileMemo.readSubset(spark, lake, cand))
@@ -816,7 +820,7 @@ object Occ {
           else stageVectors(spark, fs, stage, pairs, matched)
         val nDelta = math.max(1L,
           (appended + targetRowsPerDelta - 1) / targetRowsPerDelta).toInt
-        updates0.repartition(nDelta).write.parquet(s"$stage/data")
+        batch.asFiles(nDelta).write.parquet(s"$stage/data")
         val delta = stagedNames(fs, s"$stage/data")
         validateStaged(spark, lakeDir,
           delta.map(n => s"$stage/data/$n"), defsSnap)
@@ -852,9 +856,10 @@ object Occ {
       }
       // ---- COMMIT SECTION (locked) ----
       // renames, the manifest write and, when `indexDir` is set, the
-      // StatsIndex refresh over the delta files: one footer-read job
-      // and one index write (the kept stats rows come from the
-      // driver-side snapshot), so the lock is held for two Spark jobs
+      // StatsIndex refresh over the delta files: their footers are
+      // read on the driver and the kept stats rows come from the
+      // driver-side snapshot, so the lock is held for one Spark job,
+      // the index write
       val won = prepared.exists { case (_, dv, delta) =>
         beforeCommit()
         CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {

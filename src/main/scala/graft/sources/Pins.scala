@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Materialization helpers shared by the mutation verbs (r15).
@@ -23,16 +24,25 @@ import org.apache.spark.sql.functions._
   * summaries do) dies with `Task not serializable`. Named observe +
   * reading `queryExecution.observedMetrics` after the action never
   * touches the manager. */
-private[sources] object Pins {
+private[graft] object Pins {
 
   /** `df.localCheckpoint()` + one observed aggregate row, collected
     * DURING the materialization job. */
-  private def pinObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+  def pinObserved(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
     val name = s"__pin_${java.util.UUID.randomUUID()}"
     val named = df.observe(name, aggs.head, aggs.tail: _*)
     val pinned = named.localCheckpoint()
     (pinned, named.queryExecution.observedMetrics(name))
   }
+
+  /** Drops the blocks of a frame pinned here once nothing reads it:
+    * otherwise they stay in executor storage until a driver garbage
+    * collection lets Spark's context cleaner drop them. */
+  def release(pinned: DataFrame): Unit =
+    pinned.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ =>
+    }
 
   /** `df.localCheckpoint()` + its row count, counted DURING the
     * materialization job. */
@@ -47,24 +57,5 @@ private[sources] object Pins {
   def pinWithDistinct(df: DataFrame, c: String): (DataFrame, Seq[String]) = {
     val (pinned, m) = pinObserved(df, collect_set(col(c)))
     (pinned, m.getSeq[String](0))
-  }
-
-  /** The uniqueness gate and the row count in ONE job (the gate's
-    * groupBy already touches every row — riding the total on it makes
-    * the verb's separate `count()` job redundant). Fails exactly as
-    * [[MergeInto.requireUniqueKeys]]; returns the total row count. */
-  def requireUniqueKeysCounted(updates: DataFrame, keys: Seq[String],
-      verb: String): Long = {
-    require(keys.nonEmpty, s"$verb needs at least one key column")
-    val r = updates.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(sum(col("__n")).as("__total"), max(col("__n")).as("__max"))
-      .head()
-    val total = if (r.isNullAt(0)) 0L else r.getLong(0)
-    val maxPer = if (r.isNullAt(1)) 0L else r.getLong(1)
-    require(maxPer <= 1L,
-      s"$verb: duplicate keys in updates on (${keys.mkString(", ")}) — " +
-        "each duplicate would race to replace the same row")
-    total
   }
 }

@@ -192,7 +192,7 @@ object Compaction {
   * ONE aggregate (literal cuts, same rationale as `GlobalWindow` —
   * never derive file layout from a re-executed sampler). */
 object ZOrder {
-  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.{Column, Row}
   import org.apache.spark.sql.functions._
 
   /** Interleave the low `bits` bits of non-negative long columns:
@@ -386,16 +386,36 @@ object ZOrder {
   /** One min/max aggregate over `cols` → literal (lo, hi) ranges. */
   private def literalRanges(df: DataFrame,
       cols: Seq[String]): Seq[(Double, Double)] = {
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("double")), max(col(c).cast("double"))))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val aggs = minMax(cols)
+    rangesAt(df.agg(aggs.head, aggs.tail: _*).head(), 0, cols)
+  }
+
+  /** `df` pinned ([[Pins]]) with its row count and [[literalRanges]]
+    * observed in the same job: (pinned, 0, Nil) for an empty `df`,
+    * which has no range to derive. */
+  private[graft] def pinnedRanges(df: DataFrame, cols: Seq[String])
+      : (DataFrame, Long, Seq[(Double, Double)]) = {
+    val (pinned, row) = Pins.pinObserved(df, count(lit(1)) +: minMax(cols): _*)
+    val n = row.getLong(0)
+    val ranges =
+      try if (n == 0) Nil else rangesAt(row, 1, cols)
+      catch { case e: IllegalArgumentException => Pins.release(pinned); throw e }
+    (pinned, n, ranges)
+  }
+
+  private def minMax(cols: Seq[String]): Seq[Column] = cols.flatMap(c =>
+    Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+
+  /** The (lo, hi) pairs of `cols` from `row`, the first at `from`. */
+  private def rangesAt(row: Row, from: Int,
+      cols: Seq[String]): Seq[(Double, Double)] =
     cols.indices.map { i =>
-      require(!row.isNullAt(2 * i) && !row.isNullAt(2 * i + 1),
+      val (lo, hi) = (from + 2 * i, from + 2 * i + 1)
+      require(!row.isNullAt(lo) && !row.isNullAt(hi),
         s"cannot derive a layout range for '${cols(i)}': the input is " +
           "empty or the column is entirely NULL")
-      (row.getDouble(2 * i), row.getDouble(2 * i + 1))
+      (row.getDouble(lo), row.getDouble(hi))
     }
-  }
 
   /** Z-ordered write: one min/max aggregate → literal ranges → range
     * repartition + sort on the z-value → parquet. Every file covers a
@@ -555,7 +575,7 @@ object ZOrder {
           DeletionVectors.vectors(spark, path))
       } else spark.read.option("mergeSchema", "true").parquet(path)
     // scaling ranges from FOOTER stats when every committed file
-    // carries exact numeric bounds — a metadata job replaces the full
+    // carries exact numeric bounds — a footer read replaces the full
     // data pass literalRanges would run (at 100 TB: a corpus scan).
     // On a DV'd lake the footer range can be wider than the live
     // rows' (dead rows count) — still a valid clamp range. Fallback:

@@ -1,9 +1,14 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -34,8 +39,8 @@ import scala.jdk.CollectionConverters._
   * is maximally selective on every clustered column (each file covers a
   * narrow span of each — measured in SCALE.md).
   *
-  * Footers are read DISTRIBUTED (file paths parallelized, footers read
-  * executor-side) and the resulting stats rows are collected. The
+  * Footers are read on the driver, a few in parallel, and each is
+  * turned into stats rows as it is read (no Spark job). The
   * driver keeps ONE snapshot of the live generation's stats rows per
   * index root ([[snapshot]]), never a function of data volume but of
   * files × indexed columns: each (file, column) row holds about 250
@@ -465,8 +470,9 @@ object StatsIndex {
   def build(spark: SparkSession, dataDir: String, cols: Seq[String],
       indexDir: String, bloomCols: Seq[String] = Nil,
       bloomItems: Long = 1000000L, bloomFpp: Double = 0.03): Unit = {
-    val files = listData(spark, dataDir)
-    publishRows(spark, indexDir, statsFor(spark, files, cols),
+    val listed = listDataStatuses(spark, dataDir)
+    val files = listed.keys.toVector.sorted
+    publishRows(spark, indexDir, statsFor(spark, files, cols, listed),
       if (bloomCols.isEmpty) Nil
       else Seq(bloomFor(spark, files, bloomCols, bloomItems, bloomFpp)))
   }
@@ -623,20 +629,21 @@ object StatsIndex {
     * operation a daily-ingest 100 TB table actually runs; a full
     * [[build]] per ingest would re-read every footer.
     *
-    * The kept stats rows come from the driver-side [[snapshot]], so
-    * on an index without bloom rows a refresh runs two Spark jobs:
-    * the churn's footer read and the local generation write, which
-    * seeds the next snapshot. Kept bloom rows are carried by a Spark
-    * scan of the old generation inside the write job. With no churn
-    * (nothing added or removed) it publishes nothing: no job, no
-    * pointer flip, no retention sweep.
+    * The kept stats rows come from the driver-side [[snapshot]], and
+    * the churn's footers are read on the driver ([[statsFor]]). So a
+    * refresh of an index without bloom rows runs one Spark job: the
+    * local generation write, which seeds the next snapshot. Kept bloom
+    * rows are carried by a Spark scan of the old generation inside the
+    * write job. With no churn (nothing added or removed) it publishes
+    * nothing: no job, no pointer flip, no retention sweep.
     * Returns (added, removed). */
   def refresh(spark: SparkSession, dataDir: String, cols: Seq[String],
       indexDir: String, bloomCols: Seq[String] = Nil,
       bloomItems: Long = 1000000L, bloomFpp: Double = 0.03): (Int, Int) = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val current = listData(spark, dataDir)
+    val listed = listDataStatuses(spark, dataDir)
+    val current = listed.keys.toVector.sorted
     val snap =
       if (!new Path(indexDir).getFileSystem(conf).exists(new Path(indexDir)))
         None
@@ -656,7 +663,7 @@ object StatsIndex {
         if (added.isEmpty && removed.isEmpty) return (0, 0)
         val kept = old.rows.filter(r => r.kind != "bloom" && !removed(r.file))
         val fresh = if (added.isEmpty) IndexedSeq.empty
-          else statsFor(spark, added, cols)
+          else statsFor(spark, added, cols, listed)
         // the write job reads the live generation's bloom rows while
         // writing the next one — safe, generations are immutable and
         // the live one survives its successor's publish
@@ -678,22 +685,28 @@ object StatsIndex {
     * `listFiles` returns `LocatedFileStatus`es, and without Hadoop's
     * native library each one forks a process to read permissions. */
   private[graft] def listData(spark: SparkSession,
-      dataDir: String): Seq[String] = {
+      dataDir: String): Seq[String] =
+    listDataStatuses(spark, dataDir).keys.toVector.sorted
+
+  /** [[listData]]'s files with their listed statuses, by path. */
+  private def listDataStatuses(spark: SparkSession,
+      dataDir: String): Map[String, FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(dataDir).getFileSystem(conf)
     // Spark's listing convention: a file is hidden if ANY path segment
     // below the root starts with `_` or `.` — so sidecar DIRECTORIES
     // (`_dv`, `_graft_log`, `.occ-*` stages) are skipped whole, not
     // just `_`-named files (a `_dv/part-*.parquet` has a plain leaf name)
-    def walk(dir: Path): Iterator[String] =
+    def walk(dir: Path): Iterator[FileStatus] =
       fs.listStatus(dir).iterator.flatMap { st =>
         val n = st.getPath.getName
         if (n.startsWith("_") || n.startsWith(".")) Iterator.empty
         else if (st.isDirectory) walk(st.getPath)
-        else if (n.endsWith(".parquet")) Iterator.single(st.getPath.toString)
+        else if (n.endsWith(".parquet")) Iterator.single(st)
         else Iterator.empty
       }
-    val files = walk(fs.makeQualified(new Path(dataDir))).toVector.sorted
+    val files = walk(fs.makeQualified(new Path(dataDir)))
+      .map(st => st.getPath.toString -> st).toMap
     require(files.nonEmpty,
       s"StatsIndex: no .parquet files under $dataDir (recursive) — " +
         "refusing to build an empty index that would prune everything")
@@ -895,7 +908,8 @@ object StatsIndex {
   }
 
   /** Global (min, max) per column as doubles, from FOOTER stats only —
-    * one distributed metadata job over `files`, zero data rows read.
+    * [[statsFor]] over `files` on the driver, no Spark job and zero
+    * data rows read.
     * `None` when any file lacks exact integral/floating stats for any
     * column (missing column, stats-less chunk, string/temporal kind —
     * temporal footer units differ from Spark's `cast("double")`), so
@@ -928,91 +942,98 @@ object StatsIndex {
     if (ranges.exists(_.isEmpty)) None else Some(ranges.map(_.get))
   }
 
-  /** Footer scan of `files` → one [[StatRow]] per (file, column),
-    * collected: one Spark job, footers read on executors, no shuffle
-    * (the paths are parallelized directly). */
+  /** Footer scan of `files` → one [[StatRow]] per (file, column), read
+    * on the driver by up to 8 threads (the parallelism of Spark's own
+    * footer reads for schema inference): no Spark job. Each footer is
+    * turned into rows as soon as it is read, so only the files in
+    * flight hold their row-group metadata. `listed` holds statuses the
+    * caller already has, by path; any other file is opened by path.
+    * The read options are built once from the session's Hadoop conf:
+    * `ParquetFileReader.open`'s default options cost about 10 ms per
+    * file, thirty times the footer read itself. */
   private def statsFor(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): IndexedSeq[StatRow] = {
-    val colsB = spark.sparkContext.broadcast(cols)
-    // ship the session's filesystem-relevant Hadoop conf to the
-    // executors ([[FsConfShip]] — the one vetted implementation, shared
-    // with ColumnMapping's footer probe): a fresh `new Configuration()`
-    // on the executor would only ever resolve local/default filesystems
-    val confEntries = spark.sparkContext.broadcast(
-      FsConfShip.entries(spark.sparkContext.hadoopConfiguration))
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .mapPartitions { it =>
-        val c = FsConfShip.rebuild(confEntries.value)
-        it.flatMap { f =>
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(f), c))
-          try {
-            val blocks = r.getFooter.getBlocks.asScala
-            val nRows = blocks.map(_.getRowCount).sum
-            val stats = colsB.value.map { name =>
-              // per-file null count, or NULL when ANY chunk can't
-              // prove one (missing column, stats-less chunk) — the
-              // bit [[countPruned]]'s full-containment arm needs: a
-              // filter drops null rows, so counting a whole file from
-              // metadata is only sound at exactly zero nulls
-              val perBlockNulls = blocks.map { b =>
-                b.getColumns.asScala
-                  .find(_.getPath.toDotString == name)
-                  .flatMap { cc =>
-                    val st = cc.getStatistics
-                    if (st != null && st.isNumNullsSet)
-                      Some(st.getNumNulls)
-                    else None
-                  }
-              }
-              val nulls: Option[Long] =
-                if (perBlockNulls.exists(_.isEmpty)) None
-                else Some(perBlockNulls.flatten.sum)
-              val perChunk = blocks.flatMap { b =>
-                b.getColumns.asScala
-                  .find(_.getPath.toDotString == name)
-                  .flatMap(boundsOf)
-              }
-              val merged =
-                if (perChunk.isEmpty || perChunk.exists(_.kind == "full"))
-                  FullRange
-                else if (perChunk.map(_.kind).distinct.size > 1) FullRange
-                else perChunk.head.kind match {
-                  case k @ ("long" | "date" | "tsntz") => Bounds(k,
-                    Some(perChunk.flatMap(_.lmin).min),
-                    Some(perChunk.flatMap(_.lmax).max),
-                    None, None, None, None)
-                  case "double" => Bounds("double", None, None,
-                    Some(perChunk.flatMap(_.dmin).min),
-                    Some(perChunk.flatMap(_.dmax).max), None, None)
-                  case _ =>
-                    val uppers = perChunk.map(_.smax)
-                    // UTF-8 byte order, not String.compareTo: the index
-                    // comparisons downstream are byte-ordered, and the
-                    // two orders disagree around supplementary chars
-                    Bounds("string", None, None, None, None,
-                      Some(minUtf8(perChunk.flatMap(_.smin))),
-                      // any unbounded chunk upper ⇒ unbounded file upper
-                      if (uppers.exists(_.isEmpty)) None
-                      else Some(maxUtf8(uppers.flatten)))
-                }
-              // the column's Spark type (parquet schema is file-wide,
-              // so the first chunk's type is THE type); None when the
-              // file lacks the column or the type is unmapped
-              val dtype: Option[String] = blocks.iterator
-                .flatMap(_.getColumns.asScala
-                  .find(_.getPath.toDotString == name))
-                .nextOption().flatMap(sparkTypeOf)
-              StatRow(f, Some(nRows), name, merged.kind, merged.lmin,
-                merged.lmax, merged.dmin, merged.dmax, merged.smin,
-                merged.smax, nulls, dtype, bspace = None)
-            }
-            stats
-          } finally r.close()
-        }
+      cols: Seq[String],
+      listed: Map[String, FileStatus] = Map.empty): IndexedSeq[StatRow] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = HadoopReadOptions.builder(conf).build()
+    def rowsOf(f: String): Seq[StatRow] = {
+      val r = ParquetFileReader.open(listed.get(f)
+        .fold(HadoopInputFile.fromPath(new Path(f), conf))(
+          HadoopInputFile.fromStatus(_, conf)), options)
+      try statRows(f, r.getFooter, cols) finally r.close()
+    }
+    if (files.size <= 1) files.flatMap(rowsOf).toIndexedSeq
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(files.size, 8))
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(Future.traverse(files)(f => Future(rowsOf(f))),
+        Duration.Inf).flatten.toIndexedSeq
+      finally pool.shutdown()
+    }
+  }
+
+  /** The [[StatRow]]s of file `f` for `cols`, from its footer. */
+  private def statRows(f: String,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      cols: Seq[String]): Seq[StatRow] = {
+    val blocks = footer.getBlocks.asScala
+    val nRows = blocks.map(_.getRowCount).sum
+    cols.map { name =>
+      // per-file null count, or NULL when ANY chunk can't prove one
+      // (missing column, stats-less chunk) — the bit [[countPruned]]'s
+      // full-containment arm needs: a filter drops null rows, so
+      // counting a whole file from metadata is only sound at exactly
+      // zero nulls
+      val perBlockNulls = blocks.map { b =>
+        b.getColumns.asScala
+          .find(_.getPath.toDotString == name)
+          .flatMap { cc =>
+            val st = cc.getStatistics
+            if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
+            else None
+          }
       }
-      .collect().toIndexedSeq
+      val nulls: Option[Long] =
+        if (perBlockNulls.exists(_.isEmpty)) None
+        else Some(perBlockNulls.flatten.sum)
+      val perChunk = blocks.flatMap { b =>
+        b.getColumns.asScala
+          .find(_.getPath.toDotString == name)
+          .flatMap(boundsOf)
+      }
+      val merged =
+        if (perChunk.isEmpty || perChunk.exists(_.kind == "full"))
+          FullRange
+        else if (perChunk.map(_.kind).distinct.size > 1) FullRange
+        else perChunk.head.kind match {
+          case k @ ("long" | "date" | "tsntz") => Bounds(k,
+            Some(perChunk.flatMap(_.lmin).min),
+            Some(perChunk.flatMap(_.lmax).max),
+            None, None, None, None)
+          case "double" => Bounds("double", None, None,
+            Some(perChunk.flatMap(_.dmin).min),
+            Some(perChunk.flatMap(_.dmax).max), None, None)
+          case _ =>
+            val uppers = perChunk.map(_.smax)
+            // UTF-8 byte order, not String.compareTo: the index
+            // comparisons downstream are byte-ordered, and the two
+            // orders disagree around supplementary chars
+            Bounds("string", None, None, None, None,
+              Some(minUtf8(perChunk.flatMap(_.smin))),
+              // any unbounded chunk upper ⇒ unbounded file upper
+              if (uppers.exists(_.isEmpty)) None
+              else Some(maxUtf8(uppers.flatten)))
+        }
+      // the column's Spark type (parquet schema is file-wide, so the
+      // first chunk's type is THE type); None when the file lacks the
+      // column or the type is unmapped
+      val dtype: Option[String] = blocks.iterator
+        .flatMap(_.getColumns.asScala.find(_.getPath.toDotString == name))
+        .nextOption().flatMap(sparkTypeOf)
+      StatRow(f, Some(nRows), name, merged.kind, merged.lmin,
+        merged.lmax, merged.dmin, merged.dmax, merged.smin,
+        merged.smax, nulls, dtype, bspace = None)
+    }
   }
 
   /** Per-range exclusion predicate over index rows. NULL bounds (full

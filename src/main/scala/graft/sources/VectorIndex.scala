@@ -614,8 +614,22 @@ object VectorIndex {
       assignRows(fresh, cents, codebook, p), p)
     val segments = meta.segments :+ segment
     // drift probe, free at this point: the batch's winning cosines are
-    // already in the segment bytes — one column scan vs the baseline
-    val freshMean = segmentMeanAsim(spark, indexDir, segment)
+    // already in the segment bytes — one column scan vs the baseline.
+    // A publish landing since the segment write sweeps it (nothing
+    // references it yet): that is the retryable conflict the commit
+    // section reports, not a missing-file error
+    val freshMean =
+      try segmentMeanAsim(spark, indexDir, segment)
+      catch {
+        case scala.util.control.NonFatal(e) if !fsOf(spark, indexDir)
+            .exists(new Path(segmentsRoot(indexDir), segment)) =>
+          val stale = new StaleVectorIndexException(
+            s"vector index $indexDir was republished while this " +
+              s"refresh prepared (its staged segment $segment was " +
+              "swept) — retry the refresh")
+          stale.initCause(e)
+          throw stale
+      }
     val base = meta.paramsMap.get("driftBaseMean").map(_.toDouble)
     beforePublish() // spec hook: inject a racing publish here
     // COMMIT SECTION under the lake's writer lock: the manifest this

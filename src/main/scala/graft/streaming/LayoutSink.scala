@@ -118,99 +118,105 @@ object LayoutSink {
     // horizon-0 vacuum (nothing can be mid-publish while it holds)
     // and the first-commit bootstrap.
     //
-    // persist once: the emptiness probe, the curve write's min/max
-    // aggregate and the parquet write are three separate actions —
-    // uncached they would re-read the batch's source files 3×.
+    // The definitions are read once and PINNED: the FILL below and
+    // the staged gates use them, and a Constraints.add landing between
+    // the gates and the commit section validated only the committed
+    // rows (this stage is invisible to it), so the commit section
+    // re-runs the gates when the pin no longer matches.
+    def defsPin() = (graft.sources.Constraints.list(fs, lakeDir),
+      graft.sources.GeneratedColumns.list(fs, lakeDir))
+    val pinnedDefs = defsPin()
     // column mapping first (a stream producing logical names keeps
     // landing the committed physical schema across a rename; the
     // clustering columns translate the same way), then the
     // generated-column FILL: omitted defined columns are computed
-    // here, so every staged file already carries them
+    // here, so every staged file already carries them.
+    // Pinned once, with the row count and the curve write's scaling
+    // ranges observed in the same job: one pass answers "is the batch
+    // empty" and the ranges, and the write reads the pinned rows
+    // instead of the batch's source files.
     val cmap = graft.sources.ColumnMapping.mapping(fs, lakeDir)
     val zPhys = zCols.map(cmap.physicalOf)
-    val b = graft.sources.GeneratedColumns.fill(spark, lakeDir,
-      graft.sources.ColumnMapping.toPhysical(spark, lakeDir, batch))
-      .persist()
-    try {
-      val stage = graft.sources.Occ.stageDir(lakeDir)
-      val newFiles =
-        if (b.isEmpty) Seq.empty[String]
+    val (b, rows, ranges) = ZOrder.pinnedRanges(
+      graft.sources.GeneratedColumns.fill(
+        graft.sources.ColumnMapping.toPhysical(spark, lakeDir, batch),
+        pinnedDefs._2), zPhys)
+    val stage = graft.sources.Occ.stageDir(lakeDir)
+    // the write is the pin's only reader: release it before the gates
+    // and the commit section
+    val newFiles =
+      try {
+        if (rows == 0) Seq.empty[String]
         else {
           ZOrder.curveWrite(b, stage, zPhys, bits,
-            numFiles = filesPerBatch, mode = "append", curve = curve)
+            numFiles = filesPerBatch, mode = "append", curve = curve,
+            ranges = Some(ranges))
           graft.sources.Occ.stagedNames(fs, stage)
         }
-      // CHECK-constraint + generated-column gates on exactly the
-      // STAGED bytes — zero lock time; a violating batch throws here
-      // and its stage is crash debris the aged sweep reclaims. The
-      // definitions read here are PINNED: a Constraints.add landing
-      // between this gate and the commit section validated only the
-      // committed rows (this stage is invisible to it), so the commit
-      // section re-runs the gates when the pin no longer matches
-      def defsPin() = (graft.sources.Constraints.list(fs, lakeDir),
-        graft.sources.GeneratedColumns.list(fs, lakeDir))
-      val pinnedDefs = defsPin()
-      def validateStaged(defs: (Seq[(String, String)],
-          Seq[(String, String, String)])): Unit = {
-        graft.sources.Constraints.validatePaths(spark, lakeDir,
-          newFiles.map(n => s"$stage/$n"), defs._1)
-        graft.sources.GeneratedColumns.validatePaths(spark, lakeDir,
-          newFiles.map(n => s"$stage/$n"), defs._2)
+      } finally graft.sources.Pins.release(b)
+    // CHECK-constraint + generated-column gates on exactly the
+    // STAGED bytes — zero lock time; a violating batch throws here
+    // and its stage is crash debris the aged sweep reclaims
+    def validateStaged(defs: (Seq[(String, String)],
+        Seq[(String, String, String)])): Unit = {
+      graft.sources.Constraints.validatePaths(spark, lakeDir,
+        newFiles.map(n => s"$stage/$n"), defs._1)
+      graft.sources.GeneratedColumns.validatePaths(spark, lakeDir,
+        newFiles.map(n => s"$stage/$n"), defs._2)
+    }
+    validateStaged(pinnedDefs)
+    if (failAfterWrite)
+      throw new RuntimeException("injected crash before commit")
+    // bounded wait, NOT fail-fast: the concurrent ingest+OCC mix
+    // means an OCC verb's ms-scale commit section can be in flight
+    // at this acquire — failing the fully-staged batch (and the
+    // whole streaming query with it) over a millisecond of
+    // contention is the wrong trade; briefly waiting is the same
+    // courtesy the OCC verbs extend to the sink
+    CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
+      // claim the lake's manifest-id space for epoch replay: an
+      // Occ.append claiming max+1 on this lake would collide with a
+      // FUTURE batchId of this query and silently skip that epoch's
+      // rows (isCommitted reads "id ≤ committed" as done) — the
+      // marker makes Occ.append refuse. Idempotent, one probe
+      CommitLog.claimEpochOwner(fs, lakeDir, "LayoutSink")
+      val defsNow = defsPin()
+      if (defsNow != pinnedDefs) validateStaged(defsNow)
+      // first commit ever: grandfather pre-existing (bootstrap)
+      // files into their own manifest BEFORE anything lands, so a
+      // crash on the very first batch still leaves its debris
+      // distinguishable from data the sink must never delete. Gate
+      // on RECORD count, not dir existence — taking the lock above
+      // already created the log dir
+      if (CommitLog.recordCount(fs, lakeDir) == 0)
+        CommitLog.commit(fs, lakeDir, -1L,
+          CommitLog.dataFileNames(fs, lakeDir).toSeq.sorted)
+      // a previous attempt of SOME batch may have crashed between
+      // its renames and its commit — remove every unreferenced data
+      // file (horizon 0: we hold the lock, nothing is mid-publish)
+      // and age out crashed attempts' stage dirs
+      CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
+      graft.sources.Occ.sweepStaleStages(fs, lakeDir)
+      graft.sources.Occ.renameInto(fs, stage, newFiles, lakeDir)
+      CommitLog.commit(fs, lakeDir, batchId, newFiles)
+      if (failAfterCommit)
+        throw new RuntimeException(
+          "injected crash before index refresh")
+      // refresh AFTER commit, on a cleaned lake: the index never
+      // sees an orphan (mid-crash-window the sink is down, so no
+      // refresh runs until the retry has cleaned up)
+      if (newFiles.nonEmpty) {
+        StatsIndex.refresh(spark, lakeDir, zPhys, indexDir); ()
       }
-      validateStaged(pinnedDefs)
-      if (failAfterWrite)
-        throw new RuntimeException("injected crash before commit")
-      // bounded wait, NOT fail-fast: the concurrent ingest+OCC mix
-      // means an OCC verb's ms-scale commit section can be in flight
-      // at this acquire — failing the fully-staged batch (and the
-      // whole streaming query with it) over a millisecond of
-      // contention is the wrong trade; briefly waiting is the same
-      // courtesy the OCC verbs extend to the sink
-      CommitLog.withWriterLock(fs, lakeDir, waitMs = commitWaitMs) {
-        // claim the lake's manifest-id space for epoch replay: an
-        // Occ.append claiming max+1 on this lake would collide with a
-        // FUTURE batchId of this query and silently skip that epoch's
-        // rows (isCommitted reads "id ≤ committed" as done) — the
-        // marker makes Occ.append refuse. Idempotent, one probe
-        CommitLog.claimEpochOwner(fs, lakeDir, "LayoutSink")
-        val defsNow = defsPin()
-        if (defsNow != pinnedDefs) validateStaged(defsNow)
-        // first commit ever: grandfather pre-existing (bootstrap)
-        // files into their own manifest BEFORE anything lands, so a
-        // crash on the very first batch still leaves its debris
-        // distinguishable from data the sink must never delete. Gate
-        // on RECORD count, not dir existence — taking the lock above
-        // already created the log dir
-        if (CommitLog.recordCount(fs, lakeDir) == 0)
-          CommitLog.commit(fs, lakeDir, -1L,
-            CommitLog.dataFileNames(fs, lakeDir).toSeq.sorted)
-        // a previous attempt of SOME batch may have crashed between
-        // its renames and its commit — remove every unreferenced data
-        // file (horizon 0: we hold the lock, nothing is mid-publish)
-        // and age out crashed attempts' stage dirs
-        CommitLog.vacuum(fs, lakeDir, olderThanMs = 0L)
-        graft.sources.Occ.sweepStaleStages(fs, lakeDir)
-        graft.sources.Occ.renameInto(fs, stage, newFiles, lakeDir)
-        CommitLog.commit(fs, lakeDir, batchId, newFiles)
-        if (failAfterCommit)
-          throw new RuntimeException(
-            "injected crash before index refresh")
-        // refresh AFTER commit, on a cleaned lake: the index never
-        // sees an orphan (mid-crash-window the sink is down, so no
-        // refresh runs until the retry has cleaned up)
-        if (newFiles.nonEmpty) {
-          StatsIndex.refresh(spark, lakeDir, zPhys, indexDir); ()
-        }
-        // fold the log once it outgrows the threshold, so per-batch
-        // listing/parse cost stays O(checkpointEvery), not O(batches
-        // ever). Safe here: single writer, data + index already
-        // durable; a crash mid-fold leaves redundant subset records.
-        if (checkpointEvery > 0 &&
-            CommitLog.recordCount(fs, lakeDir) > checkpointEvery)
-          CommitLog.checkpoint(fs, lakeDir)
-      }
-      fs.delete(new Path(stage), true); ()
-    } finally { b.unpersist(); () }
+      // fold the log once it outgrows the threshold, so per-batch
+      // listing/parse cost stays O(checkpointEvery), not O(batches
+      // ever). Safe here: single writer, data + index already
+      // durable; a crash mid-fold leaves redundant subset records.
+      if (checkpointEvery > 0 &&
+          CommitLog.recordCount(fs, lakeDir) > checkpointEvery)
+        CommitLog.checkpoint(fs, lakeDir)
+    }
+    fs.delete(new Path(stage), true); ()
   }
 
   /** Exactly-once read surface: only manifest-listed files, so a

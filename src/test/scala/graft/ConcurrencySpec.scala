@@ -677,6 +677,81 @@ class ConcurrencySpec extends SparkSpec {
     assert(VectorIndex.queryPq(spark, lake, idx, qvec.toArray, k = 10,
       probes = 4, shortlist = 40).count() == 10L)
   }
+
+  test("a publish sweeping VectorIndex.refresh's staged segment before " +
+    "its drift probe reads it fails the refresh as a retryable stale " +
+    "index") {
+    import graft.sources.VectorIndex
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftseggate.impl", classOf[SegmentGateFs].getName)
+    conf.set("fs.AbstractFileSystem.graftseggate.impl",
+      classOf[SegmentGateAfs].getName)
+    val emb = graft.queries.Oracle.table(spark,
+      new Path(sf("embeddings")).getParent.toString, "embeddings")
+    val dir = Files.createTempDirectory("graft_vidx_refresh_race_").toString
+    val lake = s"$dir/lake"
+    val idx = s"graftseggate://$dir/vidx"
+    assert(Occ.append(spark, lake, emb.filter(col("vec_id") < 300)) >= 0L)
+    VectorIndex.build(spark, lake, idx)
+    assert(Occ.append(spark, lake, emb.filter(col("vec_id") >= 300 &&
+      col("vec_id") < 400)) >= 0L)
+    // a build publishes between the refresh's segment write and its
+    // read-back; that publish sweeps the unreferenced staged segment
+    val fired = new AtomicBoolean(false)
+    SegmentGateFs.arm(() => {
+      VectorIndex.build(spark, lake, idx)
+      fired.set(true)
+    })
+    val e =
+      try intercept[Exception](VectorIndex.refresh(spark, lake, idx))
+      finally SegmentGateFs.disarm()
+    assert(fired.get, "the racing build never ran")
+    assert(e.isInstanceOf[VectorIndex.StaleVectorIndexException], e.toString)
+    assert(e.getMessage.contains("retry the refresh"), e.getMessage)
+    // the racing build already covers every committed file
+    assert(VectorIndex.refresh(spark, lake, idx) == ((0, 0L)))
+    val qvec = emb.filter(col("vec_id") === 0)
+      .select(col("embedding")).head.getSeq[Float](0)
+    assert(VectorIndex.query(spark, lake, idx, qvec, k = 10,
+      probes = 4).count() == 10L)
+  }
+}
+
+/** The local filesystem under the scheme `graftseggate:`, with one
+  * hook: armed, it runs once when `VectorIndex.refresh` lists its
+  * staged segment to read it back (the drift probe), before the
+  * listing is taken. */
+class SegmentGateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("graftseggate:///")
+  override def getScheme: String = "graftseggate"
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (p.getName.startsWith("seg-")) SegmentGateFs.fire()
+    super.listStatus(p)
+  }
+}
+
+/** [[SegmentGateFs]] for `FileContext` (the pointer's atomic rename). */
+class SegmentGateAfs(uri: java.net.URI,
+    conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+      new SegmentGateFs, conf, "graftseggate", false)
+
+object SegmentGateFs {
+  private var armed: Option[() => Unit] = None
+
+  def arm(hook: () => Unit): Unit = synchronized { armed = Some(hook) }
+
+  def disarm(): Unit = synchronized { armed = None }
+
+  private def fire(): Unit = {
+    val probing = Thread.currentThread.getStackTrace.exists(e =>
+      e.getClassName == "graft.sources.VectorIndex$" &&
+        e.getMethodName.contains("segmentMeanAsim"))
+    val hook = synchronized {
+      armed.filter(_ => probing).map { h => armed = None; h }
+    }
+    hook.foreach(_())
+  }
 }
 
 /** The local filesystem under the scheme `graftgate:`, with one hook:

@@ -4,8 +4,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazy). */
@@ -13,15 +17,47 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
 
+  /** The call sites of each [[jobsOf]] the running test made, printed
+    * when the test fails, so a failing job-count spec names the site
+    * that grew. */
+  private val jobSites = new ConcurrentLinkedQueue[Seq[String]]
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    jobSites.clear()
+    val out = super.withFixture(test)
+    if (out.isFailed && !jobSites.isEmpty)
+      jobSites.asScala.zipWithIndex.foreach { case (sites, i) =>
+        println(s"[jobsOf] ${test.name}: call ${i + 1} ran " +
+          s"${sites.size} job(s):" +
+          sites.map("\n  " + _).mkString)
+      }
+    out
+  }
+
   /** Spark's job count for `body`, from job-start events carrying a tag. */
   def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
-    val seen = new ConcurrentLinkedQueue[String]
+    val seen = new ConcurrentLinkedQueue[(String, String)]
+    // the call site of a SQL execution is taken on the thread that ran
+    // the action; adaptive execution submits its jobs from a pool
+    // thread whose own stack holds no program frame
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("graft.spec.job"))).getOrElse(""))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId, s.details)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        val details = props
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .flatMap(id => Option(executions.get(id.toLong)))
+          .getOrElse(e.stageInfos.lastOption.map(_.details).getOrElse(""))
+        seen.add((props.flatMap(p => Option(p.getProperty("graft.spec.job")))
+          .getOrElse(""), SparkSpec.innermostFrame(details)))
+      }
     }
     def tagged(t: String)(run: => Unit): Unit = {
       sc.setLocalProperty("graft.spec.job", t)
@@ -34,15 +70,27 @@ trait SparkSpec extends AnyFunSuite {
       // seen, every job of `body` has been counted
       tagged(s"$tag-end")(sc.parallelize(Seq(1), 1).count(): Unit)
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(s"$tag-end") && System.nanoTime() < deadline)
+      while (!seen.asScala.exists(_._1 == s"$tag-end") &&
+          System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(seen.contains(s"$tag-end"), "listener never saw the sentinel")
-      seen.asScala.count(_ == tag)
+      assert(seen.asScala.exists(_._1 == s"$tag-end"),
+        "listener never saw the sentinel")
+      val sites = seen.asScala.collect { case (`tag`, s) => s }.toSeq
+      jobSites.add(sites)
+      sites.size
     } finally sc.removeSparkListener(listener)
   }
 }
 
 object SparkSpec {
+  private val GraftFrame = """^\s*(?:at\s+)?(graft\..*)$""".r
+
+  /** The innermost `graft.` frame of a call-site stack, or the stack's
+    * first line when it holds none. */
+  def innermostFrame(callSite: String): String =
+    callSite.linesIterator.collectFirst { case GraftFrame(f) => f }
+      .getOrElse(callSite.linesIterator.nextOption().getOrElse("?"))
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
