@@ -14,9 +14,10 @@ import graft.sources.FileMemo
   *  - pairs: `_dv` sidecars holding `pairs` `(file, pos)` pairs over 100
   *    Spark-shaped data-file names, in 10 sidecar files; the cold
   *    `vectorsFor` (footer row counts plus one job over the sidecars,
-  *    then the local frame built and analyzed) and the warm one (the
-  *    frame reused for the unchanged sidecar set, median of 5), which
-  *    runs no job;
+  *    then the per-file position arrays merged and broadcast, as a
+  *    read's row filter does) and the warm one (the set and its
+  *    broadcast reused for the unchanged sidecar set, median of 5),
+  *    which runs no job;
   *  - schemas: `files` data files of 8 columns; the cold `readFiles`
   *    with `mergeSchema` (every footer read on the driver) and the warm
   *    one (median of 5). Spark is handed the listed file statuses, so
@@ -51,10 +52,11 @@ object MorMemoScale {
         .filter(n => n.endsWith(".parquet") && !n.startsWith("_")).toSeq.sorted
     def median(f: => Unit): Double = (1 to 5).map(_ => secs(f)).sorted.apply(2)
     // the memo object's fields compile to statics, which SizeEstimator
-    // skips: estimate their values instead
-    // (the reused vector frames are Spark's own rows, held apart)
+    // skips: estimate their values instead (the held vector sets refer
+    // to the SparkContext, held apart: a set's map shares the memo's
+    // arrays when one sidecar covers a file)
     val fields = FileMemo.getClass.getDeclaredFields.toSeq
-      .filter(f => f.getName != "MODULE$" && f.getName != "frames")
+      .filter(f => f.getName != "MODULE$" && f.getName != "sets")
     fields.foreach(_.setAccessible(true))
     def held: Long = SizeEstimator.estimate(fields.map(_.get(null)))
 
@@ -67,13 +69,23 @@ object MorMemoScale {
         (col("id") / 100).cast("long").as("pos"))
         .repartition(10).write.parquet(s"$lake/_dv")
       val names = parquetNames(s"$lake/_dv")
+      val none = spark.range(0).select(lit("").as("file"), col("id").as("pos"))
+      // the set as a read uses it: broadcast for the row filter
+      def applied(): Unit =
+        FileMemo.vectorsFor(spark, lake, names).dropDead(none, "file", "pos")
       val before = held
-      val cold = secs(FileMemo.vectorsFor(spark, lake, names))
+      val cold = secs(applied())
       val bytes = held - before
-      val warm = median(FileMemo.vectorsFor(spark, lake, names))
-      val jobs = BenchUtil.jobsOf(spark)(FileMemo.vectorsFor(spark, lake, names))
+      val set = FileMemo.vectorsFor(spark, lake, names) match {
+        case s: graft.sources.DeletionVectors.InMemory =>
+          SizeEstimator.estimate(s.byFile)
+        case _ => 0L
+      }
+      val warm = median(applied())
+      val jobs = BenchUtil.jobsOf(spark)(applied())
       println(f"[mor-memo] pairs=$n sidecars=${names.size} " +
         f"memo_mb=${bytes / 1e6}%.1f bytes_per_pair=${bytes.toDouble / n}%.1f " +
+        f"set_mb=${set / 1e6}%.1f " +
         f"cold_s=$cold%.2f warm_s=$warm%.3f warm_jobs=$jobs")
       rmrf(lake)
     }

@@ -1,10 +1,6 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -291,48 +287,16 @@ object ColumnMapping {
     m.physicalOf(logical)
   }
 
-  /** Distributed footer probe: which of `names` (committed data-file
-    * names, resolved through the clone chain to `paths`) still CARRY
-    * any of the tombstoned top-level physical columns. One footer
-    * read per file on the executors ([[StatsIndex]]'s shipped-conf
-    * pattern) — metadata-scale, never a data byte. */
-  private def filesCarrying(spark: SparkSession, names: Seq[String],
-      paths: Seq[String], dropped: Set[String]): Seq[String] = {
-    import spark.implicits._
-    // filesystem-relevant conf only, via the shared vetted helper
-    // ([[FsConfShip]], ADVICE r13 — the previous wholesale broadcast
-    // shipped every session entry, credentials included, per purge)
-    val confEntries = spark.sparkContext.broadcast(
-      FsConfShip.entries(spark.sparkContext.hadoopConfiguration))
-    val deadB = spark.sparkContext.broadcast(dropped)
-    names.zip(paths).toDF("name", "path")
-      .repartition(math.max(1, math.min(names.size, 64)))
-      .as[(String, String)]
-      .mapPartitions { it =>
-        val c = FsConfShip.rebuild(confEntries.value)
-        it.flatMap { case (name, path) =>
-          val r = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(path), c))
-          try {
-            val fields = r.getFooter.getFileMetaData.getSchema
-              .getFields.asScala.map(_.getName).toSet
-            if (fields.exists(deadB.value.contains)) Some(name) else None
-          } finally r.close()
-        }
-      }.collect().toSeq.sorted
-  }
-
-  /** Driver-side single-footer probe — the commit section's
-    * added-file check. No Spark job: one footer read on the calling
-    * thread, ∝ files appended during the purge window. */
-  private def footerCarriesDead(spark: SparkSession, path: String,
-      dropped: Set[String]): Boolean = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new Path(path), spark.sparkContext.hadoopConfiguration))
-    try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-      .map(_.getName).exists(dropped.contains)
-    finally r.close()
-  }
+  /** Which of the committed data files `names` still CARRY any of
+    * the tombstoned top-level physical columns: the top-level field
+    * names of their footer schemas, memoized by [[FileMemo]] — no
+    * Spark job, and a footer read on the driver only for a file the
+    * memo does not hold yet. */
+  private[graft] def filesCarrying(spark: SparkSession, lakeDir: String,
+      names: Seq[String], dropped: Set[String]): Seq[String] =
+    names.zip(FileMemo.schemasOf(spark, lakeDir, names)).collect {
+      case (n, schema) if schema.fieldNames.exists(dropped) => n
+    }.sorted
 
   /** REORG … APPLY (PURGE): physically reclaim the tombstoned
     * columns' bytes and make the dropped names reusable. [[drop]] is
@@ -342,8 +306,9 @@ object ColumnMapping {
     * RAW physical files and replicates this map exactly so reads stay
     * stable) ever removes them. This is the missing maintenance verb:
     *
-    *  - DISCOVERY is a distributed footer probe ([[filesCarrying]]) —
-    *    only files whose physical schema still holds a tombstoned
+    *  - DISCOVERY reads memoized footer schemas on the driver
+    *    ([[filesCarrying]], no Spark job) — only files whose physical
+    *    schema still holds a tombstoned
     *    column rewrite; a lake whose churn already replaced them
     *    rewrites NOTHING. Cost ∝ carrying files, never lake size
     *    (Delta documents the same REORG cost shape).
@@ -437,9 +402,7 @@ object ColumnMapping {
       if (m.dropped.isEmpty) return (0, committed.size)
       val carrying =
         if (committed.isEmpty) Seq.empty[String]
-        else filesCarrying(spark, committed,
-          CommitLog.resolveDataPaths(fs, lakeDir, committed),
-          m.dropped.toSet)
+        else filesCarrying(spark, lakeDir, committed, m.dropped.toSet)
       val dvOpt = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
       val stage = Occ.stageDir(lakeDir)
       // the UNLOCKED rewrite reads pinned paths a concurrent physical
@@ -494,12 +457,8 @@ object ColumnMapping {
         // rejects tombstoned names) — but restore/raw surgery can
         // resurrect carriers, so their footers are verified here,
         // ∝ files appended during the purge window (usually zero)
-        lazy val addedCarries = (filesNow -- filesSnap).toSeq.sorted
-          .exists { n =>
-            footerCarriesDead(spark,
-              CommitLog.resolveDataPaths(fs, lakeDir, Seq(n)).head,
-              m.dropped.toSet)
-          }
+        lazy val addedCarries = filesCarrying(spark, lakeDir,
+          (filesNow -- filesSnap).toSeq.sorted, m.dropped.toSet).nonEmpty
         if (mNow.dropped.toSet != m.dropped.toSet) None
         else if (carrying.isEmpty) {
           // bytes already gone (churn replaced every carrying file) —
@@ -521,10 +480,8 @@ object ColumnMapping {
           // the verb that replaced them (compaction retires debris),
           // so retirement is a conservative CONFLICT, never a read.
           def pairsTouchCarrying(names: Set[String]): Boolean =
-            names.nonEmpty &&
-              DeletionVectors.vectorsFor(spark, lakeDir, names).exists(
-                _.filter(col("file").isin(carrying: _*))
-                  .head(1).nonEmpty)
+            DeletionVectors.vectorsFor(spark, lakeDir, names)
+              .exists(_.files.exists(carrying.toSet))
           if (!carrying.forall(filesNow.contains) ||
               (dvSnap -- dvNow).nonEmpty ||
               pairsTouchCarrying(dvNow -- dvSnap) || addedCarries) None

@@ -69,7 +69,11 @@ object Constraints {
     * itself contain tabs (legal SQL whitespace). */
   def list(fs: org.apache.hadoop.fs.FileSystem,
       lakeDir: String): Seq[(String, String)] =
-    DefRecords.readLines(fs, lakeDir, Prefix).map { line =>
+    parse(DefRecords.readLines(fs, lakeDir, Prefix))
+
+  /** [[list]] from the record's raw lines. */
+  private[sources] def parse(lines: Seq[String]): Seq[(String, String)] =
+    lines.map { line =>
       val i = line.indexOf('\t')
       require(i > 0, s"corrupt $Prefix record line: '$line'")
       (line.substring(0, i), line.substring(i + 1))

@@ -15,29 +15,45 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * generation/rename discipline so it cannot drift between them. */
 private[sources] object DefRecords {
 
+  /** The log dir's entries: one listing, none when it does not
+    * exist. */
+  private def logEntries(fs: FileSystem, lakeDir: String): Seq[Path] =
+    try fs.listStatus(new Path(CommitLog.logDir(lakeDir))).toSeq
+      .map(_.getPath)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  private def highest(entries: Seq[Path],
+      prefix: String): Option[(Path, Long)] =
+    entries.filter(_.getName.startsWith(prefix))
+      .map(p => (p, p.getName.substring(prefix.length).toLong))
+      .sortBy(_._2).lastOption
+
   /** Highest-generation definition file for `prefix`, if any. */
   def current(fs: FileSystem, lakeDir: String,
-      prefix: String): Option[(Path, Long)] = {
-    val log = new Path(CommitLog.logDir(lakeDir))
-    if (!fs.exists(log)) return None
-    fs.listStatus(log).iterator.map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
-      .map(p => (p, p.getName.substring(prefix.length).toLong))
-      .toSeq.sortBy(_._2).lastOption
+      prefix: String): Option[(Path, Long)] =
+    highest(logEntries(fs, lakeDir), prefix)
+
+  private def lines(fs: FileSystem, p: Path): Seq[String] = {
+    val in = fs.open(p)
+    val text =
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    text.split('\n').toSeq.filter(_.nonEmpty)
   }
 
   /** The current generation's non-empty lines (raw; callers parse). */
   def readLines(fs: FileSystem, lakeDir: String,
       prefix: String): Seq[String] =
-    current(fs, lakeDir, prefix) match {
-      case None => Seq.empty
-      case Some((p, _)) =>
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        text.split('\n').toSeq.filter(_.nonEmpty)
-    }
+    readLinesOf(fs, lakeDir, Seq(prefix))(prefix)
+
+  /** [[readLines]] of each of `prefixes`, from one listing of the
+    * log. */
+  def readLinesOf(fs: FileSystem, lakeDir: String,
+      prefixes: Seq[String]): Map[String, Seq[String]] = {
+    val entries = logEntries(fs, lakeDir)
+    prefixes.map(p => p -> highest(entries, p)
+      .fold(Seq.empty[String])(c => lines(fs, c._1))).toMap
+  }
 
   /** Publish `lines` as generation `current + 1`, then sweep the
     * out-ranked generation. */
@@ -53,10 +69,6 @@ private[sources] object DefRecords {
   /** Every definition file of every prefix — [[Clone.shallow]]'s
     * half-clone retry sweeps these with the pointer. */
   def allFiles(fs: FileSystem, lakeDir: String,
-      prefixes: Seq[String]): Seq[Path] = {
-    val log = new Path(CommitLog.logDir(lakeDir))
-    if (!fs.exists(log)) return Seq.empty
-    fs.listStatus(log).iterator.map(_.getPath)
-      .filter(p => prefixes.exists(p.getName.startsWith)).toSeq
-  }
+      prefixes: Seq[String]): Seq[Path] =
+    logEntries(fs, lakeDir).filter(p => prefixes.exists(p.getName.startsWith))
 }

@@ -1,8 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 
 /** MERGE-ON-READ mutations — Delta/Iceberg DELETION VECTORS from
   * plain parquet and the existing [[CommitLog]] machinery.
@@ -31,16 +35,18 @@ import org.apache.spark.sql.functions._
   * the vectors without their delta (vanished rows): before the
   * checkpoint rename nothing changed; after it, both halves are live.
   *
-  * [[readMor]] is the read surface: the committed view anti-joined
-  * against the covered vector set on `(file name, row position)`.
-  * Both halves are resolved on the driver from [[FileMemo]], keyed by
-  * write-once file identity: the read schema from memoized footer
-  * schemas (no inference job) and the vector set as a local frame of
-  * memoized sidecar pairs, which the join broadcasts with one job that
-  * reads nothing. A warm read therefore runs that broadcast and the
-  * query's own scan jobs only; a vector set above
-  * `spark.sql.autoBroadcastJoinThreshold` stays a distributed sidecar
-  * read + distinct. [[compact]] applies the vectors
+  * [[readMor]] is the read surface: the committed view minus the
+  * rows whose `(file name, row position)` the covered vector set
+  * names. Both halves are resolved on the driver from [[FileMemo]],
+  * keyed by write-once file identity: the read schema from memoized
+  * footer schemas (no inference job) and the vector set as a driver
+  * map of sorted positions per file ([[Vectors]]), which the scan
+  * applies as a row filter that binary-searches one broadcast of it
+  * — the per-row "is deleted" test Delta applies inside its scan, not
+  * a join. A warm read therefore runs the query's own scan jobs only;
+  * a vector set above `spark.sql.autoBroadcastJoinThreshold` stays a
+  * distributed sidecar read + distinct, anti-joined. [[compact]]
+  * applies the vectors
   * physically (rewrites ONLY files that carry DV rows, drops `_dv`),
   * returning the lake to plain-files state.
   *
@@ -134,10 +140,10 @@ object DeletionVectors {
   def hasDvs(fs: org.apache.hadoop.fs.FileSystem,
       lakeDir: String): Boolean = coveredDvFiles(fs, lakeDir).nonEmpty
 
-  /** The covered vector set as a DataFrame of `(file, pos)` —
-    * shared with [[StatsIndex.countPruned]]'s per-file subtraction. */
+  /** The current covered vector set — shared with
+    * [[StatsIndex.countPruned]]'s per-file subtraction. */
   private[sources] def vectors(spark: SparkSession, lakeDir: String)
-      : Option[DataFrame] = {
+      : Option[Vectors] = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     vectorsFor(spark, lakeDir, coveredDvFiles(fs, lakeDir).toSet)
@@ -159,19 +165,133 @@ object DeletionVectors {
   private[sources] def fileNameCol: Column =
     element_at(split(col("_metadata.file_path"), "/"), -1)
 
-  /** Anti-join `base` against the covered vectors (if any) on
-    * `(file name, row position)` — the one shared MoR read step. */
+  /** The rows of `base` whose `(file name, row position)` the covered
+    * vectors (if any) do not name — the one shared MoR read step. */
   private[sources] def applyVectors(base: DataFrame,
-      dv: Option[DataFrame]): DataFrame = dv match {
+      dv: Option[Vectors]): DataFrame = dv match {
     case None => base
     case Some(v) =>
       requireNoClash(base, "readMor")
-      base
-        .withColumn(FileCol, fileNameCol)
-        .withColumn(PosCol, col("_metadata.row_index"))
-        .join(v.select(col("file").as(FileCol), col("pos").as(PosCol)),
-          Seq(FileCol, PosCol), "left_anti")
+      v.dropDead(base
+          .withColumn(FileCol, fileNameCol)
+          .withColumn(PosCol, col("_metadata.row_index")), FileCol, PosCol)
         .drop(FileCol, PosCol)
+  }
+
+  private val DvSchema = StructType(Seq(
+    StructField("file", StringType), StructField("pos", LongType)))
+
+  /** A covered vector set: the distinct `(file, pos)` pairs of some
+    * covered sidecars, as [[FileMemo.vectorsFor]] resolved them —
+    * [[InMemory]] within the broadcast bound, [[Distributed]] above
+    * it. Every consumer goes through these methods, so none branches
+    * on how the set is held. */
+  private[graft] sealed trait Vectors {
+
+    /** The rows of `df` whose string column `file` and long column
+      * `pos` name no pair. */
+    def dropDead(df: DataFrame, file: String, pos: String): DataFrame
+
+    /** The rows of `df` whose (`file`, `pos`) names a pair. */
+    def keepDead(df: DataFrame, file: String, pos: String): DataFrame
+
+    /** The files at least one pair names, sorted. */
+    def files: Seq[String]
+
+    /** The number of pairs per file. */
+    def deadCounts: Map[String, Long]
+
+    /** [[deadCounts]] as a frame of `(file, dead)`. */
+    def deadCountFrame(spark: SparkSession): DataFrame
+
+    /** The pairs naming none of `dropped`, as a `(file, pos)` frame;
+      * None when there are none. */
+    def without(spark: SparkSession, dropped: Set[String]): Option[DataFrame]
+
+    /** This set, with a broadcast hint on any join it plans. */
+    def hinted: Vectors
+  }
+
+  /** A vector set held on the driver: per file, its sorted distinct
+    * positions. Rows are dropped by a filter that binary-searches one
+    * broadcast of the map, made on first use. */
+  private[graft] final class InMemory(
+      val byFile: Map[String, Array[Long]], sc: SparkContext)
+      extends Vectors {
+    private var handle: Option[Broadcast[Map[String, Array[Long]]]] = None
+
+    private def shipped: Broadcast[Map[String, Array[Long]]] = synchronized {
+      if (handle.isEmpty) handle = Some(sc.broadcast(byFile))
+      handle.get
+    }
+
+    /** The broadcast's id, once it is made. */
+    def broadcastId: Option[Long] = synchronized(handle.map(_.id))
+
+    /** Drops the broadcast's executor copies; the driver keeps its own,
+      * so a frame already built on it still runs. */
+    def release(): Unit = synchronized(handle.foreach(_.unpersist(false)))
+
+    private def dead(file: String, pos: String): Column =
+      udf(new Dead(shipped)).apply(col(file), col(pos))
+
+    def dropDead(df: DataFrame, file: String, pos: String): DataFrame =
+      df.filter(!dead(file, pos))
+    def keepDead(df: DataFrame, file: String, pos: String): DataFrame =
+      df.filter(dead(file, pos))
+    def files: Seq[String] = byFile.keys.toSeq.sorted
+    def deadCounts: Map[String, Long] =
+      byFile.map { case (f, ps) => f -> ps.length.toLong }
+    def deadCountFrame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      deadCounts.toSeq.toDF("file", "dead")
+    }
+    def without(spark: SparkSession,
+        dropped: Set[String]): Option[DataFrame] = {
+      val kept = byFile.toSeq.filterNot(kv => dropped(kv._1)).sortBy(_._1)
+      if (kept.isEmpty) None
+      else Some(spark.createDataFrame(spark.sparkContext.parallelize(
+        kept.flatMap { case (f, ps) => ps.toSeq.map(p => Row(f, p)) }, 1),
+        DvSchema))
+    }
+    def hinted: Vectors = this
+  }
+
+  /** Is `(file, pos)` in the broadcast set? Deterministic. */
+  private final class Dead(set: Broadcast[Map[String, Array[Long]]])
+      extends ((String, Long) => Boolean) with Serializable {
+    @transient private lazy val byFile = set.value
+    def apply(file: String, pos: Long): Boolean = byFile.get(file) match {
+      case Some(ps) => java.util.Arrays.binarySearch(ps, pos) >= 0
+      case None => false
+    }
+  }
+
+  /** A vector set above the broadcast bound: the distributed sidecar
+    * read and `distinct`, applied by joins. */
+  private[graft] final case class Distributed(frame: DataFrame)
+      extends Vectors {
+    private def pairs(file: String, pos: String): DataFrame =
+      frame.select(col("file").as(file), col("pos").as(pos))
+
+    def dropDead(df: DataFrame, file: String, pos: String): DataFrame =
+      df.join(pairs(file, pos), Seq(file, pos), "left_anti")
+    def keepDead(df: DataFrame, file: String, pos: String): DataFrame =
+      df.join(pairs(file, pos), Seq(file, pos), "left_semi")
+    def files: Seq[String] = frame.select(col("file")).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    def deadCounts: Map[String, Long] = frame.groupBy(col("file")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def deadCountFrame(spark: SparkSession): DataFrame =
+      frame.groupBy(col("file")).agg(count(lit(1)).as("dead"))
+    def without(spark: SparkSession,
+        dropped: Set[String]): Option[DataFrame] = {
+      import spark.implicits._
+      val survivors = frame.join(dropped.toSeq.toDF("file"), Seq("file"),
+        "left_anti").localCheckpoint()
+      if (survivors.isEmpty) None else Some(survivors)
+    }
+    def hinted: Vectors = Distributed(broadcast(frame))
   }
 
   /** Write `pairs` (a `(file, pos)` frame) as one new sidecar file and
@@ -193,14 +313,9 @@ object DeletionVectors {
     * pair per deleted row. Caller must hold the writer lock. */
   private[sources] def rewriteSurvivorVectors(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, lakeDir: String,
-      dv: DataFrame, droppedFiles: Set[String]): Seq[String] = {
-    import spark.implicits._
-    val names = droppedFiles.toSeq.toDF("file")
-    val survivors =
-      dv.join(names, Seq("file"), "left_anti").localCheckpoint()
-    if (survivors.isEmpty) Seq.empty
-    else writePairs(fs, lakeDir, survivors)
-  }
+      dv: Vectors, droppedFiles: Set[String]): Seq[String] =
+    dv.without(spark, droppedFiles).map(writePairs(fs, lakeDir, _))
+      .getOrElse(Seq.empty)
 
   /** Merge-on-read DELETE: record `(file, pos)` for every committed
     * row matching `predicate` (SQL NULL semantics — NULL keeps the
@@ -227,10 +342,8 @@ object DeletionVectors {
       val hits = lake.filter(coalesce(expr(predicate), lit(false)))
         .select(fileNameCol.as("file"),
           col("_metadata.row_index").as("pos"))
-      val fresh = vectors(spark, lakeDir) match {
-        case None => hits
-        case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-      }
+      val fresh = vectors(spark, lakeDir)
+        .fold(hits)(_.dropDead(hits, "file", "pos"))
       // count + write in one materialization: localCheckpoint the tiny
       // pair set so the count never re-runs the predicate scan; the
       // count itself rides the materialization job (Pins.pinCounted)
@@ -330,8 +443,8 @@ object DeletionVectors {
       // matched-position discovery: key columns + _metadata only (a
       // column-pruned pass), optionally restricted to the index's
       // key-candidate files. Committed rows INCLUDE earlier deltas and
-      // already-dead rows; the covered-vector anti-join below drops
-      // the dead ones, so `matched` counts live replacements only.
+      // already-dead rows; the covered vectors below drop the dead
+      // ones, so `matched` counts live replacements only.
       def hitsIn(base: DataFrame): DataFrame = base
         .select(Seq(fileNameCol.as(FileCol),
           col("_metadata.row_index").as(PosCol)) ++ keys.map(col): _*)
@@ -344,10 +457,8 @@ object DeletionVectors {
         case Some(cand) => hitsIn(FileMemo.readSubset(spark, lake, cand))
         case None => hitsIn(lake)
       }
-      val fresh = vectors(spark, lakeDir) match {
-        case None => hits
-        case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-      }
+      val fresh = vectors(spark, lakeDir)
+        .fold(hits)(_.dropDead(hits, "file", "pos"))
       val (pairs, matched) = Pins.pinCounted(fresh)
       val newDv =
         if (matched == 0) Seq.empty else writePairs(fs, lakeDir, pairs)
@@ -521,7 +632,7 @@ object DeletionVectors {
       notMatched: Seq[MergeInto.NotMatchedInsert],
       notMatchedBySource: Seq[MergeInto.BySourceClause],
       verb: String)
-      : (DataFrame, Option[DataFrame]) => ClausesMorPrep = {
+      : (DataFrame, Option[Vectors]) => ClausesMorPrep = {
     import MergeInto.{BySourceDelete, BySourceUpdate, MatchedDelete,
       MatchedUpdate}
     MergeInto.requireClauseShape(matched, notMatched, notMatchedBySource,
@@ -544,7 +655,7 @@ object DeletionVectors {
     val insertAssigned = notMatched.flatMap(_.values.keySet).toSet
     GeneratedColumns.requireNoGeneratedSet(spark, lakeDir,
       allSets ++ insertAssigned, verb)
-    (lake: DataFrame, vecs: Option[DataFrame]) => {
+    (lake: DataFrame, vecs: Option[Vectors]) => {
       requireNoClash(lake, verb)
       val lakeCols = lake.columns.toSet
       val unknown = (allSets ++ insertAssigned) -- lakeCols
@@ -561,12 +672,7 @@ object DeletionVectors {
       val positioned = lake
         .withColumn(FileCol, fileNameCol)
         .withColumn(PosCol, col("_metadata.row_index"))
-      val live = vecs match {
-        case None => positioned
-        case Some(dv) => positioned.join(
-          dv.select(col("file").as(FileCol), col("pos").as(PosCol)),
-          Seq(FileCol, PosCol), "left_anti")
-      }
+      val live = vecs.fold(positioned)(_.dropDead(positioned, FileCol, PosCol))
       // first-claiming-clause index, exactly the CoW verb's chain
       val joined = live.alias("t")
         .join(source.withColumn("__m", lit(true)).alias("s"),
@@ -740,17 +846,13 @@ object DeletionVectors {
         case Some(cand) => FileMemo.readSubset(spark, lake, cand)
         case None => lake
       }
-      // matched LIVE rows, with their positions attached: the covered
-      // vectors anti-join BEFORE the predicate keeps dead rows out
+      // matched LIVE rows, with their positions attached: applying the
+      // covered vectors BEFORE the predicate keeps dead rows out
       val positioned = base
         .withColumn(FileCol, fileNameCol)
         .withColumn(PosCol, col("_metadata.row_index"))
-      val live = vectors(spark, lakeDir) match {
-        case None => positioned
-        case Some(dv) => positioned.join(
-          dv.select(col("file").as(FileCol), col("pos").as(PosCol)),
-          Seq(FileCol, PosCol), "left_anti")
-      }
+      val live = vectors(spark, lakeDir)
+        .fold(positioned)(_.dropDead(positioned, FileCol, PosCol))
       val (matched, n) = Pins.pinCounted(live
         .filter(coalesce(expr(predicate), lit(false))))
       if (n > 0) {
@@ -815,7 +917,7 @@ object DeletionVectors {
     * vectors would make replaced rows vanish with no replacement
     * visible). */
   private[sources] def vectorsFor(spark: SparkSession, lakeDir: String,
-      covered: Set[String]): Option[DataFrame] =
+      covered: Set[String]): Option[Vectors] =
     if (covered.isEmpty) None
     else Some(FileMemo.vectorsFor(spark, lakeDir, covered.toSeq.sorted))
 
@@ -833,13 +935,15 @@ object DeletionVectors {
     applyVectors(base, vectorsFor(spark, lakeDir, at.dvFiles))
   }
 
-  /** The committed view MINUS the covered vectors — ONE scan plus one
-    * broadcast anti-join on `(file name, row position)`. With no
-    * covered vectors this is exactly the plain committed read. Files
-    * and vectors come from one atomic log resolution; the schema and
-    * the vector set come from [[FileMemo]], so building the frame runs
-    * no Spark job once the memo holds this version's files (the writer
-    * of a sidecar seeds it, a first read fills it). */
+  /** The committed view MINUS the covered vectors — ONE scan whose
+    * rows pass a filter on `(file name, row position)` against the
+    * broadcast vector set (an anti-join above the broadcast bound).
+    * With no covered vectors this is exactly the plain committed read.
+    * Files and vectors come from one atomic log resolution; the schema
+    * and the vector set come from [[FileMemo]], so building the frame
+    * runs no Spark job once the memo holds this version's files (the
+    * writer of a sidecar seeds it, a first read fills it), and its
+    * action runs the plain read's jobs only. */
   def readMor(spark: SparkSession, lakeDir: String,
       mergeSchema: Boolean = false): DataFrame = {
     val fs = new Path(lakeDir)
@@ -856,7 +960,7 @@ object DeletionVectors {
   /** [[readMor]] with FILE-LEVEL SKIPPING: the committed ∩
     * index-pruned file list is scanned with the exact predicate
     * re-applied (the [[StatsIndex]] contract), then the vectors
-    * anti-join as in [[readMor]] — so a selective probe over a DV'd
+    * apply as in [[readMor]] — so a selective probe over a DV'd
     * 100 TB lake reads a handful of files AND never sees a deleted
     * row. The index stays valid under vectors: MoR mutations change
     * no indexed file's rows in place (deltas are indexed on refresh),
@@ -903,8 +1007,9 @@ object DeletionVectors {
     *
     * Shape: one file-stream scan (`maxFilesPerTrigger` bounds each
     * micro-batch) + one broadcast semi-join on the committed-name
-    * snapshot + one broadcast anti-join on the vector snapshot —
-    * metadata-bounded state, no shuffle. */
+    * snapshot + the vector snapshot's row filter (a broadcast
+    * anti-join above the broadcast bound) — metadata-bounded state,
+    * no shuffle. */
   def readMorStream(spark: SparkSession, lakeDir: String,
       maxFilesPerTrigger: Int = 4): DataFrame = {
     import spark.implicits._
@@ -942,8 +1047,7 @@ object DeletionVectors {
       .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
     // vector snapshot: the covered files BY NAME, so later sidecar
     // files can never join in (static file lists are pinned)
-    val dvSnap = vectorsFor(spark, lakeDir, covered)
-      .map(_.select(col("file").as(FileCol), col("pos").as(PosCol)))
+    val dvSnap = vectorsFor(spark, lakeDir, covered).map(_.hinted)
     val stream = byDir.map { case (dir, names) =>
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
@@ -952,12 +1056,8 @@ object DeletionVectors {
         .withColumn(PosCol, col("_metadata.row_index"))
         .join(broadcast(names.toDF(FileCol)), Seq(FileCol), "left_semi")
     }.reduce(_ unionByName _)
-    val live = dvSnap match {
-      case None => stream
-      case Some(dv) =>
-        stream.join(broadcast(dv), Seq(FileCol, PosCol), "left_anti")
-    }
-    live.drop(FileCol, PosCol)
+    dvSnap.fold(stream)(_.dropDead(stream, FileCol, PosCol))
+      .drop(FileCol, PosCol)
   }
 
   /** Thrown by [[readMorChanges]]'s SOUNDNESS guards when a physical
@@ -1103,21 +1203,14 @@ object DeletionVectors {
     val deletes =
       if (newDvFiles.isEmpty) none
       else {
-        import spark.implicits._
-        // the touched-file list (metadata-bounded) rides the pin's
-        // materialization job instead of a second distinct+collect
-        val (newPairs, touched0) = Pins.pinWithDistinct(
-          FileMemo.vectorsFor(spark, lakeDir, newDvFiles)
-            .join(from.files.toSeq.toDF("file"), Seq("file"),
-              "left_semi"),
-          "file")
-        val touched = touched0.sorted
+        val newPairs = FileMemo.vectorsFor(spark, lakeDir, newDvFiles)
+        val touched = newPairs.files.filter(from.files)
         if (touched.isEmpty) none
-        else FileMemo.readSubset(spark, schemaFrame, touched)
-          .withColumn(FileCol, fileNameCol)
-          .withColumn(PosCol, col("_metadata.row_index"))
-          .join(broadcast(newPairs.select(col("file").as(FileCol),
-            col("pos").as(PosCol))), Seq(FileCol, PosCol), "left_semi")
+        else newPairs.hinted.keepDead(
+            FileMemo.readSubset(spark, schemaFrame, touched)
+              .withColumn(FileCol, fileNameCol)
+              .withColumn(PosCol, col("_metadata.row_index")),
+            FileCol, PosCol)
           .drop(FileCol, PosCol)
           .withColumn("_change_type", lit("delete"))
       }
@@ -1139,14 +1232,10 @@ object DeletionVectors {
     require(fs.exists(new Path(CommitLog.logDir(lakeDir))),
       s"compact: $lakeDir has no commit log — cannot publish atomically")
     CommitLog.withWriterLock(fs, lakeDir) {
-      import spark.implicits._
       val committed = CommitLog.committedNames(fs, lakeDir).toSeq.sorted
       val dvOpt = vectors(spark, lakeDir)
-      val touched: Seq[String] = dvOpt match {
-        case None => Seq.empty
-        case Some(dv) => dv.select(col("file")).distinct()
-          .as[String].collect().toSeq.sorted.filter(committed.contains)
-      }
+      val touched: Seq[String] =
+        dvOpt.fold(Seq.empty[String])(_.files.filter(committed.toSet))
       if (touched.isEmpty) {
         // no visible vectors (possibly uncovered debris, or vectors
         // referencing swept files). If the LOG still covers sidecar
@@ -1184,12 +1273,7 @@ object DeletionVectors {
         val base = FileMemo.readFiles(spark, lakeDir, touched,
           mergeSchema = true)
         requireNoClash(base, "compact")
-        val survivors = base
-          .withColumn(FileCol, fileNameCol)
-          .withColumn(PosCol, col("_metadata.row_index"))
-          .join(dv.select(col("file").as(FileCol),
-            col("pos").as(PosCol)), Seq(FileCol, PosCol), "left_anti")
-          .drop(FileCol, PosCol)
+        val survivors = applyVectors(base, Some(dv))
         val carried = committed.filterNot(touched.toSet)
         val before = CommitLog.dataFileNames(fs, lakeDir)
         survivors.repartition(filesPerRewrite)

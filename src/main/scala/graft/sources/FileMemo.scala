@@ -4,9 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.Footer
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.datasources.{FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation,
@@ -16,7 +15,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver memos for the merge-on-read read surface, keyed by WRITE-ONCE
   * file identity `(qualified path, length, mtime)` — the rule
@@ -27,17 +25,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - Footer schemas of data files: [[readFiles]] builds a read's
   *    schema on the driver by Spark's own inference rule, so no read
-  *    runs a schema-inference job. A miss reads that file's footer on
-  *    the driver.
+  *    runs a schema-inference job, and [[schemasOf]] answers a purge's
+  *    "which files carry a dropped column" with no job. A miss reads
+  *    that file's footer on the driver.
   *  - `(file, pos)` pairs of sidecars: [[vectorsFor]] returns the
-  *    covered set as a local frame of internal rows, whose broadcast
-  *    is one job that reads nothing. Misses are read in one job over
-  *    the missing sidecars, or seeded by the writer that staged them
-  *    ([[seedPairs]]). The local frame is used only while its
-  *    estimated size is within `spark.sql.autoBroadcastJoinThreshold`
-  *    — the bound under which the join broadcasts that side anyway;
-  *    above it (or with the threshold disabled) the read keeps the
-  *    distributed frame.
+  *    covered set as a driver map of sorted positions per file with
+  *    one broadcast of it, which the readers filter rows against
+  *    (no join, so no broadcast job and no plan that holds the pairs).
+  *    Misses are read in one job over the missing sidecars, or seeded
+  *    by the writer that staged them ([[seedPairs]]). The set is held
+  *    in memory only while its estimated size is within
+  *    `spark.sql.autoBroadcastJoinThreshold`; above it (or with the
+  *    threshold disabled) the read keeps the distributed sidecar frame
+  *    and its anti-join.
   *
   * Every read of resolved files — data files, their candidate subsets
   * ([[readSubset]]) and sidecars — goes through [[scan]], which hands
@@ -160,6 +160,29 @@ private[graft] object FileMemo {
     }
   }
 
+  /** The footer schemas of the committed data files `names` of
+    * `lakeDir`, in order, resolved through the clone chain and
+    * memoized: one listing per hop, and a footer read on the driver
+    * per file the memo does not hold. Fails naming the files that
+    * resolve nowhere. */
+  def schemasOf(spark: SparkSession, lakeDir: String,
+      names: Seq[String]): Seq[StructType] =
+    if (names.isEmpty) Seq.empty
+    else {
+      val fs = new Path(lakeDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      resolve(fs, lakeDir, names, identity, schemas) match {
+        case None =>
+          val gone = names.filterNot(CommitLog.resolvableDataNames(fs, lakeDir))
+          throw new java.io.FileNotFoundException(
+            s"$lakeDir: data files not found: ${gone.mkString(", ")}")
+        case Some((sts, hits)) =>
+          val found = hits ++ footerSchemas(spark,
+            sts.filterNot(st => hits.contains(idOf(st))).distinct)
+          sts.map(st => found(idOf(st)))
+      }
+    }
+
   /** The parquet files `sts` as one frame of `schema`, read through
     * Spark's own file index with its listing step fed: an
     * `InMemoryFileIndex` whose status cache answers each root path
@@ -237,42 +260,51 @@ private[graft] object FileMemo {
   private val DvSchema = StructType(Seq(
     StructField("file", StringType), StructField("pos", LongType)))
 
-  /** Spark's size estimate for one row of a local `(file, pos)`
-    * relation without column statistics: row overhead plus the types'
-    * default sizes. */
+  /** Spark's size estimate for one `(file, pos)` row without column
+    * statistics: row overhead plus the types' default sizes. */
   private val PairBytes = 8L + StringType.defaultSize + LongType.defaultSize
 
-  /** The last local vector frames built, by session and covered
-    * sidecar identities. Spark's analysis of a local relation walks
-    * every row, so a frame is analyzed once and a read of an unchanged
-    * covered set reuses it. */
-  private val frames =
-    new java.util.LinkedHashMap[(SparkSession, Seq[Id]), DataFrame](8,
-        0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, Seq[Id]), DataFrame])
-          : Boolean = size() > 4
+  /** The last in-memory vector sets built, by context and covered
+    * sidecar identities, so a read of an unchanged covered set reuses
+    * its broadcast. An evicted set's broadcast is unpersisted: a frame
+    * still holding it keeps working, since the driver copy stays until
+    * the context cleaner drops it. */
+  private val sets = new java.util.LinkedHashMap[(SparkContext, Seq[Id]),
+      DeletionVectors.InMemory](8, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[(SparkContext,
+        Seq[Id]), DeletionVectors.InMemory]): Boolean = {
+      val evict = size() > 4
+      if (evict && !e.getKey._1.isStopped) e.getValue.release()
+      evict
     }
+  }
 
-  /** Does a local frame of `n` pairs stay within the broadcast bound? */
+  /** The broadcast ids of the held in-memory sets of `sc`, least
+    * recently used first (those already broadcast). */
+  private[graft] def heldBroadcasts(sc: SparkContext): Seq[Long] =
+    sets.synchronized(sets.asScala.toSeq.collect {
+      case ((c, _), v) if c eq sc => v.broadcastId
+    }.flatten)
+
+  /** Does a set of `n` pairs stay within the broadcast bound? */
   private def fitsLocal(spark: SparkSession, n: Long): Boolean = {
     val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
     bound >= 0 && n * PairBytes <= bound
   }
 
   /** The distinct `(file, pos)` pairs of the covered sidecars `covered`
-    * of `lakeDir` (resolved through the clone chain): a local frame
-    * from the memo while it fits the broadcast bound, else the
-    * distributed read. A covered name that resolves nowhere falls
-    * through to Spark's read, which fails on it loudly. */
+    * of `lakeDir` (resolved through the clone chain): in memory, from
+    * the memo, while they fit the broadcast bound; else the distributed
+    * sidecar read and `distinct`. A covered name that resolves nowhere
+    * falls through to Spark's read, which fails on it loudly. */
   def vectorsFor(spark: SparkSession, lakeDir: String,
-      covered: Seq[String]): DataFrame = {
+      covered: Seq[String]): DeletionVectors.Vectors = {
     val fs = new Path(lakeDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     resolve(fs, lakeDir, covered, DeletionVectors.dvDir, pairs) match {
-      case None => spark.read.schema(DvSchema)
+      case None => DeletionVectors.Distributed(spark.read.schema(DvSchema)
         .parquet(DeletionVectors.resolveDvPaths(fs, lakeDir, covered): _*)
-        .distinct()
+        .distinct())
       case Some((sts, hits)) =>
         val misses = sts.filterNot(st => hits.contains(idOf(st)))
         def count(p: Map[String, Array[Long]]): Long =
@@ -283,14 +315,16 @@ private[graft] object FileMemo {
           .map(count).sum + footers(spark, misses)
           .map(_.getParquetMetadata.getBlocks.asScala
             .map(_.getRowCount).sum).sum
-        if (!fitsLocal(spark, bound)) scan(spark, sts, DvSchema).distinct()
+        if (!fitsLocal(spark, bound))
+          DeletionVectors.Distributed(scan(spark, sts, DvSchema).distinct())
         else {
-          val key = (spark, sts.map(idOf))
-          Option(frames.synchronized(frames.get(key))).getOrElse {
+          val key = (spark.sparkContext, sts.map(idOf))
+          Option(sets.synchronized(sets.get(key))).getOrElse {
             val all = hits ++ readPairs(spark, misses)
-            val df = local(spark, sts.map(st => all(idOf(st))))
-            frames.synchronized(frames.put(key, df))
-            df
+            val set = new DeletionVectors.InMemory(
+              union(sts.map(st => all(idOf(st)))), spark.sparkContext)
+            sets.synchronized(sets.put(key, set))
+            set
           }
         }
     }
@@ -314,35 +348,33 @@ private[graft] object FileMemo {
       got
     }
 
-  /** `(file, pos)` pairs grouped by file, positions sorted. */
+  /** `(file, pos)` pairs grouped by file, positions sorted and
+    * distinct. */
   private def grouped(
       it: Iterator[(String, Long)]): Map[String, Array[Long]] =
     it.toSeq.groupBy(_._1).map { case (f, ps) =>
-      f -> ps.iterator.map(_._2).toArray.sorted
+      f -> sortedDistinct(ps.iterator.map(_._2).toArray)
     }
 
-  /** The union of `parts` as a local frame, one row per distinct pair,
-    * built as internal rows (one shared string per file). */
-  private def local(spark: SparkSession,
-      parts: Seq[Map[String, Array[Long]]]): DataFrame = {
-    val rows = parts.flatMap(_.toSeq).groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap { case (f, ps) =>
-        val name = UTF8String.fromString(f)
-        val pos = ps match {
-          case Seq((_, one)) => one // sorted by [[grouped]]
-          case _ => ps.iterator.flatMap(_._2).toArray.sorted
-        }
-        pos.iterator.zipWithIndex.collect {
-          case (p, i) if i == 0 || pos(i - 1) != p =>
-            new GenericInternalRow(Array[Any](name, p)): InternalRow
-        }
-      }
-    ParquetSchemaSteps.localFrame(spark, DvSchema, rows)
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    for (i <- a.indices if i == 0 || a(i) != a(i - 1)) { a(n) = a(i); n += 1 }
+    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
   }
+
+  /** The union of `parts`, per file sorted and distinct; a file only
+    * one part names keeps that part's array. */
+  private def union(
+      parts: Seq[Map[String, Array[Long]]]): Map[String, Array[Long]] =
+    parts.flatMap(_.toSeq).groupBy(_._1).map {
+      case (f, Seq((_, one))) => f -> one
+      case (f, ps) => f -> sortedDistinct(ps.iterator.flatMap(_._2).toArray)
+    }
 
   /** The pairs of a small pinned `(file, pos)` frame of `n` rows, for a
     * writer to seed the memo with after publishing them as a sidecar;
-    * None when a local frame of `n` pairs would not fit. */
+    * None when `n` pairs would not fit the broadcast bound. */
   def pairsIfSmall(spark: SparkSession, df: DataFrame,
       n: Long): Option[Map[String, Array[Long]]] =
     if (!fitsLocal(spark, n)) None

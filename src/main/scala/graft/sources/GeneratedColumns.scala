@@ -65,7 +65,12 @@ object GeneratedColumns {
     * tab-carrying definition must not brick every later read). */
   def list(fs: org.apache.hadoop.fs.FileSystem,
       lakeDir: String): Seq[(String, String, String)] =
-    DefRecords.readLines(fs, lakeDir, Prefix).map { line =>
+    parse(DefRecords.readLines(fs, lakeDir, Prefix))
+
+  /** [[list]] from the record's raw lines. */
+  private[sources] def parse(
+      lines: Seq[String]): Seq[(String, String, String)] =
+    lines.map { line =>
       val i = line.indexOf('\t')
       val j = line.lastIndexOf('\t')
       require(i > 0 && j > i && j < line.length - 1,

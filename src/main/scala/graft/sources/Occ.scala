@@ -98,12 +98,18 @@ object Occ {
     * verbs treat a definition change as a CONFLICT (full re-prepare —
     * their staged rows may embed the old definitions via recompute/
     * fill), while [[append]] re-validates its unchanged staged bytes
-    * under the lock (caller-provided rows; only the gate re-runs). */
-  private def defsSnapshot(fs: org.apache.hadoop.fs.FileSystem,
-      lakeDir: String): Defs =
-    (Constraints.list(fs, lakeDir), GeneratedColumns.list(fs, lakeDir))
+    * under the lock (caller-provided rows; only the gate re-runs).
+    * Both records come from one listing of the log. */
+  private[graft] def defsSnapshot(fs: org.apache.hadoop.fs.FileSystem,
+      lakeDir: String): Defs = {
+    val lines = DefRecords.readLinesOf(fs, lakeDir,
+      Seq(Constraints.Prefix, GeneratedColumns.Prefix))
+    (Constraints.parse(lines(Constraints.Prefix)),
+      GeneratedColumns.parse(lines(GeneratedColumns.Prefix)))
+  }
 
-  private type Defs = (Seq[(String, String)], Seq[(String, String, String)])
+  private[graft] type Defs =
+    (Seq[(String, String)], Seq[(String, String, String)])
 
   /** Both staged-bytes gates ([[Constraints.validatePaths]],
     * [[GeneratedColumns.validatePaths]]) against the definitions
@@ -132,9 +138,9 @@ object Occ {
     }
 
   /** Stages `pairs` (a pinned `(file, pos)` frame of `n` > 0 rows) as
-    * one sidecar under `stage/dv`. Returns its name and, when a local
-    * frame of the pairs fits the broadcast bound, the pairs themselves
-    * for [[publishVectors]] to seed the read memo with. */
+    * one sidecar under `stage/dv`. Returns its name and, when the
+    * pairs fit the broadcast bound, the pairs themselves for
+    * [[publishVectors]] to seed the read memo with. */
   private def stageVectors(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, stage: String, pairs: DataFrame,
       n: Long): StagedVectors = {
@@ -288,10 +294,7 @@ object Occ {
           .select(DeletionVectors.fileNameCol.as("file"),
             col("_metadata.row_index").as("pos"))
         val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
-          match {
-          case None => hits
-          case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-        }
+          .fold(hits)(_.dropDead(hits, "file", "pos"))
         val (pairs, n) = Pins.pinCounted(fresh)
         if (n == 0) (0L, NoVectors)
         else {
@@ -403,14 +406,8 @@ object Occ {
           .withColumn(DeletionVectors.FileCol, DeletionVectors.fileNameCol)
           .withColumn(DeletionVectors.PosCol, col("_metadata.row_index"))
         val live = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
-          match {
-          case None => positioned
-          case Some(dv) => positioned.join(
-            dv.select(col("file").as(DeletionVectors.FileCol),
-              col("pos").as(DeletionVectors.PosCol)),
-            Seq(DeletionVectors.FileCol, DeletionVectors.PosCol),
-            "left_anti")
-        }
+          .fold(positioned)(_.dropDead(positioned,
+            DeletionVectors.FileCol, DeletionVectors.PosCol))
         val (matched, n) = Pins.pinCounted(live
           .filter(coalesce(expr(predicate), lit(false))))
         if (n == 0) (0L, NoVectors, Seq.empty[String])
@@ -684,11 +681,8 @@ object Occ {
       val prepared = unlessSwept(fs, lakeDir, filesSnap) {
         val base = FileMemo.readFiles(spark, lakeDir, committed,
           mergeSchema = true)
-        val input = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
-          match {
-          case None => base
-          case Some(dv) => DeletionVectors.applyVectors(base, Some(dv))
-        }
+        val input = DeletionVectors.applyVectors(base,
+          DeletionVectors.vectorsFor(spark, lakeDir, dvSnap))
         ZOrder.curveWrite(input, stage, zCols, bits, numFiles,
           mode = "append", curve = curve)
         stagedNames(fs, stage)
@@ -810,10 +804,7 @@ object Occ {
         // concurrent mutation between the two reads must not tear the
         // (files, vectors) pair this discovery ran against
         val fresh = DeletionVectors.vectorsFor(spark, lakeDir, dvSnap)
-          match {
-          case None => hits
-          case Some(dv) => hits.join(dv, Seq("file", "pos"), "left_anti")
-        }
+          .fold(hits)(_.dropDead(hits, "file", "pos"))
         val (pairs, matched) = Pins.pinCounted(fresh)
         val dv =
           if (matched == 0) NoVectors

@@ -50,12 +50,4 @@ private[graft] object Pins {
     val (pinned, m) = pinObserved(df, count(lit(1)))
     (pinned, m.getLong(0))
   }
-
-  /** `df.localCheckpoint()` + the distinct values of string column
-    * `c`, collected DURING the materialization job (for
-    * metadata-bounded columns — file names — only). */
-  def pinWithDistinct(df: DataFrame, c: String): (DataFrame, Seq[String]) = {
-    val (pinned, m) = pinObserved(df, collect_set(col(c)))
-    (pinned, m.getSeq[String](0))
-  }
 }

@@ -684,7 +684,7 @@ object ZOrder {
       else math.max(1L, (totalBytes + minBytes - 1) / minBytes).toInt
     // covered deletion vectors FOLD into the rewrite instead of
     // blocking it: the small-file read drops its dead rows (the
-    // readMor anti-join), vectors naming untouched files are
+    // readMor vector step), vectors naming untouched files are
     // rewritten into a fresh sidecar and re-covered by the publish
     // below — the view is unchanged at every crash point
     val dvOpt = DeletionVectors.vectors(spark, path)

@@ -1380,7 +1380,7 @@ object StatsIndex {
     * simply classify every file as boundary (correct, just slower
     * until the next rebuild). DV-AWARE: covered deletion vectors
     * subtract exactly (per-file dead counts for interior files, the
-    * readMor anti-join for boundary files — both metadata-scale), so
+    * readMor vector step for boundary files — both metadata-scale), so
     * a MoR-deleted lake can never return a phantom count;
     * q70_dv_meta_count hash-checks the composition. */
   def countPruned(spark: SparkSession, dataDir: String,
@@ -1408,7 +1408,7 @@ object StatsIndex {
     // an interior file's contribution drops by its covered-pair count
     // (every dead row is physically in the file, and interior ⇒ every
     // physical row matches the ranges, so the subtraction is exact),
-    // and the boundary scan anti-joins the vectors exactly as readMor
+    // and the boundary scan drops the dead rows exactly as readMor
     // does. Both corrections are metadata-scale: the sidecar holds one
     // 16-byte pair per deleted row. A lake with no covered vectors
     // (including every log-less lake) takes the original zero-I/O
@@ -1416,11 +1416,8 @@ object StatsIndex {
     // be exact — the same index-currency premise every caller already
     // holds (the index's file set IS the data it describes).
     val dvOpt = DeletionVectors.vectors(spark, dataDir)
-    val deadByFile: Map[String, Long] = dvOpt match {
-      case None => Map.empty
-      case Some(dv) => dv.groupBy(col("file")).count()
-        .as[(String, Long)].collect().toMap
-    }
+    val deadByFile: Map[String, Long] =
+      dvOpt.fold(Map.empty[String, Long])(_.deadCounts)
     val interiorRows = interiorCounts.iterator.map { case (path, rc) =>
       rc - deadByFile.getOrElse(
         new org.apache.hadoop.fs.Path(path).getName, 0L)
@@ -1456,7 +1453,7 @@ object StatsIndex {
     * from metadata alone. DV-AWARE like [[countPruned]]: a
     * single-group file's dead rows provably held that same value, so
     * its contribution drops by the covered-pair count exactly; mixed
-    * files anti-join the vectors in the scan. Groups whose live
+    * files drop their dead rows in the scan. Groups whose live
     * count reaches zero are dropped — `GROUP BY` over zero rows has
     * no row. */
   def countByGroup(spark: SparkSession, dataDir: String,
@@ -1489,8 +1486,8 @@ object StatsIndex {
     // scan paths — the irreducible driver cost) plus the dtype census.
     // Files with NO index row for the group column (pre-evolution
     // files) left-join to null arms and classify boundary, as before.
-    val deadDf = dvOpt.map(_.groupBy(col("file").as("__base"))
-      .agg(count(lit(1)).as("__dead")))
+    val deadDf = dvOpt.map(_.deadCountFrame(spark)
+      .select(col("file").as("__base"), col("dead").as("__dead")))
     val allFiles = idx.select(col("file")).distinct()
     val joined0 = allFiles.join(gRows, Seq("file"), "left")
       .withColumn("__base", element_at(split(col("file"), "/"), -1))
@@ -1618,8 +1615,8 @@ object StatsIndex {
     val integral = Set("tinyint", "smallint", "int", "bigint")
     val gLongExact = gdt.exists(integral)
     val vLongExact = vdt.exists(integral)
-    val deadDf = dvOpt.map(_.groupBy(col("file").as("__base"))
-      .agg(count(lit(1)).as("__dead")))
+    val deadDf = dvOpt.map(_.deadCountFrame(spark)
+      .select(col("file").as("__base"), col("dead").as("__dead")))
     val allFiles = idx.select(col("file")).distinct()
     val joined0 = allFiles.join(gRows, Seq("file"), "left")
       .join(vRows, Seq("file"), "left")
@@ -2156,7 +2153,7 @@ object StatsIndex {
     * DV-AWARE (exact, like [[countPruned]]): a file carrying covered
     * deletion vectors becomes a gap file for every column — a dead
     * row may hold the recorded bound — and the gap scan reads only
-    * its LIVE rows (the readMor anti-join), so a MoR-deleted lake can
+    * its LIVE rows (the readMor vector step), so a MoR-deleted lake can
     * never serve a phantom extremum; the extra I/O is bounded by the
     * DV'd file set, zero when no vectors exist. `StatsIndexSpec`
     * asserts bit-equality with the full-scan aggregate, including the
@@ -2171,16 +2168,12 @@ object StatsIndex {
     // cannot know which value died — so a file carrying ANY covered
     // vector loses its metadata arm and becomes a gap file for EVERY
     // requested column, and the gap scan below reads only its LIVE
-    // rows (the same readMor anti-join). Clean files keep their
+    // rows (the same readMor vector step). Clean files keep their
     // zero-I/O arms, so the extra cost is bounded by the DV'd file
     // set — exactly the set a dead extremum can hide in. A lake with
     // no covered vectors pays nothing.
     val dvOpt = DeletionVectors.vectors(spark, dataDir)
-    val dvdNames: Set[String] = dvOpt match {
-      case None => Set.empty
-      case Some(dv) => dv.select(col("file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    }
+    val dvdNames: Set[String] = dvOpt.fold(Set.empty[String])(_.files.toSet)
     val idx = widened(readIndex(spark, indexDir))
     // metadata-scale collect: one row per (file, requested col) — the
     // same order as the file lists every prune path materializes
@@ -2297,7 +2290,7 @@ object StatsIndex {
         // file carries (old files predating it — exactly why they
         // gapped) is backfilled as a typed NULL from the recorded
         // dtype instead of failing the conservative fallback
-        // live rows only: the readMor anti-join drops DV-dead rows
+        // live rows only: the readMor vector step drops DV-dead rows
         // from DV'd gap files (a no-op frame-identity when dvOpt is
         // None; pairs naming non-gap files simply never match)
         val scan0 = DeletionVectors.applyVectors(

@@ -34,7 +34,7 @@ import graft.operators.SimilaritySearch
   *  - [[query]] / [[queryPq]]: probe the stored buckets. The scan
   *    touches only the probed buckets' partitions (the assignment is
   *    written `partitionBy(bucket)`, so probe pruning is directory
-  *    pruning) and drops MoR-deleted rows by anti-joining the lake's
+  *    pruning) and drops MoR-deleted rows against the lake's
   *    CURRENT deletion vectors — a delete is visible to ANN queries
   *    the moment it commits, with NO index refresh at all.
   *
@@ -192,7 +192,7 @@ object VectorIndex {
   }
 
   /** Rows of exactly `files`, with (file, pos) attribution for the
-    * query-time deletion-vector anti-join. */
+    * query-time deletion-vector step. */
   private def rowsOf(spark: SparkSession, lakeDir: String,
       files: Seq[String], p: Params): DataFrame = {
     val fs = fsOf(spark, lakeDir)
@@ -211,11 +211,8 @@ object VectorIndex {
       df: DataFrame): DataFrame = {
     val fs = fsOf(spark, lakeDir)
     val dv = CommitLog.committedView(fs, lakeDir)._2
-    DeletionVectors.vectorsFor(spark, lakeDir, dv) match {
-      case None => df
-      case Some(v) => df.join(broadcast(v), Seq("file", "pos"),
-        "left_anti")
-    }
+    DeletionVectors.vectorsFor(spark, lakeDir, dv)
+      .fold(df)(_.hinted.dropDead(df, "file", "pos"))
   }
 
   /** A generation's whole meta record, ONE text-file read (driver FS

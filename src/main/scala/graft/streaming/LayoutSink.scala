@@ -123,8 +123,7 @@ object LayoutSink {
     // the gates and the commit section validated only the committed
     // rows (this stage is invisible to it), so the commit section
     // re-runs the gates when the pin no longer matches.
-    def defsPin() = (graft.sources.Constraints.list(fs, lakeDir),
-      graft.sources.GeneratedColumns.list(fs, lakeDir))
+    def defsPin() = graft.sources.Occ.defsSnapshot(fs, lakeDir)
     val pinnedDefs = defsPin()
     // column mapping first (a stream producing logical names keeps
     // landing the committed physical schema across a rename; the

@@ -864,12 +864,19 @@ class DeletionVectorsSpec extends SparkSpec {
 
   test("above the broadcast bound the read keeps the distributed " +
     "vector frame and returns the same rows") {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
     val lake = mkLake()
     DeletionVectors.deleteMor(spark, lake, "k % 10 = 3")
-    def local(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.analyzed.collectLeaves()
-        .exists(_.isInstanceOf[LocalRelation])
+    // below the bound the vectors are a row filter: no join at all;
+    // above it, the anti-join against the distributed sidecar frame
+    def joins(df: org.apache.spark.sql.DataFrame): Seq[Join] =
+      df.queryExecution.analyzed.collect { case j: Join => j }
+    def local(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val js = joins(df)
+      assert(js.isEmpty || js.exists(_.joinType == LeftAnti))
+      js.isEmpty
+    }
     val want = morView(lake)
     assert(want.size == 270)
     assert(local(DeletionVectors.readMor(spark, lake)))

@@ -10,7 +10,8 @@ import org.apache.spark.storage.GraftBlocks
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
-import graft.sources.{DeletionVectors, Occ, StatsIndex}
+import graft.sources.{ColumnMapping, CommitLog, DeletionVectors, Occ,
+  StatsIndex}
 import graft.streaming.LayoutSink
 
 /** Spark jobs and log listings per verb on small lakes: an indexed
@@ -131,6 +132,86 @@ class MergeBudgetSpec extends SparkSpec {
     batch(0L)
     val listings = LogListFs.counting(batch(1L))
     assert(listings <= 10, s"$listings commit-log listings")
+    assert(LayoutSink.readCommitted(spark, lake).count() == 120L)
+  }
+
+  test("on a lake with deletion vectors an indexed upsert runs at most " +
+    "8 Spark jobs, an OCC delete at most 3 and a compaction at most 3") {
+    val dir = tmp("graft_budget_dv_")
+    val (lake, idx) = (s"$dir/lake", s"$dir/idx")
+    (0 until 6).foreach(f =>
+      Occ.append(spark, lake, bars(0 until 4, f * 50 until (f + 1) * 50)))
+    StatsIndex.build(spark, lake, Seq("minute"), idx)
+    val keys = Seq("sym", "minute")
+    assert(Occ.mergeMor(spark, lake, bars(Seq(1), 10 until 30, 1.0), keys,
+      indexDir = Some(idx)) == ((20L, 20L)))
+    var merged = (0L, 0L)
+    val upsert = jobsOf {
+      merged = Occ.mergeMor(spark, lake, bars(Seq(0, 2), 240 until 260, 2.0),
+        keys, indexDir = Some(idx))
+    }
+    assert(merged == ((40L, 40L)))
+    var deleted = 0L
+    val delete = jobsOf {
+      deleted = Occ.deleteMor(spark, lake, "sym = 's3' and minute < 25")
+    }
+    assert(deleted == 25L)
+    var compacted = (0, 0)
+    val compact = jobsOf {
+      compacted = DeletionVectors.compact(spark, lake)
+    }
+    assert(compacted._1 > 0)
+    // upsert: the pin with its count, the key collect, the key
+    // broadcast, the pair pin, the sidecar write and its memo seed, the
+    // one-file delta write, the index publish; delete: the pair pin
+    // with its count, the sidecar write, its memo seed
+    assert(upsert <= 8 && delete <= 3 && compact <= 3,
+      s"upsert ran $upsert Spark jobs, delete $delete, compact $compact")
+    assert(DeletionVectors.readMor(spark, lake).count() == 1200L - 25L)
+  }
+
+  test("a purge finds the files carrying a dropped column with no " +
+    "Spark job, on a lake mixing old and evolved schemas") {
+    val lake = tmp("graft_budget_purge_") + "/lake"
+    val f = new Path(lake).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Occ.append(spark, lake,
+      (0 until 100).map(k => (k, 2L * k, s"x$k")).toDF("k", "v", "extra"))
+    // an evolved delta that still carries the column to drop
+    Occ.mergeMor(spark, lake, (95 until 110)
+      .map(k => (k, 3L * k, s"y$k", k * 0.5)).toDF("k", "v", "extra", "w"),
+      Seq("k"), evolveSchema = true)
+    ColumnMapping.drop(spark, lake, "extra")
+    // born clean: the old schema without the column, and an evolved one
+    Occ.append(spark, lake,
+      (200 until 220).map(k => (k, 5L * k)).toDF("k", "v"))
+    Occ.append(spark, lake, (300 until 305)
+      .map(k => (k, 7L * k, k * 0.25)).toDF("k", "v", "w"))
+    val names = CommitLog.committedNames(f, lake).toSeq.sorted
+    val want = names.filter(n =>
+      spark.read.parquet(s"$lake/$n").columns.contains("extra"))
+    assert(want.nonEmpty && want.size < names.size)
+    var got = Seq.empty[String]
+    val jobs = jobsOf {
+      got = ColumnMapping.filesCarrying(spark, lake, names, Set("extra"))
+    }
+    assert(jobs == 0, s"discovery ran $jobs Spark jobs")
+    assert(got == want)
+    val (rewritten, carried) = ColumnMapping.purge(spark, lake)
+    assert((rewritten, carried) == ((want.size, names.size - want.size)))
+    assert(DeletionVectors.readMor(spark, lake).count() == 100L + 10 + 20 + 5)
+  }
+
+  test("a layout sink batch reads both definition records from one " +
+    "listing: at most eight commit-log listings per batch") {
+    val dir = "graftloglist://" + tmp("graft_budget_defs_")
+    val (lake, idx) = (s"$dir/lake", s"$dir/idx")
+    def batch(id: Long) = LayoutSink.processBatch(
+      bars(0 until 3, (id * 20).toInt until ((id + 1) * 20).toInt), id,
+      lake, idx, Seq("minute"), bits = 10, filesPerBatch = 2,
+      curve = "morton")
+    batch(0L)
+    val listings = LogListFs.counting(batch(1L))
+    assert(listings <= 8, s"$listings commit-log listings")
     assert(LayoutSink.readCommitted(spark, lake).count() == 120L)
   }
 

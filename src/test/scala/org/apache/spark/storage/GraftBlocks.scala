@@ -11,4 +11,11 @@ object GraftBlocks {
     sc.env.blockManager.master
       .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .collect { case RDDBlockId(id, _) => id }.toSet
+
+  /** The ids of the broadcasts with at least one block (the value or a
+    * piece of it) stored anywhere. */
+  def broadcastIds(sc: SparkContext): Set[Long] =
+    sc.env.blockManager.master
+      .getMatchingBlockIds(_.isBroadcast, askStorageEndpoints = true)
+      .collect { case BroadcastBlockId(id, _) => id }.toSet
 }
